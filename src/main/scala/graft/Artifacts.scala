@@ -2,6 +2,9 @@ package graft
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import scala.util.control.NonFatal
 
 /** Session-scoped lake-artifact plumbing shared by the materialized
   * index builders ([[operators.TextAnalysis.materializedPostingsTable]],
@@ -14,7 +17,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   *    (mode=overwrite) or serve each other's rows;
   *  - [[tempDir]] registers every artifact directory on ONE shared
   *    exit-time cleanup list (a single JVM shutdown hook drains it,
-  *    each deletion isolated in its own try/catch), so a long-lived
+  *    each deletion an isolated best-effort step), so a long-lived
   *    test/bench session neither leaks parquet trees into the system
   *    temp dir nor accumulates one hook thread per artifact;
   *  - [[KeyedMemo]] is the build-once-per-key device the index
@@ -24,19 +27,50 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   *    lock nesting between builders cannot deadlock.
   *
   * The DURABLE layer ([[durable]], [[pathFingerprint]],
-  * [[isCommitted]], [[registerBucketedTable]]) runs entirely on the
-  * Hadoop [[FileSystem]] API, so an artifact home can be a local
-  * path, an `hdfs://` dir or an object-store URI — the same surface
-  * the payloads are written through. Commit protocol is
-  * capability-aware ([[commitMode]]): staging + one atomic directory
-  * rename where the FS supports it (local, HDFS), marker-last
-  * in-place commit where it doesn't (S3 and friends have no atomic
-  * directory rename — renaming there is a copy loop that can be
-  * observed half-done, so the marker alone is the transaction
+  * [[isCommitted]], [[writeBucketed]] / [[registerBucketedTable]])
+  * runs entirely on the Hadoop [[FileSystem]] API, so an artifact
+  * home can be a local path, an `hdfs://` dir or an object-store URI
+  * — the same surface the payloads are written through. Commit
+  * protocol is capability-aware ([[commitMode]]): staging + one
+  * atomic directory rename where the FS supports it (local, HDFS),
+  * marker-last in-place commit where it doesn't (S3 and friends have
+  * no atomic directory rename — renaming there is a copy loop that
+  * can be observed half-done, so the marker alone is the transaction
   * boundary and a best-effort build lock keeps concurrent
   * first-builders from writing over each other).
+  *
+  * The DELTA LIFECYCLE — append an increment, serve base ∪ deltas,
+  * compact — is defined here once ([[appendDelta]], [[withDeltas]],
+  * [[compactionSource]]); each artifact family keeps only its layout.
+  * The contract:
+  *  - an append needs a COMMITTED base: the base publish treats any
+  *    marker-less tree at its target as crashed-build debris, so a
+  *    delta landed under an unbuilt home would be destroyed with it;
+  *  - a fold never changes params: compaction copies base and delta
+  *    rows verbatim, so the params it stamps must be the ones the
+  *    source was built with — stamping the caller's arguments
+  *    unchecked would mislabel the output whenever they disagree;
+  *  - serving unions the base, then every COMMITTED delta in name
+  *    order, left-folded with `unionByName`; uncommitted (in-flight
+  *    or crashed) deltas are invisible.
   */
 object Artifacts {
+
+  /** A best-effort step (cleanup, probe, retry): a non-fatal failure
+    * is printed to stderr and replaced by `fallback`; an interrupt or
+    * a fatal error propagates. */
+  private def bestEffort[A](what: String, fallback: => A)(body: => A): A =
+    try body
+    catch { case NonFatal(e) =>
+      System.err.println(s"[artifacts] $what failed: $e")
+      fallback
+    }
+
+  private def quietRename(fs: FileSystem, from: Path, to: Path): Boolean =
+    bestEffort(s"rename $from -> $to", false)(fs.rename(from, to))
+
+  private def quietDelete(fs: FileSystem, p: Path): Unit =
+    bestEffort(s"delete $p", ()) { fs.delete(p, true); () }
 
   /** First 16 hex chars of md5(key) — 64 collision-resistant bits,
     * valid in a catalog identifier. */
@@ -55,7 +89,7 @@ object Artifacts {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       var a = cleanupActions.poll()
       while (a != null) {
-        try a() catch { case _: Throwable => () }
+        bestEffort("exit-time cleanup", ())(a())
         a = cleanupActions.poll()
       }
     }))
@@ -79,7 +113,7 @@ object Artifacts {
         val s = Files.list(p)
         try s.forEach(deleteTree(_)) finally s.close()
       }
-      try Files.deleteIfExists(p) catch { case _: Throwable => () }
+      bestEffort(s"delete $p", ()) { Files.deleteIfExists(p); () }
     }
   }
 
@@ -92,7 +126,7 @@ object Artifacts {
     * carries the deployment's fs.* settings — credentials, endpoints);
     * vanilla defaults otherwise (local file:// still resolves). */
   private def hadoopConf: Configuration =
-    org.apache.spark.sql.SparkSession.getActiveSession
+    SparkSession.getActiveSession
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new Configuration())
 
@@ -176,10 +210,7 @@ object Artifacts {
   }
 
   /** The params sidecar of a COMMITTED artifact — what the artifact
-    * says it was built with. Compactors consult this before folding:
-    * copying rows verbatim while stamping caller-supplied params
-    * would mislabel the output whenever the caller's arguments
-    * disagree with the source build. */
+    * says it was built with ([[compactionSource]] checks it). */
   def committedParams(dir: String): String = {
     val (fs, p) = fsPath(dir)
     require(fs.exists(new Path(p, CommitMarker)),
@@ -412,19 +443,33 @@ object Artifacts {
     (checked, manifest.length)
   }
 
-  private def publishByRename(fs: FileSystem, target: Path,
-      canon: String, params: String, build: String => Unit,
-      checkParams: () => Unit): Unit = {
+  /** The staging step both publish protocols share: a private
+    * `.graft_build_<nonce>` dir NEXT TO the target (same filesystem,
+    * registered for exit-time deletion as crash leftovers), the
+    * build, its manifest and its params — everything but the commit.
+    * A build that throws takes its staging tree with it. */
+  private def stageBuild(fs: FileSystem, target: Path, params: String,
+      build: String => Unit): Path = {
     val parent = target.getParent
     fs.mkdirs(parent)
     val staging = new Path(parent, s".graft_build_${nonce()}")
     fs.mkdirs(staging)
     cleanupHook
-    // crash leftovers, not the artifact
     cleanupActions.add(() => { fs.delete(staging, true); () })
-    build(pathString(staging))
-    writeManifest(fs, staging)
-    writeSmall(fs, new Path(staging, ParamsFile), params)
+    var staged = false
+    try {
+      build(pathString(staging))
+      writeManifest(fs, staging)
+      writeSmall(fs, new Path(staging, ParamsFile), params)
+      staged = true
+    } finally if (!staged) quietDelete(fs, staging)
+    staging
+  }
+
+  private def publishByRename(fs: FileSystem, target: Path,
+      canon: String, params: String, build: String => Unit,
+      checkParams: () => Unit): Unit = {
+    val staging = stageBuild(fs, target, params, build)
     writeSmall(fs, new Path(staging, CommitMarker), "")
     // crashed-build debris at the target (a tree with NO marker — a
     // committed tree only ever appears atomically under this
@@ -437,24 +482,13 @@ object Artifacts {
     // the slot meanwhile — both trees are complete committed builds).
     if (fs.exists(target) &&
         !fs.exists(new Path(target, CommitMarker))) {
-      val trash = new Path(parent, s".graft_trash_${nonce()}")
-      val grabbed =
-        try fs.rename(target, trash)
-        catch { case _: Throwable => false }
-      if (grabbed) {
-        if (fs.exists(new Path(trash, CommitMarker))) {
-          val putBack =
-            try fs.rename(trash, target)
-            catch { case _: Throwable => false }
-          if (!putBack) { try fs.delete(trash, true) catch { case _: Throwable => () } }
-        } else {
-          try fs.delete(trash, true) catch { case _: Throwable => () }
-        }
-      }
+      val trash = new Path(target.getParent, s".graft_trash_${nonce()}")
+      if (quietRename(fs, target, trash) &&
+          (!fs.exists(new Path(trash, CommitMarker)) ||
+            !quietRename(fs, trash, target)))
+        quietDelete(fs, trash)
     }
-    var published =
-      try fs.rename(staging, target)
-      catch { case _: Throwable => false }
+    var published = quietRename(fs, staging, target)
     // some filesystems (HDFS among them) apply POSIX-mv semantics and
     // move the source INTO an existing destination directory instead
     // of failing — that "success" would nest our staging tree inside
@@ -463,7 +497,7 @@ object Artifacts {
     if (published) {
       val movedInto = new Path(target, staging.getName)
       if (fs.exists(movedInto)) {
-        try fs.delete(movedInto, true) catch { case _: Throwable => () }
+        quietDelete(fs, movedInto)
         published = false
       }
     }
@@ -471,7 +505,7 @@ object Artifacts {
     else {
       // a racing builder published first: serve ITS tree (must be
       // committed + params-compatible), discard ours
-      try fs.delete(staging, true) catch { case _: Throwable => () }
+      quietDelete(fs, staging)
       require(fs.exists(new Path(target, CommitMarker)),
         s"lost the publish race at $canon but the winner's " +
           "artifact is not committed")
@@ -514,16 +548,14 @@ object Artifacts {
         // the rename protocol where the store's rename is known
         // consistent.
         def ownsLock(): Boolean =
-          try readSmall(fs, lock) == token
-          catch { case _: Throwable => false }
-        val acquired =
-          try {
-            val out = fs.create(lock, false)
-            try out.write(token.getBytes(
-              java.nio.charset.StandardCharsets.UTF_8))
-            finally out.close()
-            ownsLock()
-          } catch { case _: Throwable => false }
+          bestEffort(s"read of $lock", false)(readSmall(fs, lock) == token)
+        val acquired = bestEffort(s"exclusive create of $lock", false) {
+          val out = fs.create(lock, false)
+          try out.write(token.getBytes(
+            java.nio.charset.StandardCharsets.UTF_8))
+          finally out.close()
+          ownsLock()
+        }
         if (acquired) {
           var committedHere = false
           try {
@@ -535,16 +567,8 @@ object Artifacts {
               // multi-minute build; only the short move-in below ever
               // writes at the target, and it runs under a fresh
               // ownership re-check.
-              val parent = target.getParent
-              fs.mkdirs(parent)
-              val staging = new Path(parent, s".graft_build_${nonce()}")
-              fs.mkdirs(staging)
-              cleanupHook
-              cleanupActions.add(() => { fs.delete(staging, true); () })
+              val staging = stageBuild(fs, target, params, build)
               try {
-                build(pathString(staging))
-                writeManifest(fs, staging)
-                writeSmall(fs, new Path(staging, ParamsFile), params)
                 if (ownsLock() && !fs.exists(marker)) {
                   // clear previous debris payloads — never the lock,
                   // and NEVER the commit marker: on a store without
@@ -591,18 +615,16 @@ object Artifacts {
                     }
                   }
                 }
-              } finally {
-                try fs.delete(staging, true)
-                catch { case _: Throwable => () }
-              }
+              } finally quietDelete(fs, staging)
             } else { checkParams(); committedHere = true }
           } finally {
             // release the lock when it is still OURS (normal commit,
             // or a thrown build) — but never delete another builder's
             // lock (the aborted-lost-token path)
             if (committedHere || ownsLock())
-              try fs.delete(lock, false)
-              catch { case _: Throwable => () }
+              bestEffort(s"release of $lock", ()) {
+                fs.delete(lock, false); ()
+              }
           }
           done = committedHere
         } else {
@@ -726,8 +748,25 @@ object Artifacts {
       digest(b64.encodeToString(head) + "|" + b64.encodeToString(tail))
         .take(8)
     }
-    try readOnce()
-    catch { case _: Throwable => readOnce() }
+    bestEffort(s"witness read of ${st.getPath} (retrying once)",
+      readOnce())(readOnce())
+  }
+
+  /** The write half of a durable BUCKETED artifact, the reload half
+    * being [[registerBucketedTable]]: bucketed layouts only write
+    * through `saveAsTable`, so `df` is saved bucketed and sorted by
+    * `bucketCol` under a THROWAWAY catalog name over `location`, which
+    * is dropped again (an external table: the files stay). The durable
+    * publish renames the staging tree, so only the post-publish
+    * registration may point the real name at the final path. */
+  def writeBucketed(df: DataFrame, name: String, location: String,
+      bucketCol: String, nBuckets: Int): Unit = {
+    val tmpName = s"${name}_b${System.nanoTime()}"
+    try df.write.bucketBy(nBuckets, bucketCol).sortBy(bucketCol)
+      .option("path", location).mode("overwrite").saveAsTable(tmpName)
+    finally bestEffort(s"drop of throwaway table $tmpName", ()) {
+      df.sparkSession.sql(s"DROP TABLE IF EXISTS $tmpName"); ()
+    }
   }
 
   /** Register catalog table `name` over a COMMITTED bucketed layout at
@@ -743,7 +782,7 @@ object Artifacts {
     * persistent metastore (or any name collision) a stale entry
     * pointing at an old location would otherwise serve the wrong
     * layout silently (the r14 ADVICE finding). */
-  def registerBucketedTable(s: org.apache.spark.sql.SparkSession,
+  def registerBucketedTable(s: SparkSession,
       name: String, location: String, schemaDdl: String,
       bucketCol: String, nBuckets: Int,
       sortCol: Option[String] = None): Unit =
@@ -800,9 +839,8 @@ object Artifacts {
     s"${canonical(artifactDir)}/deltas/$name"
   }
 
-  /** COMMITTED delta dirs under an artifact, name-sorted — the set a
-    * serving job unions with the base. Uncommitted (in-flight or
-    * crashed) deltas are invisible by construction. */
+  /** COMMITTED delta dirs under an artifact, name-sorted — the set
+    * [[withDeltas]] unions with the base. */
   def committedDeltas(artifactDir: String): Seq[String] = {
     val (fs, root) = fsPath(artifactDir)
     val deltas = new Path(root, "deltas")
@@ -811,6 +849,52 @@ object Artifacts {
       .filter(st => st.isDirectory &&
         fs.exists(new Path(st.getPath, CommitMarker)))
       .map(st => pathString(st.getPath)).sorted
+  }
+
+  /** APPEND one increment to the committed artifact at `dir` as the
+    * delta `deltas/<name>`, published by [[durable]] under `stamp`
+    * (re-appending a name serves the committed delta). `write` is
+    * evaluated once, after the committed-base guard, so a family may
+    * read base sidecars while forming it. */
+  def appendDelta(owner: Any, dir: String, name: String, stamp: String)
+      (write: => String => Unit): String = {
+    require(isCommitted(dir),
+      s"cannot append delta '$name': ${canonical(dir)} is not a " +
+        "committed artifact — build the base first")
+    durable(owner, deltaDir(dir, name), stamp)(write)
+  }
+
+  /** The serving union: `base` (default: the artifact's own `sub`
+    * table) followed by the `sub` table of every committed delta, in
+    * name order, left-folded with `unionByName`. */
+  def withDeltas(s: SparkSession, dir: String, sub: String): DataFrame =
+    withDeltas(s, dir, sub, s.read.parquet(s"$dir/$sub"))
+
+  def withDeltas(s: SparkSession, dir: String, sub: String,
+      base: DataFrame): DataFrame =
+    (base +: deltaTables(s, dir, sub)).reduce(_ unionByName _)
+
+  /** The committed deltas' `sub` tables alone, unioned as in
+    * [[withDeltas]]; None when the artifact has no committed delta. */
+  def deltasOnly(s: SparkSession, dir: String,
+      sub: String): Option[DataFrame] =
+    deltaTables(s, dir, sub).reduceOption(_ unionByName _)
+
+  private def deltaTables(s: SparkSession, dir: String,
+      sub: String): Seq[DataFrame] =
+    committedDeltas(dir).map(dd => s.read.parquet(s"$dd/$sub"))
+
+  /** The compaction-source check: `dir` must be a committed artifact
+    * whose params equal `stamp`, the params the fold will carry.
+    * Returns the canonical source dir. */
+  def compactionSource(dir: String, stamp: String): String = {
+    val canon = canonical(dir)
+    val src = committedParams(canon)
+    require(src == stamp,
+      s"compaction with params '$stamp' but the artifact at $canon " +
+        s"was built with '$src' — a fold never changes params; " +
+        "rebuild under the new knobs instead")
+    canon
   }
 
   // ------------------------------------------------------------------
@@ -850,9 +934,8 @@ object Artifacts {
     * Metadata-only: one listing + one contentSummary per artifact
     * (scales with artifact COUNT, never data volume). Registered as
     * the rows-only q346. */
-  def inventory(s: org.apache.spark.sql.SparkSession, root: String,
-      liveDatasets: Seq[(String, String)])
-      : org.apache.spark.sql.DataFrame = {
+  def inventory(s: SparkSession, root: String,
+      liveDatasets: Seq[(String, String)]): DataFrame = {
     val live = liveSuffixes(liveDatasets)
     val (fs, _) = fsPath(root)
     val rows = listArtifactDirs(root).flatMap { st =>
@@ -860,20 +943,20 @@ object Artifacts {
       // between the listing and its stat (a concurrent gcArtifacts —
       // the companion feature — or another job's cleanup) drops ITS
       // row instead of aborting the whole inventory
-      try {
+      bestEffort(s"inventory of ${st.getPath}", Option.empty[(String,
+          String, String, Boolean, Long, Long, Int, Boolean)]) {
         val name = st.getPath.getName
         val cut = name.lastIndexOf('_')
         val family = if (cut > 0) name.substring(0, cut) else name
         val suffix = if (cut > 0) name.substring(cut + 1) else ""
         val committed = fs.exists(new Path(st.getPath, CommitMarker))
-        val params =
-          try readSmall(fs, new Path(st.getPath, ParamsFile))
-          catch { case _: Throwable => "" }
+        val params = bestEffort(s"params read of ${st.getPath}", "")(
+          readSmall(fs, new Path(st.getPath, ParamsFile)))
         val summary = fs.getContentSummary(st.getPath)
         Some((name, family, params, committed, summary.getFileCount,
           summary.getLength,
           committedDeltas(pathString(st.getPath)).size, live(suffix)))
-      } catch { case _: Throwable => None }
+      }
     }
     import s.implicits._
     rows.toDF("artifact", "family", "params", "committed", "n_files",
@@ -918,14 +1001,8 @@ object Artifacts {
     val live = liveSuffixes(liveDatasets)
     val (fs, _) = fsPath(root)
     val now = System.currentTimeMillis()
-    def locked(p: Path): Boolean =
-      try fs.exists(new Path(p, BuildLock))
-      catch { case _: Throwable => true }
     def collectable(st: FileStatus): Boolean =
-      !locked(st.getPath) && now - lastActivity(fs, st) >= minAgeMs
-    def delete(p: Path): Option[String] =
-      try { fs.delete(p, true); Some(pathString(p)) }
-      catch { case _: Throwable => None }
+      !locked(fs, st.getPath) && now - lastActivity(fs, st) >= minAgeMs
     listArtifactDirs(root).flatMap { st =>
       val name = st.getPath.getName
       val suffix = name.substring(name.lastIndexOf('_') + 1)
@@ -938,9 +1015,21 @@ object Artifacts {
       if (committed && (!conventionNamed || live(suffix)))
         sweepDeltaDebris(fs, st.getPath, minAgeMs) // refused home
       else if (!collectable(st)) Nil
-      else delete(st.getPath).toSeq
+      else collect(fs, st.getPath).toSeq
     }.sorted
   }
+
+  /** A lock stat that fails counts as LOCKED — GC never collects a
+    * tree it cannot prove idle. */
+  private def locked(fs: FileSystem, p: Path): Boolean =
+    bestEffort(s"lock stat of $p", true)(fs.exists(new Path(p, BuildLock)))
+
+  /** Delete one GC victim; the deleted path, or None if it failed. */
+  private def collect(fs: FileSystem, p: Path): Option[String] =
+    bestEffort(s"delete $p", Option.empty[String]) {
+      fs.delete(p, true)
+      Some(pathString(p))
+    }
 
   /** The nested sweep under a REFUSED committed home: crashed
     * appenders run [[durable]] inside `<home>/deltas/`, leaving
@@ -952,25 +1041,18 @@ object Artifacts {
       minAgeMs: Long): Seq[String] = {
     val deltas = new Path(home, "deltas")
     val now = System.currentTimeMillis()
-    val entries =
-      try { if (fs.exists(deltas)) fs.listStatus(deltas).toSeq
-            else Seq.empty }
-      catch { case _: Throwable => Seq.empty }
+    val entries = bestEffort(s"listing of $deltas", Seq.empty[FileStatus]) {
+      if (fs.exists(deltas)) fs.listStatus(deltas).toSeq else Seq.empty
+    }
     entries.flatMap { st =>
       val n = st.getPath.getName
       val committed = st.isDirectory &&
         fs.exists(new Path(st.getPath, CommitMarker))
       val dotDebris = n.startsWith(".")
-      val locked =
-        try fs.exists(new Path(st.getPath, BuildLock))
-        catch { case _: Throwable => true }
       if (committed && !dotDebris) None // serving delta: untouchable
-      else if (locked) None // appender may be live
+      else if (locked(fs, st.getPath)) None // appender may be live
       else if (now - lastActivity(fs, st) < minAgeMs) None // too young
-      else {
-        try { fs.delete(st.getPath, true); Some(pathString(st.getPath)) }
-        catch { case _: Throwable => None }
-      }
+      else collect(fs, st.getPath)
     }
   }
 
@@ -979,18 +1061,18 @@ object Artifacts {
     * long rename-mode build writing nested payload subdirs can leave
     * the staging dir's own mtime at build start, and an age-based
     * sweep would collect the tree from under the live builder. */
-  private def lastActivity(fs: FileSystem, st: FileStatus): Long = {
-    var latest = st.getModificationTime
-    try {
+  private def lastActivity(fs: FileSystem, st: FileStatus): Long =
+    bestEffort(s"activity scan of ${st.getPath}",
+        System.currentTimeMillis()) {
+      var latest = st.getModificationTime
       val it = fs.listFiles(st.getPath, true)
       while (it.hasNext) {
         val f = it.next()
         if (f.getModificationTime > latest)
           latest = f.getModificationTime
       }
-    } catch { case _: Throwable => latest = System.currentTimeMillis() }
-    latest
-  }
+      latest
+    }
 
   /** Build-once-per-key memo: `computeIfAbsent` installs a lazy cell
     * (cheap — no build under the map's bin lock); the build itself

@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
 
   /** One timing-session setup shared by Bench and Profile — if the two
@@ -35,7 +36,10 @@ object Bench {
   private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit =
     try SparkEntry.queries.get("q01_pricing_summary")
       .foreach(_(spark, sfDir).write.format("noop").mode("overwrite").save())
-    catch { case _: Throwable => () }
+    catch { case NonFatal(e) =>
+      System.err.println(
+        s"[bench] warm-up q01_pricing_summary failed: ${e.getMessage}")
+    }
 
   /** PAIRED-BENCH serve mode (`--serve`): read query names from stdin
     * one per line, run each against SPARK_GRAFT_SF_DIR through the
@@ -74,7 +78,7 @@ object Bench {
               fn(spark, sfDir).write.format("noop").mode("overwrite")
                 .save()
               true
-            } catch { case e: Throwable =>
+            } catch { case NonFatal(e) =>
               System.err.println(
                 s"[bench] $name failed: ${e.getMessage}")
               false
@@ -100,7 +104,7 @@ object Bench {
       // noop sink forces full materialization of every column (a bare
       // count() would let Catalyst prune the projections away).
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
       }
       (System.nanoTime() - t0) / 1e9
@@ -151,7 +155,7 @@ object Bench {
       val json = s"""{"sf":"$sfJson","unit":"sec","best_of":2,""" +
         s""""total":${num(results.map(_._2).sum)},"queries":{$qs}}""" + "\n"
       try java.nio.file.Files.writeString(java.nio.file.Paths.get(p), json)
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] detail write failed: ${e.getMessage}")
       }
     }

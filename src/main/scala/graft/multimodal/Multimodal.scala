@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Artifacts.withDeltas
 import graft.Tables
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary`
@@ -519,7 +520,7 @@ object Multimodal {
   }
 
   /** APPEND a media increment's fingerprints to the durable artifact
-    * as a commit-marked delta ([[graft.Artifacts.deltaDir]]) — the
+    * as a commit-marked delta ([[graft.Artifacts.appendDelta]]) — the
     * q343/q344/q345 maintenance convention on the media family:
     * tonight's admitted images/clips are decoded ONCE at append time,
     * the base corpus is never re-decoded, and because the
@@ -528,44 +529,29 @@ object Multimodal {
     * q347 registers the appended image tier). Idempotent per delta
     * name. */
   def appendToMediaFingerprintArtifact(s: SparkSession,
-      newMedia: => DataFrame, dir: String, deltaName: String): String = {
-    // committed-base guard: a delta under an unbuilt home would be
-    // destroyed by the base publish (marker-less tree = debris)
-    require(graft.Artifacts.isCommitted(dir),
-      s"appendToMediaFingerprintArtifact needs a committed artifact " +
-        s"at $dir — build it first (mediaFingerprintArtifact)")
-    graft.Artifacts.durable(s,
-      graft.Artifacts.deltaDir(dir, deltaName), "mediafpdelta|v1") {
+      newMedia: => DataFrame, dir: String, deltaName: String): String =
+    graft.Artifacts.appendDelta(s, dir, deltaName, "mediafpdelta|v1") {
       d => writeFingerprints(newMedia, d)
     }
-  }
-
-  /** A fingerprint table unioned with all committed deltas — the
-    * serving side of the media append path. */
-  private def fpTable(s: SparkSession, dir: String,
-      sub: String): DataFrame =
-    graft.Artifacts.committedDeltas(dir).foldLeft(
-      s.read.parquet(s"$dir/$sub"))((acc, dd) =>
-      acc.unionByName(s.read.parquet(s"$dd/$sub")))
 
   /** [[imageDedupFromArtifact]] over (artifact + committed deltas). */
   def imageDedupFromAppendedArtifact(s: SparkSession, dir: String,
       maxHamming: Int = 3, maxBucket: Int = 10000): DataFrame =
     fingerprintDedup(
-      fpTable(s, dir, "image").select(col("media_id"), col("ahash")),
+      withDeltas(s, dir, "image").select(col("media_id"), col("ahash")),
       "ahash", maxHamming, maxBucket)
 
   /** [[audioDedupFromArtifact]] over (artifact + committed deltas). */
   def audioDedupFromAppendedArtifact(s: SparkSession, dir: String,
       maxHamming: Int = 3, maxBucket: Int = 10000): DataFrame =
-    fingerprintDedup(fpTable(s, dir, "audio"), "afp", maxHamming,
+    fingerprintDedup(withDeltas(s, dir, "audio"), "afp", maxHamming,
       maxBucket)
 
   /** [[videoDedupFromArtifact]] over (artifact + committed deltas). */
   def videoDedupFromAppendedArtifact(s: SparkSession, dir: String,
       maxHamming: Int = 3, minFrac: Double = 0.9,
       maxBucket: Int = 10000): DataFrame =
-    videoDedupFromFrames(fpTable(s, dir, "video_frames"), maxHamming,
+    videoDedupFromFrames(withDeltas(s, dir, "video_frames"), maxHamming,
       minFrac, maxBucket)
 
   /** [[imageDedup]] from the at-rest fingerprint artifact — zero
@@ -696,9 +682,9 @@ object Multimodal {
       dir: String, maxHamming: Int = 3, minFrac: Double = 0.9,
       maxBucket: Int = 10000): DataFrame =
     mediaAdmissionCore(incMedia,
-      fpTable(s, dir, "image").select(col("media_id"), col("ahash")),
-      fpTable(s, dir, "audio"),
-      fpTable(s, dir, "video_frames"), maxHamming, minFrac, maxBucket)
+      withDeltas(s, dir, "image").select(col("media_id"), col("ahash")),
+      withDeltas(s, dir, "audio"),
+      withDeltas(s, dir, "video_frames"), maxHamming, minFrac, maxBucket)
 
   /** The inline twin: base fingerprints recomputed from the media
     * frame (decode-twice) — the artifact ≡ inline pin's other half. */
@@ -787,8 +773,7 @@ object Multimodal {
     // prefixed "mediafp9": a different input than q331's whole-corpus
     // base must never share a durable dir
     "q347_image_dedup_appended" -> ((s, d) => {
-      val dir = graft.Artifacts.durableDirFor("mediafp9", d,
-        "documents.parquet")
+      val dir = mediaFp9DurableDir(d)
       mediaFingerprintArtifact(s, materializedMedia(s, d)
         .filter(!pmod(col("media_id"), lit(10L)).isin(3L, 4L)), dir)
       appendToMediaFingerprintArtifact(s, materializedMedia(s, d)

@@ -1339,7 +1339,8 @@ object Dedup {
   }
 
   /** APPEND a nightly increment's band keys to the durable near-dup
-    * base as a commit-marked delta ([[graft.Artifacts.deltaDir]]):
+    * base as a commit-marked delta ([[graft.Artifacts.appendDelta]];
+    * the lifecycle contract lives in the [[graft.Artifacts]] header):
     * only the increment is shingled and hashed — the base is
     * untouched — and because the portable band keys are PER-DOC
     * deterministic (no corpus-dependent state), (base buckets ∪
@@ -1353,15 +1354,9 @@ object Dedup {
   def appendToNearDupBase(s: SparkSession, newDocs: DataFrame,
       dir: String, deltaName: String, shingleSize: Int = 3,
       numPerms: Int = 16, threshold: Double = 0.5): String = {
-    // the base must be COMMITTED first: a delta landed under an
-    // unbuilt home would be destroyed by the base publish (which
-    // treats any marker-less target tree as crashed-build debris)
-    require(graft.Artifacts.isCommitted(dir),
-      s"appendToNearDupBase needs a committed base at $dir — build " +
-        "it first (portableNearDupBaseDurableFrom)")
     val (bands, _) = lshBandChoice(numPerms,
       math.max(0.05, threshold - 0.2), math.min(0.95, threshold + 0.2))
-    graft.Artifacts.durable(s, graft.Artifacts.deltaDir(dir, deltaName),
+    graft.Artifacts.appendDelta(s, dir, deltaName,
       s"pnddelta|s=$shingleSize|p=$numPerms|b=$bands") { d =>
       portableBandedBuckets(
         Par.fanOut(newDocs).select(col("doc_id"),
@@ -1388,25 +1383,12 @@ object Dedup {
   def compactNearDupBase(s: SparkSession, dir: String, outDir: String,
       shingleSize: Int = 3, numPerms: Int = 16,
       threshold: Double = 0.5): String = {
-    val canon = graft.Artifacts.canonical(dir)
-    require(graft.Artifacts.isCommitted(canon),
-      s"compactNearDupBase needs a committed base at $canon")
     val (bands, _) = lshBandChoice(numPerms,
       math.max(0.05, threshold - 0.2), math.min(0.95, threshold + 0.2))
     val stamp = s"pndbase|s=$shingleSize|p=$numPerms|b=$bands"
-    // the compactor copies base+delta rows VERBATIM, so the params it
-    // stamps on the fold MUST be the params the source was built with
-    // — stamping the caller's arguments unchecked would mislabel the
-    // output whenever they disagree (the r15 verdict's finding #1)
-    val src = graft.Artifacts.committedParams(canon)
-    require(src == stamp,
-      s"compactNearDupBase called with '$stamp' but the base at " +
-        s"$canon was built with '$src' — a fold never changes params; " +
-        "rebuild under the new knobs instead")
+    val canon = graft.Artifacts.compactionSource(dir, stamp)
     graft.Artifacts.durable(s, outDir, stamp) { d =>
-      graft.Artifacts.committedDeltas(canon)
-        .foldLeft(s.read.parquet(s"$canon/buckets"))((acc, dd) =>
-          acc.unionByName(s.read.parquet(s"$dd/buckets")))
+      graft.Artifacts.withDeltas(s, canon, "buckets")
         .write.mode("overwrite").parquet(s"$d/buckets")
     }
   }
@@ -1423,10 +1405,8 @@ object Dedup {
       threshold: Double = 0.5, maxBucket: Int = 10000): DataFrame = {
     val d = portableNearDupBaseDurableFrom(s, base, dir, shingleSize,
       numPerms, threshold)
-    val buckets = graft.Artifacts.committedDeltas(d)
-      .foldLeft(s.read.parquet(s"$d/buckets"))((acc, dd) =>
-        acc.unionByName(s.read.parquet(s"$dd/buckets")))
-    portableIncNearDupsCore(s, inc, baseText, buckets, shingleSize,
+    portableIncNearDupsCore(s, inc, baseText,
+      graft.Artifacts.withDeltas(s, d, "buckets"), shingleSize,
       numPerms, threshold, maxBucket)
   }
 
@@ -1651,19 +1631,8 @@ object Dedup {
     * so GC refuses it); retire it explicitly once consumers move. */
   def compactScreenBase(s: SparkSession, dir: String, outDir: String,
       fpp: Double = 0.01): (String, String) = {
-    val canon = graft.Artifacts.canonical(dir)
-    require(graft.Artifacts.isCommitted(canon),
-      s"compactScreenBase needs a committed screen base at $canon")
-    // fold params must equal the source's — the fp rows copy verbatim
-    val src = graft.Artifacts.committedParams(canon)
-    require(src == s"screen|fpp=$fpp",
-      s"compactScreenBase called with 'screen|fpp=$fpp' but the base " +
-        s"at $canon was built with '$src' — a fold never changes " +
-        "params; rebuild under the new knobs instead")
-    val union = graft.Artifacts.committedDeltas(canon)
-      .foldLeft(s.read.parquet(s"$canon/fps"))((acc, dd) =>
-        acc.unionByName(s.read.parquet(s"$dd/fps")))
-      .distinct()
+    val canon = graft.Artifacts.compactionSource(dir, s"screen|fpp=$fpp")
+    val union = graft.Artifacts.withDeltas(s, canon, "fps").distinct()
     screenBaseDurableFromFps(s, union, outDir, fpp)
   }
 
@@ -1678,26 +1647,14 @@ object Dedup {
       graft.Artifacts.canonical(dir))
     val d = graft.Artifacts.durable(s, dir, s"screen|fpp=$fpp") { d =>
       val fps = fps0.persist()
-      // bucketed layouts only write through saveAsTable; the build
-      // registers a THROWAWAY catalog name over the staging path and
-      // drops it (external table: files stay) — the durable publish
-      // renames the tree, so only the post-publish registration below
-      // may point the real name at the final path
-      val tmpName = s"${name}_b${System.nanoTime()}"
       try {
-        fps.write.bucketBy(8, "fp").sortBy("fp")
-          .option("path", s"$d/fps").mode("overwrite")
-          .saveAsTable(tmpName)
+        graft.Artifacts.writeBucketed(fps, name, s"$d/fps", "fp", 8)
         val bloom = RuntimeFilters.buildBloom(
           fps.select(xxhash64(col("fp")).as("h")), "h", fps.count(), fpp)
         import s.implicits._
         Seq(Tuple1(bloom)).toDF("bloom")
           .coalesce(1).write.mode("overwrite").parquet(s"$d/bloom")
-      } finally {
-        try s.sql(s"DROP TABLE IF EXISTS $tmpName")
-        catch { case _: Throwable => () }
-        fps.unpersist(false)
-      }
+      } finally fps.unpersist(false)
     }
     graft.Artifacts.registerBucketedTable(s, name, s"$d/fps",
       "fp STRING", "fp", 8, sortCol = Some("fp"))
@@ -1717,7 +1674,7 @@ object Dedup {
   }
 
   /** APPEND admitted docs' fingerprints to the durable exact screen
-    * as a commit-marked delta ([[graft.Artifacts.deltaDir]]) — the
+    * as a commit-marked delta ([[graft.Artifacts.appendDelta]]) — the
     * base corpus is never re-fingerprinted, and the Bloom
     * route-around stays SOUND because it only gates the BASE side:
     * survivors of the base screen are additionally anti-joined
@@ -1728,18 +1685,11 @@ object Dedup {
     * union set — append ≡ rebuild (q345 registers the appended serve
     * against the union-rebuilt oracle). */
   def appendFpsToScreenBase(s: SparkSession, newDocs: DataFrame,
-      dir: String, deltaName: String): String = {
-    // committed-base guard: a delta under an unbuilt home would be
-    // destroyed by the base publish (marker-less tree = debris)
-    require(graft.Artifacts.isCommitted(dir),
-      s"appendFpsToScreenBase needs a committed screen base at $dir " +
-        "— build it first (materializedScreenBaseDurable)")
-    graft.Artifacts.durable(s, graft.Artifacts.deltaDir(dir, deltaName),
-      "screendelta|v1") { d =>
+      dir: String, deltaName: String): String =
+    graft.Artifacts.appendDelta(s, dir, deltaName, "screendelta|v1") { d =>
       newDocs.select(contentFp.as("fp")).distinct()
         .write.mode("overwrite").parquet(s"$d/fps")
     }
-  }
 
   /** [[crossCorpusNewFromDurableArtifact]] against (base artifact +
     * ALL committed deltas): the bloom-routed bucketed base screen
@@ -1751,11 +1701,7 @@ object Dedup {
       fpp: Double = 0.01): DataFrame = {
     val survivors =
       crossCorpusNewFromDurableArtifact(s, candidates, base, dir, fpp)
-    val deltas = graft.Artifacts.committedDeltas(dir)
-    if (deltas.isEmpty) survivors
-    else {
-      val deltaFps = deltas.map(dd => s.read.parquet(s"$dd/fps"))
-        .reduce(_ unionByName _)
+    graft.Artifacts.deltasOnly(s, dir, "fps").fold(survivors) { deltaFps =>
       // a USING join reorders the join column first — restore the
       // screenServe column contract
       survivors.join(deltaFps, Seq("fp"), "left_anti")

@@ -1078,7 +1078,7 @@ object Similarity {
     * retraining: each vector argmin-assigns under the artifact's
     * COMMITTED centroid sidecar — the identical assignment the serve
     * applies to queries — and lands as a commit-marked delta
-    * ([[graft.Artifacts.deltaDir]]) partitioned by cell, so
+    * ([[graft.Artifacts.appendDelta]]) partitioned by cell, so
     * (artifact + deltas) is ROW-IDENTICAL to the index rebuilt over
     * the union WITH THE ARTIFACT'S CENTROIDS (the frozen-quantizer
     * rebuild; spec-pinned). Appending never moves the centroids —
@@ -1089,13 +1089,10 @@ object Similarity {
   def appendToIvfIndex(s: SparkSession, newVecs: DataFrame,
       dir: String, deltaName: String): String = {
     val canon = graft.Artifacts.canonical(dir)
-    require(graft.Artifacts.isCommitted(canon),
-      s"appendToIvfIndex needs a committed index at $canon — build " +
-        "it first (ivfExactIndexDurable)")
-    val cents = s.read.parquet(s"$canon/cents")
-    graft.Artifacts.durable(s,
-      graft.Artifacts.deltaDir(canon, deltaName), "ivfxdelta|v1") { d =>
-      assignCellsExact(newVecs, cents).join(newVecs, "vec_id")
+    graft.Artifacts.appendDelta(s, canon, deltaName, "ivfxdelta|v1") {
+      // read after appendDelta's committed-base guard
+      val cents = s.read.parquet(s"$canon/cents")
+      d => assignCellsExact(newVecs, cents).join(newVecs, "vec_id")
         .select(col("vec_id"), col("embedding"), col("cell"))
         .write.partitionBy("cell").mode("overwrite").parquet(s"$d/t")
     }
@@ -1116,22 +1113,12 @@ object Similarity {
     * retire it explicitly once consumers move. */
   def compactIvfIndex(s: SparkSession, dir: String, outDir: String,
       cells: Int = 8, iters: Int = 2): String = {
-    val canon = graft.Artifacts.canonical(dir)
-    require(graft.Artifacts.isCommitted(canon),
-      s"compactIvfIndex needs a committed index at $canon")
-    // the centroid sidecar copies VERBATIM — the fold's stamped params
-    // must be the params the source quantizer was trained with
-    val src = graft.Artifacts.committedParams(canon)
-    require(src == s"ivfx|c=$cells|i=$iters",
-      s"compactIvfIndex called with 'ivfx|c=$cells|i=$iters' but the " +
-        s"index at $canon was built with '$src' — a fold never " +
-        "retrains; rebuild under the new knobs instead")
-    graft.Artifacts.durable(s, outDir, s"ivfx|c=$cells|i=$iters") { d =>
+    val stamp = s"ivfx|c=$cells|i=$iters"
+    val canon = graft.Artifacts.compactionSource(dir, stamp)
+    graft.Artifacts.durable(s, outDir, stamp) { d =>
       s.read.parquet(s"$canon/cents")
         .write.mode("overwrite").parquet(s"$d/cents")
-      graft.Artifacts.committedDeltas(canon)
-        .foldLeft(s.read.parquet(s"$canon/t"))((acc, dd) =>
-          acc.unionByName(s.read.parquet(s"$dd/t")))
+      graft.Artifacts.withDeltas(s, canon, "t")
         .select(col("vec_id"), col("embedding"), col("cell"))
         .write.partitionBy("cell").mode("overwrite").parquet(s"$d/t")
     }
@@ -1145,9 +1132,7 @@ object Similarity {
       dir: String, cells: Int = 8, iters: Int = 2)
       : (DataFrame, DataFrame) = {
     val (vecs, cents) = ivfExactIndexDurable(s, base, dir, cells, iters)
-    val all = graft.Artifacts.committedDeltas(dir).foldLeft(vecs)(
-      (acc, dd) => acc.unionByName(s.read.parquet(s"$dd/t")))
-    (all, cents)
+    (graft.Artifacts.withDeltas(s, dir, "t", vecs), cents)
   }
 
   /** [[semDedupAgainstIndexDurable]] against (index + committed

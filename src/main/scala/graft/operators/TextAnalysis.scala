@@ -489,17 +489,9 @@ object TextAnalysis {
         val tf = grams.groupBy(col("doc_id"), col("g"))
           .agg(count(lit(1)).as("tf"))
         val dfr = tf.groupBy(col("g")).agg(count(lit(1)).as("df"))
-        // throwaway catalog name over the STAGING path (the durable
-        // publish renames the tree — see materializedScreenBaseDurable)
-        val tmpName = s"${name}_b${System.nanoTime()}"
-        try tf.join(dfr.filter(col("df") <= maxDf).select(col("g")),
-            Seq("g"))
-          .write.bucketBy(8, "g").sortBy("g")
-          .option("path", s"$d/p").mode("overwrite").saveAsTable(tmpName)
-        finally {
-          try s.sql(s"DROP TABLE IF EXISTS $tmpName")
-          catch { case _: Throwable => () }
-        }
+        graft.Artifacts.writeBucketed(
+          tf.join(dfr.filter(col("df") <= maxDf).select(col("g")), Seq("g")),
+          name, s"$d/p", "g", 8)
     }
     graft.Artifacts.registerBucketedTable(s, name, s"$d/p",
       "g STRING, doc_id BIGINT, tf BIGINT", "g", 8, Some("g"))

@@ -2,6 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 
+import scala.util.control.NonFatal
+
 /** Stage composition + retry — the reference's orchestration layer
   * (O1–O3, `/root/reference/dags/airflow_dag.py:11-62`) collapsed into
   * one lineage.
@@ -25,7 +27,8 @@ object Pipeline {
 
   /** O3: retry wrapper — `retries` attempts with `delayMs` backoff,
     * notifying on each failure, like the reference's
-    * retries=1/retry_delay=30s/email_on_retry defaults. */
+    * retries=1/retry_delay=30s/email_on_retry defaults. Only non-fatal
+    * failures retry: an interrupt or a fatal error propagates at once. */
   def withRetry[T](retries: Int = 1, delayMs: Long = 30000,
       onFailure: Throwable => Unit = _ => ())(body: => T): T = {
     var attempt = 0
@@ -33,7 +36,7 @@ object Pipeline {
     while (attempt <= retries) {
       try return body
       catch {
-        case t: Throwable =>
+        case NonFatal(t) =>
           last = t
           onFailure(t)
           attempt += 1

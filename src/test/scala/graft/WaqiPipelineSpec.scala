@@ -88,6 +88,29 @@ class WaqiPipelineSpec extends AnyFunSuite {
     r.long.unpersist()
   }
 
+  test("withRetry: an interrupt propagates at once, a runtime failure " +
+      "gets its retry") {
+    import graft.pipeline.Pipeline
+    var runs = 0
+    intercept[InterruptedException] {
+      Pipeline.withRetry(retries = 1, delayMs = 0) {
+        runs += 1
+        throw new InterruptedException("stop")
+      }
+    }
+    assert(runs == 1, "an interrupted body was retried")
+    runs = 0
+    var notified = 0
+    val e = intercept[RuntimeException] {
+      Pipeline.withRetry(retries = 1, delayMs = 0,
+          onFailure = _ => notified += 1) {
+        runs += 1
+        throw new RuntimeException(s"boom $runs")
+      }
+    }
+    assert(runs == 2 && notified == 2 && e.getMessage == "boom 2")
+  }
+
   test("describe exact: stats ordering invariant min<=p25<=p50<=p75<=max") {
     val d = operators.Describe.exact(
       Tables(spark, "/root/testdata/sf0.001").lineitem,
