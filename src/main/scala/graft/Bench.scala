@@ -3,9 +3,9 @@ import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 object Bench {
 
-  /** One timing-session setup shared by Bench and Profile — if the two
-    * diverged, profiled times would stop being representative of bench
-    * times. */
+  /** One timing-session setup shared by Bench, Profile and Explain —
+    * if they diverged, profiled times and dumped plans would stop being
+    * representative of bench times. */
   private[graft] def timingSession(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
@@ -99,15 +99,18 @@ object Bench {
     val spark = timingSession()
     warmUp(spark, sfDir)
     def once(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : Option[Double] = {
       val t0 = System.nanoTime()
       // noop sink forces full materialization of every column (a bare
       // count() would let Catalyst prune the projections away).
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case NonFatal(e) =>
+      try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch { case NonFatal(e) =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        None
       }
-      (System.nanoTime() - t0) / 1e9
     }
     // Optional comma-separated name-prefix filter for targeted
     // re-measurement (the bench-adjudication double-run protocol:
@@ -120,14 +123,20 @@ object Bench {
     val sorted = SparkEntry.queries.toSeq
       .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
       .sortBy(_._1)
+    // a query that throws on either pass is never a timing: it is left
+    // out of the line's queries/rest/value and listed as failed
     val pass1 = sorted.map { case (name, fn) => name -> once(name, fn) }.toMap
-    val results = sorted.map { case (name, fn) =>
-      val sec = math.min(pass1(name), once(name, fn))
-      System.err.println(f"[bench] $name $sec%.2fs")
+    val best = sorted.map { case (name, fn) =>
+      val sec = for (a <- pass1(name); b <- once(name, fn))
+        yield math.min(a, b)
+      System.err.println(
+        sec.fold(s"[bench] $name FAILED")(v => f"[bench] $name $v%.2fs"))
       name -> sec
     }
-    writeDetail(results, sfDir, fullRun = only.isEmpty)
-    println(buildJson(results, sfDir))
+    val results = best.collect { case (name, Some(sec)) => name -> sec }
+    val failed = best.collect { case (name, None) => name }
+    writeDetail(results, failed, sfDir, fullRun = only.isEmpty)
+    println(buildJson(results, sfDir, failed))
     spark.stop()
   }
 
@@ -140,25 +149,35 @@ object Bench {
     * file is committed history. Filtered (SPARK_GRAFT_BENCH_ONLY)
     * runs only write it when given an explicit path, so a targeted
     * re-run can't masquerade as a registry-wide record. */
-  private def writeDetail(results: Seq[(String, Double)], sfDir: String,
-      fullRun: Boolean): Unit = {
+  private def writeDetail(results: Seq[(String, Double)],
+      failed: Seq[String], sfDir: String, fullRun: Boolean): Unit = {
     val path = sys.env.get("SPARK_GRAFT_BENCH_DETAIL")
       .orElse(if (fullRun) Some("BENCH_DETAIL.json") else None)
     path.foreach { p =>
-      def num(v: Double) =
-        String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-      // sfDir is a caller-supplied path: escape JSON string specials
-      // (a quote/backslash in it must not corrupt the committed file)
-      val sfJson = jsonEscape(sfDir)
-      val qs = results
-        .map { case (n, v) => s""""$n":${num(v)}""" }.mkString(",")
-      val json = s"""{"sf":"$sfJson","unit":"sec","best_of":2,""" +
-        s""""total":${num(results.map(_._2).sum)},"queries":{$qs}}""" + "\n"
-      try java.nio.file.Files.writeString(java.nio.file.Paths.get(p), json)
+      try java.nio.file.Files.writeString(java.nio.file.Paths.get(p),
+        detailJson(results, failed, sfDir))
       catch { case NonFatal(e) =>
         System.err.println(s"[bench] detail write failed: ${e.getMessage}")
       }
     }
+  }
+
+  /** BENCH_DETAIL.json's content: full-precision timings of the
+    * queries that ran, their total, and the names of those that threw
+    * under `"failed"`. */
+  private[graft] def detailJson(results: Seq[(String, Double)],
+      failed: Seq[String], sfDir: String): String = {
+    def num(v: Double) =
+      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    // sfDir is a caller-supplied path: escape JSON string specials
+    // (a quote/backslash in it must not corrupt the committed file)
+    val sfJson = jsonEscape(sfDir)
+    val qs = results
+      .map { case (n, v) => s""""$n":${num(v)}""" }.mkString(",")
+    val fs = failed.map(n => s""""${jsonEscape(n)}"""").mkString(",")
+    s"""{"sf":"$sfJson","unit":"sec","best_of":2,""" +
+      s""""total":${num(results.map(_._2).sum)},"queries":{$qs},""" +
+      s""""failed":[$fs]}""" + "\n"
   }
 
   // Full-name per-query timings go to stderr for humans; the stdout
@@ -198,10 +217,13 @@ object Bench {
   //   - the "metric"/"value"/"unit"/"queries" skeleton is driver
   //     contract (its parser keys on those literals) — never rename.
   //     "rest"/"sf" rode the r06-r08 lines that parsed, so they are
-  //     proven-ignorable-or-read; "n_rest"/"detail" are new keys a
-  //     JSON parser skips.
+  //     proven-ignorable-or-read; "n_rest"/"n_failed"/"detail" are new
+  //     keys a JSON parser skips;
+  //   - queries that threw (`failed`) are in neither "queries", "rest"
+  //     nor "value"; "n_failed" counts them.
   // BenchFormatSpec guards the worst-case length against query growth.
-  def buildJson(results: Seq[(String, Double)], sfDir: String): String = {
+  def buildJson(results: Seq[(String, Double)], sfDir: String,
+      failed: Seq[String] = Nil): String = {
     def num(v: Double, dp: String): String =
       String.format(java.util.Locale.ROOT, dp, Double.box(v))
     val total = num(results.map(_._2).sum, "%.2f")
@@ -209,7 +231,7 @@ object Bench {
     // skeleton measured with worst-case widths for rest/n_rest so the
     // greedy fill can never overshoot the budget
     val skeleton = s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""queries":{},"rest":999999.99,"n_rest":9999,""" +
+      s""""queries":{},"rest":999999.99,"n_rest":9999,"n_failed":9999,""" +
       s""""detail":"BENCH_DETAIL.json","sf":"$sfJson"}"""
     var room = LineBudget - skeleton.length
     val bySlowest = results.sortBy { case (n, v) => (-v, n) }
@@ -225,7 +247,7 @@ object Bench {
     val qs = kept.result().mkString(",")
     s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""queries":{$qs},"rest":${num(restSum, "%.2f")}""" +
-      s""","n_rest":${results.size - nKept}""" +
+      s""","n_rest":${results.size - nKept},"n_failed":${failed.size}""" +
       s""","detail":"BENCH_DETAIL.json","sf":"$sfJson"}"""
   }
 

@@ -1,14 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+/** Dump each named query's formatted plan, then run it through the
+  * noop sink and print its wall time. The session is
+  * [[Bench.timingSession]], so the dumped plans are the benchmarked
+  * plans. Usage: `runMain graft.Explain q28_minhash_dedup ...` with
+  * `SPARK_GRAFT_SF_DIR` naming the lake (default sf0.1). */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // r17: env-overridable so the heavy-tier (ScaleTrial replica)
-    // plans can be dumped with the same tool as the sf0.1 plans
+    val spark = Bench.timingSession()
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     for (name <- args) {
       println(s"========== $name ==========")

@@ -81,8 +81,10 @@ object MediaScaleTrial {
       val au = Multimodal.audioFingerprints(media)
         .filter(col("afp").isNotNull)
       val nIm = im.count(); val nAu = au.count()
-      val cIm = pigeonholeCandidates(im, "media_id", "ahash")
-      val cAu = pigeonholeCandidates(au, "media_id", "afp")
+      val cIm = operators.Dedup
+        .hammingCandidates(im, "media_id", "ahash", 10000).distinct().count()
+      val cAu = operators.Dedup
+        .hammingCandidates(au, "media_id", "afp", 10000).distinct().count()
       println(s"$dir: images n=$nIm all_pairs=${nIm * (nIm - 1) / 2} " +
         s"pigeonhole_cands=$cIm | audio n=$nAu " +
         s"all_pairs=${nAu * (nAu - 1) / 2} pigeonhole_cands=$cAu")
@@ -144,27 +146,6 @@ object MediaScaleTrial {
             f"$tInline%9.2f")
         }
     }
-  }
-
-  /** The candidate tier of [[graft.operators.Dedup.hammingPairs]] —
-    * the chunk-bucket self-join's DISTINCT pair count before the
-    * hamming verify (the shuffle-volume number the pigeonhole claim
-    * is about). Same 16-bit chunks, same capBuckets guard. */
-  private def pigeonholeCandidates(hashed: DataFrame, id: String,
-      hash: String, maxBucket: Int = 10000): Long = {
-    val chunks0 = hashed.select(col(id).as("doc_id"),
-      explode(array((0 until 4).map { c =>
-        struct(lit(c).as("chunk"),
-          shiftright(col(hash), c * 16).bitwiseAND(0xffffL).as("ck"))
-      }: _*)).as("b"))
-      .select(col("doc_id"), col("b.chunk").as("chunk"),
-        col("b.ck").as("ck"))
-    val chunks = operators.Dedup.capBuckets(chunks0,
-      Seq("chunk", "ck"), maxBucket)
-    chunks.alias("x").join(chunks.alias("y"), Seq("chunk", "ck"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-      .distinct().count()
   }
 
   private def time(spark: SparkSession, dir: String,

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.Artifacts.withDeltas
 import graft.Tables
+import graft.operators.Dedup
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary`
   * columns with typed metadata (SURVEY.md north-star).
@@ -366,10 +367,10 @@ object Multimodal {
     * Scale: decode once per clip inside the narrow hash UDF; every
     * later stage moves (id, idx, 8-byte hash) rows only. Blocking is
     * keyed by (frame_idx, chunk, chunk-bits) so candidate generation
-    * spreads over frames × chunks; `maxBucket` caps degenerate keys
-    * (black frames, test cards) exactly as in [[audioDedup]]. The
-    * verify is a count over matched frames — partial-aggregable, no
-    * window. Media bytes never shuffle. */
+    * spreads over frames × chunks; bucket cap:
+    * [[graft.operators.Dedup.bandRows]]. The verify is a count over
+    * matched frames — partial-aggregable, no window. Media bytes never
+    * shuffle. */
   def videoDedup(media: DataFrame, maxHamming: Int = 3,
       minFrac: Double = 0.9, maxBucket: Int = 10000): DataFrame =
     videoDedupFromFrames(videoFrameHashes(media), maxHamming, minFrac,
@@ -381,19 +382,8 @@ object Multimodal {
     * artifact). */
   def videoDedupFromFrames(frames: DataFrame, maxHamming: Int = 3,
       minFrac: Double = 0.9, maxBucket: Int = 10000): DataFrame = {
-    val chunks0 = frames.select(col("media_id"), col("n_frames"),
-      col("frame_idx"), col("fhash"),
-      explode(array((0 until 4).map { c =>
-        struct(lit(c).as("chunk"),
-          shiftright(col("fhash"), c * 16).bitwiseAND(0xffffL).as("ck"))
-      }: _*)).as("b"))
-      .select(col("media_id"), col("n_frames"), col("frame_idx"),
-        col("fhash"), col("b.chunk").as("chunk"), col("b.ck").as("ck"))
-    val chunks = graft.operators.Dedup.capBuckets(
-      chunks0, Seq("frame_idx", "chunk", "ck"), maxBucket)
-    val matchedFrames = chunks.alias("x").join(chunks.alias("y"),
-        Seq("frame_idx", "chunk", "ck"))
-      .filter(col("x.media_id") < col("y.media_id"))
+    val matchedFrames = Dedup.selfBucketPairs(frameChunks(frames),
+        Seq("frame_idx", "chunk", "ck"), "media_id", maxBucket)
       .filter(col("x.n_frames") === col("y.n_frames"))
       .select(col("x.media_id").as("m1"), col("y.media_id").as("m2"),
         col("frame_idx"), col("x.n_frames").as("n"),
@@ -601,19 +591,10 @@ object Multimodal {
   private def probe64(inc: DataFrame, base: DataFrame, hashCol: String,
       maxHamming: Int, maxBucket: Int): DataFrame = {
     def chunked(f: DataFrame): DataFrame =
-      graft.operators.Dedup.capBuckets(
-        f.filter(col(hashCol).isNotNull)
-          .select(col("media_id"), col(hashCol).as("h"),
-            explode(array((0 until 4).map { c =>
-              struct(lit(c).as("chunk"),
-                shiftright(col(hashCol), c * 16).bitwiseAND(0xffffL)
-                  .as("ck"))
-            }: _*)).as("b"))
-          .select(col("media_id"), col("h"),
-            col("b.chunk").as("chunk"), col("b.ck").as("ck")),
-        Seq("chunk", "ck"), maxBucket)
-    chunked(inc).alias("x").join(chunked(base).alias("y"),
-        Seq("chunk", "ck"))
+      Dedup.chunkRows(f.filter(col(hashCol).isNotNull),
+        Seq(col("media_id"), col(hashCol).as("h")), col(hashCol))
+    Dedup.crossBucketPairs(chunked(inc), chunked(base), Seq("chunk", "ck"),
+        maxBucket)
       .select(col("x.media_id").as("inc_id"),
         col("y.media_id").as("base_id"),
         bit_count(col("x.h").bitwiseXOR(col("y.h"))).as("hamming"))
@@ -622,26 +603,19 @@ object Multimodal {
       .select(col("inc_id"), col("base_id"))
   }
 
+  /** (media_id, n_frames, frame_idx, fhash, chunk, ck) per-frame chunk
+    * rows — video blocking is keyed by (frame_idx, chunk, ck). */
+  private def frameChunks(frames: DataFrame): DataFrame =
+    Dedup.chunkRows(frames, Seq("media_id", "n_frames", "frame_idx",
+      "fhash").map(col), col("fhash"))
+
   /** Asymmetric frame-sequence probe (the [[videoDedupFromFrames]]
     * rule, inc×base only): clips match when they have the same frame
     * count and ≥ `minFrac` of positions hamming-match. */
   private def probeFrames(inc: DataFrame, base: DataFrame,
-      maxHamming: Int, minFrac: Double, maxBucket: Int): DataFrame = {
-    def chunked(f: DataFrame): DataFrame =
-      graft.operators.Dedup.capBuckets(
-        f.select(col("media_id"), col("n_frames"), col("frame_idx"),
-          col("fhash"),
-          explode(array((0 until 4).map { c =>
-            struct(lit(c).as("chunk"),
-              shiftright(col("fhash"), c * 16).bitwiseAND(0xffffL)
-                .as("ck"))
-          }: _*)).as("b"))
-          .select(col("media_id"), col("n_frames"), col("frame_idx"),
-            col("fhash"), col("b.chunk").as("chunk"),
-            col("b.ck").as("ck")),
+      maxHamming: Int, minFrac: Double, maxBucket: Int): DataFrame =
+    Dedup.crossBucketPairs(frameChunks(inc), frameChunks(base),
         Seq("frame_idx", "chunk", "ck"), maxBucket)
-    chunked(inc).alias("x").join(chunked(base).alias("y"),
-        Seq("frame_idx", "chunk", "ck"))
       .filter(col("x.n_frames") === col("y.n_frames"))
       .select(col("x.media_id").as("inc_id"),
         col("y.media_id").as("base_id"), col("frame_idx"),
@@ -654,7 +628,6 @@ object Multimodal {
       .agg(count(lit(1)).as("matched"))
       .filter(col("matched") >= ceil(lit(minFrac) * col("n")))
       .select(col("inc_id"), col("base_id"))
-  }
 
   /** The probe core over EXPLICIT base fingerprint frames — shared by
     * the at-rest screen ([[mediaAdmissionScreen]]) and the inline

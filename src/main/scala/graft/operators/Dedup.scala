@@ -44,19 +44,18 @@ object Dedup {
         min(col("hs").getItem(i))): _*).as("sig"))
   }
 
-  /** LSH banding: split the signature into `bands` groups of `rowsPerBand`
-    * and emit one (band_idx, band_hash) bucket key per band. */
-  private def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(concat_ws(":",
-          (0 until rowsPerBand).map(r =>
-            sig.getItem(b * rowsPerBand + r).cast("string")): _*))
-          .as("bh"))
-    }: _*)
+  /** MinHash band keys: split the signature into `bands` groups of
+    * `rowsPerBand` and hash each group to one `bh` key per band. */
+  private def minhashBandKeys(sig: Column, bands: Int,
+      rowsPerBand: Int): Seq[Column] =
+    (0 until bands).map { b =>
+      xxhash64(concat_ws(":", (0 until rowsPerBand).map(r =>
+        sig.getItem(b * rowsPerBand + r).cast("string")): _*))
+    }
 
   /** Full MinHash-LSH near-dup pipeline: signatures -> band buckets ->
-    * candidate pairs -> exact-Jaccard verification at `threshold`.
+    * candidate pairs -> exact-Jaccard verification at `threshold`
+    * (all through the [[bandRows candidate kernel]]).
     *
     * With bands=8 x rows=4 the s-curve gives ~40% recall at j=0.5,
     * ~90% at j=0.7, ~99.96% at j=0.9 — tuned for "true dup" detection
@@ -66,30 +65,14 @@ object Dedup {
   def minhashDedup(docs: DataFrame, shingleSize: Int = 3,
       numPerms: Int = 32, bands: Int = 8, threshold: Double = 0.5,
       maxBucket: Int = 10000): DataFrame = {
-    val rowsPerBand = numPerms / bands
-    val sigs = minhashSignatures(docs, shingleSize, numPerms)
-    val buckets0 = sigs
-      .select(col("doc_id"),
-        explode(bandKeys(col("sig"), bands, rowsPerBand)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bh").as("bh"))
-    // scale guard: a degenerate band value (near-constant corpus) would
-    // turn the bucket self-join quadratic; cap bucket population —
-    // members of an over-full bucket still pair via their other bands,
-    // and truly identical docs are caught by exact dedup upstream
-    val buckets = capBuckets(buckets0, Seq("band", "bh"), maxBucket)
-    val candidates = buckets.alias("x")
-      .join(buckets.alias("y"), Seq("band", "bh"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
+    val candidates = selfBucketPairs(
+      bandBuckets(docs, shingleSize, numPerms, bands),
+      Seq("band", "bh"), "doc_id", maxBucket)
       .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
       .distinct()
     val sh = docs.select(col("doc_id"),
       sortedShingles(col("text"), shingleSize).as("sh"))
-    candidates
-      .join(sh.select(col("doc_id").as("d1"), col("sh").as("sh1")), "d1")
-      .join(sh.select(col("doc_id").as("d2"), col("sh").as("sh2")), "d2")
-      .select(col("d1"), col("d2"),
-        jaccardSorted(col("sh1"), col("sh2")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    jaccardVerify(candidates, "d1", sh, "d2", sh, threshold)
       .orderBy(col("d1"), col("d2"))
   }
 
@@ -144,12 +127,7 @@ object Dedup {
       .select(col("d1"), col("d2")).distinct()
     // exact-jaccard gate BEFORE any signature work: the merge-pass
     // jaccard is cheap, the surviving pair set is near-dup-band-sized
-    val pairs = cand
-      .join(based.select(col("doc_id").as("d1"), col("sh").as("sh1")), "d1")
-      .join(based.select(col("doc_id").as("d2"), col("sh").as("sh2")), "d2")
-      .select(col("d1"), col("d2"),
-        jaccardSorted(col("sh1"), col("sh2")).as("jaccard"))
-      .filter(col("jaccard") >= minJaccard)
+    val pairs = jaccardVerify(cand, "d1", based, "d2", based, minJaccard)
       .localCheckpoint() // feeds the doc-id rollup AND the final join
     // md5 signatures only for docs that made it into the audit
     val sig = transform(sequence(lit(0), lit(numPerms - 1)),
@@ -188,9 +166,23 @@ object Dedup {
     * ~23% at j=0.5, ~88% at j=0.8, ~99% at j=0.9 — verification then
     * keeps only true pairs at `threshold`, so emitted pairs are a
     * subset of q26's exact tier by construction (spec-pinned, with
-    * planted-near-dup recall). The [[capBuckets]] guard is mirrored
-    * in the oracle's HAVING clause — unlike q300, a degenerate corpus
-    * cannot diverge the two engines. */
+    * planted-near-dup recall). Bucket cap: [[bandRows]]. */
+  def portableMinhashPairs(docs: DataFrame, shingleSize: Int = 3,
+      numPerms: Int = 16, bands: Int = 4, threshold: Double = 0.5,
+      maxBucket: Int = 10000): DataFrame = {
+    val based = Par.fanOut(docs)
+      .select(col("doc_id"),
+        sortedShingles(col("text"), shingleSize).as("sh"))
+      .localCheckpoint() // feeds signatures AND both verify sides
+    val candidates = selfBucketPairs(
+      portableBandedBuckets(based, numPerms, bands),
+      Seq("band", "bh"), "doc_id", maxBucket)
+      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
+      .distinct()
+    jaccardVerify(candidates, "d1", based, "d2", based, threshold)
+      .orderBy(col("d1"), col("d2"))
+  }
+
   /** (doc_id, band, bh) band keys of the PORTABLE md5 MinHash family
     * over a (doc_id, sh[, extras]) frame — the bucketing stage shared
     * by the batch ([[portableMinhashPairs]]) and incremental
@@ -202,40 +194,11 @@ object Dedup {
     val sig = transform(sequence(lit(0), lit(numPerms - 1)),
       i => array_min(transform(col("sh"),
         s => md5(concat(i.cast("string"), lit(":"), s)))))
-    val extras = based.columns.filterNot(Set("doc_id", "sh")).map(col)
-    based.select(col("doc_id") +: extras :+ sig.as("sig"): _*)
-      .select(col("doc_id") +: extras :+
-        explode(array((0 until bands).map { b =>
-          struct(lit(b).as("band"),
-            concat_ws(":", (0 until rowsPerBand).map(r =>
-              col("sig").getItem(b * rowsPerBand + r)): _*).as("bh"))
-        }: _*)).as("bk"): _*)
-      .select(col("doc_id") +: extras :+ col("bk.band").as("band") :+
-        col("bk.bh").as("bh"): _*)
-  }
-
-  def portableMinhashPairs(docs: DataFrame, shingleSize: Int = 3,
-      numPerms: Int = 16, bands: Int = 4, threshold: Double = 0.5,
-      maxBucket: Int = 10000): DataFrame = {
-    val based = Par.fanOut(docs)
-      .select(col("doc_id"),
-        sortedShingles(col("text"), shingleSize).as("sh"))
-      .localCheckpoint() // feeds signatures AND both verify sides
-    val buckets = capBuckets(
-      portableBandedBuckets(based, numPerms, bands),
-      Seq("band", "bh"), maxBucket)
-    val candidates = buckets.alias("x")
-      .join(buckets.alias("y"), Seq("band", "bh"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-      .distinct()
-    candidates
-      .join(based.select(col("doc_id").as("d1"), col("sh").as("sh1")), "d1")
-      .join(based.select(col("doc_id").as("d2"), col("sh").as("sh2")), "d2")
-      .select(col("d1"), col("d2"),
-        jaccardSorted(col("sh1"), col("sh2")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-      .orderBy(col("d1"), col("d2"))
+    val keep = col("doc_id") +:
+      based.columns.filterNot(Set("doc_id", "sh")).map(col)
+    bandRows(based.select(keep :+ sig.as("sig"): _*), keep, MinhashBands,
+      (0 until bands).map(b => concat_ws(":", (0 until rowsPerBand).map(r =>
+        col("sig").getItem(b * rowsPerBand + r)): _*)))
   }
 
   /** Bound every BLOCK of an exact pair tier to its `maxBlock` first
@@ -245,10 +208,10 @@ object Dedup {
     * [[fuzzyNameMatches]]): at 100× corpus scale a hot block would
     * otherwise cost O(block²) pairs, the job that never finishes.
     *
-    * Unlike [[capBuckets]] (LSH buckets, where a dropped member still
-    * pairs via its other bands) an exact tier has no second chance, so
-    * the guard TRUNCATES deterministically (row_number over `ord`)
-    * rather than dropping the whole block: per-block cost stays
+    * Unlike the LSH bucket cap ([[bandRows]], where a dropped member
+    * still pairs via its other bands) an exact tier has no second
+    * chance, so the guard TRUNCATES deterministically (row_number
+    * over `ord`) rather than dropping the whole block: per-block cost stays
     * ≤ maxBlock² and the kept subset is reproducible. A block at the
     * cap means the exact tier is the wrong tool for that corpus —
     * route it through the LSH path ([[minhashDedup]] / [[simhashDedup]]),
@@ -267,10 +230,65 @@ object Dedup {
       .drop("__rn")
   }
 
-  /** Drop every bucket whose population exceeds `maxBucket` (computed
-    * with one count-window over the bucket key — no extra shuffle
-    * beyond the one the self-join needs anyway). */
-  private[graft] def capBuckets(buckets: DataFrame, keys: Seq[String],
+  // ---- LSH candidate kernel -----------------------------------------
+  //
+  // Every banded/chunked pair tier (MinHash xxhash and md5, SimHash and
+  // media-hash chunks, RP sign bands, video frame chunks) runs the same
+  // plan: explode bucket keys ([[bandRows]]), cap and bucket-join them
+  // ([[selfBucketPairs]] / [[crossBucketPairs]]), project + distinct +
+  // the tier's own pair predicate, then an exact verify
+  // ([[jaccardVerify]] for the shingle tiers).
+
+  /** Column names of one bucket-key layout: the band (or chunk) index,
+    * the key, and the struct the explode passes through. */
+  private[graft] final case class BandCols(band: String, key: String,
+      struct: String)
+  private[graft] val MinhashBands = BandCols("band", "bh", "bk")
+  private[graft] val SignBands = BandCols("band", "bk", "bb")
+  private[graft] val Chunks = BandCols("chunk", "ck", "b")
+
+  /** Band/chunk key explode: `keep` plus one (band, key) row per entry
+    * of `keys`, band = the entry's index.
+    *
+    * The bucket cap ([[selfBucketPairs]], [[crossBucketPairs]]) drops
+    * every bucket holding more than `maxBucket` rows, whole, before the
+    * join: one count-window over the bucket key, no shuffle beyond the
+    * one the join needs. A degenerate key (near-constant corpus, black
+    * frames, a collapsed sign space) would otherwise make its bucket
+    * quadratic. The trade:
+    *  - banded tiers (MinHash, RP signs) lose little — a member of an
+    *    over-full bucket still pairs through its other bands, and truly
+    *    identical inputs are caught by exact dedup upstream;
+    *  - chunk tiers ([[Chunks]]) weaken the pigeonhole guarantee: a
+    *    pair within hamming 3 shares at least one chunk, and if that
+    *    chunk's bucket was dropped the pair is missed — exactly when
+    *    exact dedup should have collapsed those inputs first;
+    *  - the md5-portable banded tiers (MinHash md5, RP md5 planes)
+    *    mirror the cap as `HAVING count(*) <= maxBucket` in their oracle
+    *    SQL — per side on the inc×base tiers — so a degenerate corpus
+    *    cannot diverge the two engines; the portable SimHash oracle
+    *    (q300) replays the chunk join uncapped, which holds while the
+    *    cap never fires. */
+  private[graft] def bandRows(df: DataFrame, keep: Seq[Column],
+      cols: BandCols, keys: Seq[Column]): DataFrame = {
+    val exploded = df.select(keep :+ explode(array(keys.zipWithIndex.map {
+      case (k, b) => struct(lit(b).as(cols.band), k.as(cols.key))
+    }: _*)).as(cols.struct): _*)
+    exploded.select(exploded.columns.init.map(col) :+
+      col(s"${cols.struct}.${cols.band}").as(cols.band) :+
+      col(s"${cols.struct}.${cols.key}").as(cols.key): _*)
+  }
+
+  /** The 4×16-bit chunk instance of [[bandRows]]: a pair within hamming
+    * distance 3 of `hash` differs in at most 3 chunks, so it shares at
+    * least one (chunk, ck) bucket. */
+  private[graft] def chunkRows(df: DataFrame, keep: Seq[Column],
+      hash: Column): DataFrame =
+    bandRows(df, keep, Chunks, (0 until 4).map(c =>
+      shiftright(hash, c * 16).bitwiseAND(0xffffL)))
+
+  /** Drop every bucket whose population exceeds `maxBucket`. */
+  private def capBuckets(buckets: DataFrame, keys: Seq[String],
       maxBucket: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(keys.map(col): _*)
@@ -279,6 +297,38 @@ object Dedup {
       .filter(col("__bn") <= maxBucket)
       .drop("__bn")
   }
+
+  /** Self bucket join: cap `rows` ([[bandRows]]), then every pair of
+    * rows sharing a bucket on `keys` with `x.id < y.id`. Both sides stay
+    * reachable as `x.*` / `y.*`; the caller projects, de-duplicates and
+    * applies its own pair predicate. */
+  private[graft] def selfBucketPairs(rows: DataFrame, keys: Seq[String],
+      id: String, maxBucket: Int): DataFrame = {
+    val b = capBuckets(rows, keys, maxBucket)
+    b.alias("x").join(b.alias("y"), keys)
+      .filter(col(s"x.$id") < col(s"y.$id"))
+  }
+
+  /** Cross bucket join: each side capped on its own ([[bandRows]]),
+    * then increment rows (`x.*`) equi-joined to base rows (`y.*`) on
+    * `keys` — no base×base or inc×inc pair can form. */
+  private[graft] def crossBucketPairs(inc: DataFrame, base: DataFrame,
+      keys: Seq[String], maxBucket: Int): DataFrame =
+    capBuckets(inc, keys, maxBucket).alias("x")
+      .join(capBuckets(base, keys, maxBucket).alias("y"), keys)
+
+  /** Shingle-Jaccard verify: join each side's (doc_id, sh) sorted
+    * shingle frame onto the (`id1`, `id2`) candidate pairs and keep
+    * (id1, id2, jaccard) with jaccard ≥ `threshold`. */
+  private[graft] def jaccardVerify(pairs: DataFrame, id1: String,
+      sh1: DataFrame, id2: String, sh2: DataFrame,
+      threshold: Double): DataFrame =
+    pairs
+      .join(sh1.select(col("doc_id").as(id1), col("sh").as("sh1")), id1)
+      .join(sh2.select(col("doc_id").as(id2), col("sh").as("sh2")), id2)
+      .select(col(id1), col(id2),
+        jaccardSorted(col("sh1"), col("sh2")).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
 
   /** 64-bit SimHash over the token multiset: per-bit signed vote
     * weighted by term frequency. Votes are accumulated per token
@@ -306,34 +356,26 @@ object Dedup {
 
   /** Chunk-pigeonhole near-dup pairs over ANY 64-bit hash column
     * (SimHash over text, aHash over images, any locality-preserving
-    * fingerprint): 4 chunks of 16 bits — a pair within hamming
-    * distance 3 differs in at most 3 chunks, so it SHARES at least
-    * one, and the bucket self-join per (chunk, value) finds it
-    * without an all-pairs pass. Returns (d1, d2, hamming) with
-    * d1 < d2, verified ≤ maxHamming.
-    *
-    * The [[capBuckets]] population guard keeps a degenerate hash
-    * value (near-constant inputs) from turning a bucket quadratic —
-    * same trade as MinHash banding: an over-full bucket weakens the
-    * pigeonhole guarantee exactly when exact dedup should have
-    * collapsed those inputs first. */
+    * fingerprint): [[chunkRows]] buckets, so a pair within hamming
+    * distance 3 is found without an all-pairs pass. Returns (d1, d2,
+    * hamming) with d1 < d2, verified ≤ maxHamming. Bucket cap:
+    * [[bandRows]]. */
   def hammingPairs(hashed: DataFrame, id: String, hash: String,
-      maxHamming: Int = 3, maxBucket: Int = 10000): DataFrame = {
-    val chunks0 = hashed.select(col(id).as("doc_id"), col(hash).as("h"),
-      explode(array((0 until 4).map { c =>
-        struct(lit(c).as("chunk"),
-          shiftright(col(hash), c * 16).bitwiseAND(0xffffL).as("ck"))
-      }: _*)).as("b"))
-      .select(col("doc_id"), col("h"),
-        col("b.chunk").as("chunk"), col("b.ck").as("ck"))
-    val chunks = capBuckets(chunks0, Seq("chunk", "ck"), maxBucket)
-    chunks.alias("x").join(chunks.alias("y"), Seq("chunk", "ck"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"),
-        bit_count(col("x.h").bitwiseXOR(col("y.h"))).as("hamming"))
+      maxHamming: Int = 3, maxBucket: Int = 10000): DataFrame =
+    hammingCandidates(hashed, id, hash, maxBucket)
       .distinct()
       .filter(col("hamming") <= maxHamming)
-  }
+
+  /** The candidate tier of [[hammingPairs]]: every (d1, d2, hamming)
+    * chunk-bucket pair before the distinct and the hamming cut. */
+  private[graft] def hammingCandidates(hashed: DataFrame, id: String,
+      hash: String, maxBucket: Int): DataFrame =
+    selfBucketPairs(
+      chunkRows(hashed, Seq(col(id).as("doc_id"), col(hash).as("h")),
+        col(hash)),
+      Seq("chunk", "ck"), "doc_id", maxBucket)
+      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"),
+        bit_count(col("x.h").bitwiseXOR(col("y.h"))).as("hamming"))
 
   /** PORTABLE SimHash: the q217 portable-family device applied to
     * [[simhashes]] — per-token 64-bit fingerprints come from md5 hex
@@ -376,10 +418,8 @@ object Dedup {
     * family is md5 the oracle replays signature → 16-bit chunk join →
     * hamming end to end (DuckDB's `hamming()` over the bit string ==
     * Spark's `bit_count(xor)` over the packed long; chunk-substring
-    * equality == the shifted-mask equality). The oracle's pair tier
-    * assumes the [[capBuckets]] guard never fires — true by the
-    * pigeonhole argument unless exact dedup was skipped on a
-    * degenerate corpus, the same caveat every LSH tier documents. */
+    * equality == the shifted-mask equality). The oracle replays the
+    * chunk join uncapped ([[bandRows]]). */
   def portableSimhashPairs(docs: DataFrame, maxHamming: Int = 3,
       maxBucket: Int = 10000): DataFrame =
     hammingPairs(portableSimhashes(docs), "doc_id", "simhash",
@@ -701,46 +741,36 @@ object Dedup {
     * [[incrementalNearDupsMaterialized]] (q194), which probes the
     * partition-pruned at-rest table from [[materializedNearDupBase]]
     * instead of re-shingling the base. Same verify tier as the batch
-    * form (exact shingle jaccard), same [[capBuckets]] degeneracy
-    * guard on both sides. */
+    * form (exact shingle jaccard); each side is capped on its own
+    * ([[crossBucketPairs]]). */
   def incrementalNearDups(base: DataFrame, fresh: DataFrame,
       shingleSize: Int = 3, numPerms: Int = 32, bands: Int = 8,
-      threshold: Double = 0.5, maxBucket: Int = 10000): DataFrame = {
-    val bb = capBuckets(bandBuckets(base, shingleSize, numPerms, bands),
-      Seq("band", "bh"), maxBucket)
-    val nb = capBuckets(bandBuckets(fresh, shingleSize, numPerms, bands),
-      Seq("band", "bh"), maxBucket)
-    verifyFreshBasePairs(bb, nb, base, fresh, shingleSize, threshold)
-  }
+      threshold: Double = 0.5, maxBucket: Int = 10000): DataFrame =
+    freshBasePairs(bandBuckets(fresh, shingleSize, numPerms, bands),
+      bandBuckets(base, shingleSize, numPerms, bands), base, fresh,
+      shingleSize, threshold, maxBucket)
 
   /** (doc_id, band, bh) banded bucket keys — the blocked candidate
-    * space shared by the in-memory and materialized incremental
+    * space shared by the batch, in-memory and materialized incremental
     * paths. */
   private def bandBuckets(df: DataFrame, shingleSize: Int, numPerms: Int,
       bands: Int): DataFrame =
-    minhashSignatures(df, shingleSize, numPerms)
-      .select(col("doc_id"),
-        explode(bandKeys(col("sig"), bands, numPerms / bands)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"),
-        col("bk.bh").as("bh"))
+    bandRows(minhashSignatures(df, shingleSize, numPerms),
+      Seq(col("doc_id")), MinhashBands,
+      minhashBandKeys(col("sig"), bands, numPerms / bands))
 
-  /** Bucket-join the fresh bucket keys against the base bucket keys
-    * (fresh x base ONLY — base x base pairs are structurally
-    * impossible) and verify candidates with exact shingle jaccard. */
-  private def verifyFreshBasePairs(bb: DataFrame, nb: DataFrame,
+  /** Fresh×base bucket pairs of the two incremental paths, verified
+    * with exact shingle jaccard as (d_new, d_base, jaccard). */
+  private def freshBasePairs(nb: DataFrame, bb: DataFrame,
       base: DataFrame, fresh: DataFrame, shingleSize: Int,
-      threshold: Double): DataFrame = {
-    val candidates = nb.alias("n").join(bb.alias("b"), Seq("band", "bh"))
-      .select(col("n.doc_id").as("d_new"), col("b.doc_id").as("d_base"))
+      threshold: Double, maxBucket: Int): DataFrame = {
+    val candidates = crossBucketPairs(nb, bb, Seq("band", "bh"), maxBucket)
+      .select(col("x.doc_id").as("d_new"), col("y.doc_id").as("d_base"))
       .distinct()
-    val shN = fresh.select(col("doc_id").as("d_new"),
-      sortedShingles(col("text"), shingleSize).as("sh1"))
-    val shB = base.select(col("doc_id").as("d_base"),
-      sortedShingles(col("text"), shingleSize).as("sh2"))
-    candidates.join(shN, "d_new").join(shB, "d_base")
-      .select(col("d_new"), col("d_base"),
-        jaccardSorted(col("sh1"), col("sh2")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    def sh(df: DataFrame) = df.select(col("doc_id"),
+      sortedShingles(col("text"), shingleSize).as("sh"))
+    jaccardVerify(candidates, "d_new", sh(fresh), "d_base", sh(base),
+      threshold)
       .orderBy(col("d_new"), col("d_base"))
   }
 
@@ -822,11 +852,9 @@ object Dedup {
     val bbScan =
       if (touched.isEmpty) s.table(table).filter(lit(false))
       else s.table(table).filter(col("pp").isin(touched.map(Int.box): _*))
-    val bb = capBuckets(bbScan.select(col("doc_id"), col("band"), col("bh")),
-      Seq("band", "bh"), maxBucket)
-    val nb = capBuckets(nb0.select(col("doc_id"), col("band"), col("bh")),
-      Seq("band", "bh"), maxBucket)
-    verifyFreshBasePairs(bb, nb, base, fresh, shingleSize, threshold)
+    freshBasePairs(nb0.select(col("doc_id"), col("band"), col("bh")),
+      bbScan.select(col("doc_id"), col("band"), col("bh")), base, fresh,
+      shingleSize, threshold, maxBucket)
   }
 
   /** Cross-corpus dedup screen: drop candidate documents whose content
@@ -1229,8 +1257,8 @@ object Dedup {
     * composed with [[incrementalNearDups]]' increment-vs-base
     * bucketing. The increment is the deterministic slice
     * doc_id % 10 = 3 (the q327 convention); band keys, the PER-SIDE
-    * bucket caps (each side guards its own degenerate buckets, the
-    * q155 discipline), the inc×base bucket probe and the exact
+    * bucket caps ([[crossBucketPairs]], the q155 discipline), the
+    * inc×base bucket probe and the exact
     * shingle-jaccard verify ALL replay in SQL — so the nightly
     * DECISION, which new docs near-duplicate the base and against
     * whom, is hash-exact for the first time (q335). No base×base
@@ -1251,23 +1279,12 @@ object Dedup {
         sortedShingles(col("text"), shingleSize).as("sh"))
       .localCheckpoint() // feeds buckets AND both verify sides
     val buckets0 = portableBandedBuckets(based, numPerms, bands)
-    val incB = capBuckets(buckets0.filter(col("is_inc")),
-      Seq("band", "bh"), maxBucket)
-    val baseB = capBuckets(buckets0.filter(!col("is_inc")),
-      Seq("band", "bh"), maxBucket)
-    val candidates = incB.alias("x").join(baseB.alias("y"),
-        Seq("band", "bh"))
+    val candidates = crossBucketPairs(buckets0.filter(col("is_inc")),
+        buckets0.filter(!col("is_inc")), Seq("band", "bh"), maxBucket)
       .select(col("x.doc_id").as("new_id"),
         col("y.doc_id").as("base_id"))
       .distinct()
-    candidates
-      .join(based.select(col("doc_id").as("new_id"),
-        col("sh").as("sh1")), "new_id")
-      .join(based.select(col("doc_id").as("base_id"),
-        col("sh").as("sh2")), "base_id")
-      .select(col("new_id"), col("base_id"),
-        jaccardSorted(col("sh1"), col("sh2")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    jaccardVerify(candidates, "new_id", based, "base_id", based, threshold)
       .orderBy(col("new_id"), col("base_id"))
   }
 
@@ -1278,8 +1295,8 @@ object Dedup {
     * re-shingles or re-hashes the base (the by-name `docs` frame is
     * not even evaluated on the committed path). Stores the UNCAPPED
     * (doc_id, band, bh) rows; the serve applies the same per-side
-    * [[capBuckets]] guard the inline tier applies, so the two are
-    * bit-identical by construction. */
+    * bucket cap ([[crossBucketPairs]]) the inline tier applies, so the
+    * two are bit-identical by construction. */
   def portableNearDupBaseDurable(s: SparkSession, docs: => DataFrame,
       dir: String, shingleSize: Int = 3, numPerms: Int = 16,
       threshold: Double = 0.5): String =
@@ -1439,17 +1456,13 @@ object Dedup {
       maxBucket: Int): DataFrame = {
     val (bands, _) = lshBandChoice(numPerms,
       math.max(0.05, threshold - 0.2), math.min(0.95, threshold + 0.2))
-    val baseB = capBuckets(baseBuckets,
-      Seq("band", "bh"), maxBucket)
     val incBased = Par.fanOut(inc)
       .select(col("doc_id"),
         sortedShingles(col("text"), shingleSize).as("sh"))
       .localCheckpoint() // feeds the inc buckets AND the verify side
-    val incB = capBuckets(
-      portableBandedBuckets(incBased, numPerms, bands),
-      Seq("band", "bh"), maxBucket)
-    val candidates = incB.alias("x").join(baseB.alias("y"),
-        Seq("band", "bh"))
+    val candidates = crossBucketPairs(
+        portableBandedBuckets(incBased, numPerms, bands), baseBuckets,
+        Seq("band", "bh"), maxBucket)
       .select(col("x.doc_id").as("new_id"),
         col("y.doc_id").as("base_id"))
       .distinct()
@@ -1458,15 +1471,10 @@ object Dedup {
     val baseSh = baseText
       .join(candidates.select(col("base_id").as("doc_id")).distinct(),
         Seq("doc_id"), "left_semi")
-      .select(col("doc_id").as("base_id"),
-        sortedShingles(col("text"), shingleSize).as("sh2"))
-    candidates
-      .join(incBased.select(col("doc_id").as("new_id"),
-        col("sh").as("sh1")), "new_id")
-      .join(baseSh, "base_id")
-      .select(col("new_id"), col("base_id"),
-        jaccardSorted(col("sh1"), col("sh2")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+      .select(col("doc_id"),
+        sortedShingles(col("text"), shingleSize).as("sh"))
+    jaccardVerify(candidates, "new_id", incBased, "base_id", baseSh,
+      threshold)
       .orderBy(col("new_id"), col("base_id"))
   }
 
@@ -1479,7 +1487,7 @@ object Dedup {
     * and max bucket population before and after the merge, plus the
     * mean bucket size (one IEEE division each — hash-exact in any
     * engine). When max_bucket_merged approaches `maxBucket`, the
-    * [[capBuckets]] guard will start dropping REAL candidates; when
+    * bucket cap ([[bandRows]]) will start dropping REAL candidates; when
     * mean bucket size grows past the background the planner's
     * separation assumed, the base wants more perms / a re-planned
     * banding ([[lshBandChoice]]) — this card is the number that gates
@@ -2365,7 +2373,7 @@ object Dedup {
     // the ENTIRE MinHash-LSH pipeline replayed: q217's md5 signature
     // family, band keys as ':'-joined signature positions (DuckDB
     // list slices are 1-based inclusive: sig[b*4+1 : b*4+4] == the
-    // Spark band's 4 positions), the capBuckets population guard as a
+    // Spark band's 4 positions), the bucket cap (Dedup.bandRows) as a
     // HAVING filter, the bucket self-join, and the q26 exact-jaccard
     // verification. Pinned to shingleSize=3, numPerms=16, bands=4,
     // threshold=0.5, maxBucket=10000.

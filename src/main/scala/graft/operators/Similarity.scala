@@ -2482,8 +2482,8 @@ object Similarity {
     * density, never n²: 32 seeded-hyperplane sign bits
     * ([[rpSignature]]'s family, unpacked as '0'/'1' chars so any band
     * width works), banded 4×8, population-capped buckets
-    * ([[Dedup.capBuckets]] — a collapsed sign space cannot go
-    * quadratic), bucket self-join, then exact-cosine verification so
+    * ([[Dedup.bandRows]]), bucket self-join, then exact-cosine
+    * verification so
     * every emitted pair is TRUE at `threshold`. Emitted pairs are by
     * construction a SUBSET of [[similarPairs]]'s (spec-pinned); the
     * miss probability per pair falls exponentially with similarity
@@ -2507,23 +2507,16 @@ object Similarity {
 
   /** Banded sign-LSH candidates over ANY plane family — shared by the
     * seeded-gaussian ([[rpLshPairs]]/q310) and md5-portable (q315)
-    * tiers so banding, capping and the bucket join cannot drift. */
+    * tiers, through the [[Dedup.bandRows]] candidate kernel. */
   private def rpBandedCandidates(emb: DataFrame, planes: Seq[Column],
       bands: Int, maxBucket: Int): DataFrame = {
     val perBand = planes.size / bands
     val signs = planes.map(p =>
       when(dot(col("embedding"), p) > 0, lit("1")).otherwise(lit("0")))
-    val banded0 = emb.select(col("vec_id"),
-      explode(array((0 until bands).map { b =>
-        struct(lit(b).as("band"),
-          concat(signs.slice(b * perBand, (b + 1) * perBand): _*)
-            .as("bk"))
-      }: _*)).as("bb"))
-      .select(col("vec_id"), col("bb.band").as("band"),
-        col("bb.bk").as("bk"))
-    val banded = Dedup.capBuckets(banded0, Seq("band", "bk"), maxBucket)
-    banded.alias("x").join(banded.alias("y"), Seq("band", "bk"))
-      .filter(col("x.vec_id") < col("y.vec_id"))
+    val banded = Dedup.bandRows(emb, Seq(col("vec_id")), Dedup.SignBands,
+      (0 until bands).map(b =>
+        concat(signs.slice(b * perBand, (b + 1) * perBand): _*)))
+    Dedup.selfBucketPairs(banded, Seq("band", "bk"), "vec_id", maxBucket)
       .select(col("x.vec_id").as("d1"), col("y.vec_id").as("d2"))
       .distinct()
   }
@@ -2563,8 +2556,8 @@ object Similarity {
     * seeded-gaussian hyperplanes swapped for [[portablePlanes]]' md5
     * family, which takes the sign-LSH BUCKETING tier itself out of
     * rows-only (the q300/q312 move completed for the third LSH
-    * family): signs, 4×8 banding, the capBuckets guard (mirrored in
-    * the oracle's HAVING), the bucket self-join and the exact-cosine
+    * family): signs, 4×8 banding, the bucket cap
+    * ([[Dedup.bandRows]]), the bucket self-join and the exact-cosine
     * verification ALL replay in SQL. The sign fold's missing 0.0 seed
     * in SQL's list_reduce is sign-safe (±0.0 compare > 0 identically,
     * and any nonzero term makes the chains bitwise equal). Uniform
@@ -3396,7 +3389,7 @@ object Similarity {
   /** q315's DuckDB twin — the whole portable sign-LSH pipeline in
     * SQL: plane coordinates from md5, signs via an ordered
     * list_reduce fold, band keys as signature substrings, the
-    * capBuckets guard as HAVING, bucket self-join, exact-cosine
+    * bucket cap as HAVING, bucket self-join, exact-cosine
     * verification. */
   private def portableRpOracle(nPlanes: Int, bands: Int,
       threshold: Double, maxBucket: Int): String = {

@@ -104,4 +104,20 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(line.contains("""\"b\\c"""))
     assert(decode(line) == Map("q01" -> 1.0))
   }
+
+  test("a query that threw is counted as failed, never as a timing") {
+    val results = Seq("q01_a" -> 1.4, "q03_c" -> 2.0)
+    val line = Bench.buildJson(results, "/x", failed = Seq("q02_b"))
+    assert(decode(line) == Map("q01" -> 1.4, "q03" -> 2.0))
+    assert(field(line, "value") == "3.40")
+    assert(field(line, "rest") == "0.00")
+    assert(field(line, "n_rest") == "0")
+    assert(field(line, "n_failed") == "1")
+    assert(line.startsWith("""{"metric":"total","value":3.40,"unit":"sec""""))
+    val detail = Bench.detailJson(results, Seq("q02_b"), "/x")
+    assert(detail.contains(""""total":3.400,"""), detail)
+    assert(detail.contains(""""queries":{"q01_a":1.400,"q03_c":2.000}"""),
+      detail)
+    assert(detail.contains(""""failed":["q02_b"]"""), detail)
+  }
 }
