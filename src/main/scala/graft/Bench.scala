@@ -3,7 +3,7 @@ import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 object Bench {
 
-  /** One timing-session setup shared by Bench, Profile and Explain —
+  /** One timing-session setup shared by Bench, JobProfile and Explain —
     * if they diverged, profiled times and dumped plans would stop being
     * representative of bench times. */
   private[graft] def timingSession(): SparkSession = {

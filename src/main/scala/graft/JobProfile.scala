@@ -1,14 +1,18 @@
 package graft
 
+import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-/** Per-query cost BREAKDOWN harness for the optimization rounds:
-  * where Profile reports wall clock only, this separates the three
-  * budgets a tiny-SF bench actually spends — Catalyst work (analyze/
-  * optimize/plan, driver single-threaded), job count (each tiny job
-  * pays fixed scheduling latency), and task volume — so an
-  * optimization targets the right one (guide §1: measure first).
+/** Per-query cost BREAKDOWN harness for the optimization rounds: it
+  * separates the three budgets a tiny-SF bench actually spends —
+  * Catalyst work (analyze/optimize/plan, driver single-threaded), job
+  * count (each tiny job pays fixed scheduling latency), and task
+  * volume — so an optimization targets the right one (guide §1:
+  * measure first). Listener events arrive asynchronously; the bus is
+  * drained before the counters are reset and again before they are
+  * printed, so no event of the query is missed. Naming a query
+  * several times times it several times (`JobProfile q82 q82 q82`).
   *
   * Usage: SPARK_GRAFT_SF_DIR=... runMain graft.JobProfile q296... */
 object JobProfile {
@@ -42,6 +46,7 @@ object JobProfile {
     for (name <- args) SparkEntry.queries.get(name) match {
       case None => System.err.println(s"[jobprofile] unknown query: $name")
       case Some(fn) =>
+        GraftBus.drain(spark.sparkContext)
         jobs.set(0); stages.set(0); tasks.set(0); stageLog.clear()
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
@@ -53,16 +58,13 @@ object JobProfile {
         val tPlanned = System.nanoTime()
         df.write.format("noop").mode("overwrite").save()
         val tDone = System.nanoTime()
+        GraftBus.drain(spark.sparkContext)
         def s(a: Long, b: Long) = f"${(b - a) / 1e9}%.2f"
         System.err.println(s"[jobprofile] $name total=${s(t0, tDone)}s " +
           s"build=${s(t0, tBuilt)}s plan=${s(tBuilt, tPlanned)}s " +
           s"exec=${s(tPlanned, tDone)}s jobs=${jobs.get} " +
           s"stages=${stages.get} tasks=${tasks.get}")
-        if (verbose) {
-          // tiny settle window so late listener events land before print
-          Thread.sleep(200)
-          stageLog.forEach(l => System.err.println(l))
-        }
+        if (verbose) stageLog.forEach(l => System.err.println(l))
     }
     spark.stop()
   }

@@ -390,9 +390,9 @@ object Behavioral {
     *
     * Scale: ONE user-keyed window pass (the q106 rollup) reduces the
     * event log to a ≤\|types\|²-row kernel; every iteration runs on
-    * that kernel (localCheckpointed, lineage one round deep); the
-    * share rollup is map-side combinable. Nothing grows with volume
-    * but the first rollup. */
+    * that kernel (the [[Iterate]] round discipline); the share rollup
+    * is map-side combinable. Nothing grows with volume but the first
+    * rollup. */
   def stationaryMix(events: DataFrame, rounds: Int = 5): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
@@ -412,11 +412,10 @@ object Behavioral {
         (col("n").cast("double") / col("out").cast("double")).as("p"))
       .localCheckpoint(true)
     val nStates = states.count()
-    var pi = states.select(col("src").as("t"),
+    val pi0 = states.select(col("src").as("t"),
       lit(1.0 / nStates).as("pi"))
-    var it = 0
-    while (it < rounds) {
-      pi = p.join(pi, p("src") === pi("t"))
+    val pi = Iterate(pi0, Iterate.Fixed(rounds)) { pi =>
+      p.join(pi, p("src") === pi("t"))
         .select(col("dst"), col("src"), (col("pi") * col("p")).as("contrib"))
         .groupBy(col("dst"))
         .agg(aggregate(
@@ -424,8 +423,7 @@ object Behavioral {
           lit(0.0), (acc, x) => acc + x.getField("contrib")).as("pi"))
         .select(col("dst").as("t"), col("pi"))
         .localCheckpoint(true)
-      it += 1
-    }
+    }.state
     val share = events
       .join(broadcast(states.select(col("src").as("event_type"))),
         "event_type")

@@ -1753,42 +1753,28 @@ object CorpusSignals {
     * transitive-taint sweep a conservative decontamination runs
     * before deciding its drop set). Frontier relaxation over the
     * [[TextAnalysis.sparseCosinePairs]] train-side edge tier — the
-    * [[Similarity.bfsHops]] recurrence re-keyed to documents; all
-    * integer, hop counts exact, hash-exact against unrolled rounds.
+    * [[Similarity.bfsHops]] recurrence ([[Similarity.bfsRelax]])
+    * re-keyed to documents; all integer, hop counts exact, hash-exact
+    * against unrolled rounds.
     *
     * Scale: the seed join is one broadcast-gram semi-join shape
     * (q92), edges are the linear df-capped posting tier, and each of
-    * the ≤ `hops` rounds is one edge equi-join + a min groupBy with
-    * lineage one round deep. */
+    * the ≤ `hops` rounds is one edge equi-join + a min groupBy,
+    * checkpointed EAGERLY: each hop reads the previous frontier twice,
+    * so a lazy round would recompute it 2^hops times (the r17 q231
+    * regression recorded at [[Iterate]]). */
   def contaminationBlastRadius(docs: DataFrame,
       evalSource: String = "src0", hops: Int = 2,
       threshold: Double = 0.5): DataFrame = {
     val train = docs.filter(col("source") =!= evalSource)
-    val pairs = TextAnalysis.sparseCosinePairs(train, threshold)
-      .select(col("d1"), col("d2"))
-    // r17 note: the pageRank-style LAZY round checkpoint was tried
-    // here and REVERTED after the paired protocol caught a 4.5×
-    // regression — each hop references the previous frontier TWICE
-    // (the relax join and the union), and an un-materialized lazy
-    // checkpoint recomputes its lineage per reference within the one
-    // final action, i.e. 2^hops recomputes of the contamination +
-    // pair-tier upstream. Eager checkpoints pay one job per hop and
-    // materialize each frontier exactly once.
-    val edges = pairs.union(pairs.select(col("d2"), col("d1")))
-      .toDF("src", "dst").localCheckpoint(true)
-    var dist = contamination(docs, evalSource)
+    val edges = Similarity.symmetricEdges(
+      TextAnalysis.sparseCosinePairs(train, threshold)).localCheckpoint(true)
+    val dist = contamination(docs, evalSource)
       .select(col("doc_id"), lit(0L).as("hops"))
       .localCheckpoint(true)
-    var r = 0
-    while (r < hops) {
-      dist = dist.join(edges, dist("doc_id") === edges("src"))
-        .select(col("dst").as("doc_id"), (col("hops") + 1L).as("hops"))
-        .union(dist)
-        .groupBy(col("doc_id")).agg(min(col("hops")).as("hops"))
-        .localCheckpoint(true)
-      r += 1
-    }
-    dist.orderBy(col("doc_id"))
+    Iterate(dist, Iterate.Fixed(hops))(
+      Similarity.bfsRelax(edges, "doc_id", eager = true))
+      .state.orderBy(col("doc_id"))
   }
 
   /** Leakage-SAFE split: [[datasetSplit]] with the q224 leak list

@@ -510,8 +510,8 @@ object Dedup {
         import spark.implicits._
         driverUnionFind(edges).toDF("doc_id", "cluster_id")
           .orderBy(col("doc_id"))
-      } else dupClustersWithRounds(canonical, maxIters,
-        alreadyCanonical = true)._1
+      } else dupStarRounds(canonical, maxIters, alreadyCanonical = true)
+        .state
     canonical.unpersist(false)
     out
   }
@@ -545,11 +545,23 @@ object Dedup {
     nodes.sorted.map(n => (n, find(n))).toSeq
   }
 
-  /** [[dupClusters]] plus the number of (large-star, small-star)
-    * rounds executed — exposed for the iteration-count spec. */
+  /** [[dupClusters]]' distributed tier with its round count — the
+    * (result, rounds) view of [[dupStarRounds]] for the round-count
+    * spec. */
   private[graft] def dupClustersWithRounds(pairs: DataFrame,
       maxIters: Int = 20, alreadyCanonical: Boolean = false)
       : (DataFrame, Int) = {
+    val run = dupStarRounds(pairs, maxIters, alreadyCanonical)
+    (run.state, run.rounds)
+  }
+
+  /** [[dupClusters]]' distributed tier: large-star/small-star rounds
+    * to an edge-set fixpoint on the [[Iterate]] device, at most
+    * `maxIters` of them. The result carries the (node, component
+    * minimum) frame, the rounds run and whether the fixpoint was
+    * reached. */
+  private[graft] def dupStarRounds(pairs: DataFrame, maxIters: Int,
+      alreadyCanonical: Boolean): Iterate.Result[DataFrame] = {
     // canonical undirected edges: a < b, dedup'd, no self-loops
     // (callers holding a persisted canonical frame pass it through)
     val canonical =
@@ -576,7 +588,7 @@ object Dedup {
     // long before execution would (measured: OOM at round ~6 on a
     // 63-edge chain). Checkpointing replaces each round's plan with a
     // LogicalRDD leaf, keeping plan size constant across rounds.
-    var edges = canonical.coalesce(p).localCheckpoint(true)
+    val edges0 = canonical.coalesce(p).localCheckpoint(true)
     canonical.unpersist(false)
 
     // Large-star: every node u connects its LARGER neighbors to
@@ -613,34 +625,30 @@ object Dedup {
         sum(xxhash64(col("a"), col("b")).cast("decimal(38,0)"))).head
       (r.getLong(0), String.valueOf(r.get(1)))
     }
-    var fp = fingerprint(edges)
-    var converged = nEdges == 0L
-    var rounds = 0
     // One checkpoint + one cached intermediate PER ROUND: the
     // half-round result is persisted so smallStar's two references
     // evaluate largeStar once, and the round result is eagerly
     // checkpointed so the next round starts from a leaf (see above —
     // lazily chained rounds cost 2^k evaluations AND 8^k plan nodes).
     // Superseded round blocks are graph-sized and reclaimed by the
-    // ContextCleaner once the old `edges` reference is dropped.
-    while (!converged && rounds < maxIters) {
-      val ls = largeStar(edges).persist()
-      val next = smallStar(ls).localCheckpoint(true)
-      ls.unpersist(false)
-      val nfp = fingerprint(next)
-      converged = nfp == fp
-      fp = nfp
-      edges = next
-      rounds += 1
+    // ContextCleaner once the old `edges` reference is dropped. An
+    // empty graph stops after one no-op round.
+    val run = Iterate(edges0, Iterate.UntilKey(maxIters, fingerprint)) {
+      edges =>
+        val ls = largeStar(edges).persist()
+        val next = smallStar(ls).localCheckpoint(true)
+        ls.unpersist(false)
+        next
     }
     // A graph that has not converged in maxIters rounds (diameter
     // > 2^maxIters — pathological by construction) would return
     // partially merged stars — surface it rather than stay silent.
-    if (!converged)
+    if (!run.converged)
       System.err.println(
         s"[graft] dupClusters: star rounds did NOT reach an edge-set " +
           s"fixpoint in $maxIters iterations; returned clusters may be " +
           "partially merged")
+    val edges = run.state
     // At the fixpoint the graph is a star forest, so every node's
     // component min is min(neighbors ∪ self) — one symmetric groupBy.
     // Materialize and truncate lineage: the plan spans every round,
@@ -655,7 +663,7 @@ object Dedup {
       .orderBy(col("doc_id"))
       .localCheckpoint(true)
     edges.unpersist(false)
-    (out, rounds)
+    run.copy(state = out)
   }
 
   /** Temporal sessionization as connected components — the oracle-

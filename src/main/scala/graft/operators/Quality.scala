@@ -175,14 +175,13 @@ object Quality {
     * the model. */
   private def gdRounds(feat: DataFrame, n: Double, dim: Int,
       rounds: Int, lr: Double): Array[Double] = {
-    var w = new Array[Double](dim + 1)
+    val w0 = new Array[Double](dim + 1)
     // No training rows (empty corpus, or a sampleFraction whose
     // hash-slice selected zero docs): the gradient agg would return
     // nulls and n=0 would divide — the zero-init model is the
     // defined answer (sigmoid(0) = 0.5 for every doc).
-    if (n == 0) return w
-    var r = 0
-    while (r < rounds) {
+    if (n == 0) w0
+    else Iterate(w0, Iterate.Fixed[Array[Double]](rounds)) { w =>
       val wLit = array(w.map(lit(_)): _*)
       val margin = aggregate(
         zip_with(col("x"), wLit, (x, wi) => x * wi),
@@ -194,10 +193,8 @@ object Quality {
         .select((p - col("y")).as("err"), col("x"))
         .agg(sums.head, sums.tail: _*)
         .head()
-      w = w.indices.map(i => w(i) - lr * row.getDouble(i) / n).toArray
-      r += 1
-    }
-    w
+      w.indices.map(i => w(i) - lr * row.getDouble(i) / n).toArray
+    }.state
   }
 
   /** Deterministic hash-sample predicate over doc_id — the 100 TB
@@ -311,10 +308,9 @@ object Quality {
     * An empty misclassified set converges early; the unrolled oracle
     * keeps summing zero updates, which is the same fixed point. */
   private def perceptronRounds(feat: DataFrame, dim: Int,
-      rounds: Int): Array[Long] = {
-    var w = new Array[Long](dim + 1)
-    var r = 0
-    while (r < rounds) {
+      rounds: Int): Array[Long] =
+    Iterate(new Array[Long](dim + 1),
+        Iterate.UntilKey(rounds, (w: Array[Long]) => w.toSeq)) { w =>
       val wLit = array(w.map(lit(_)): _*)
       val margin = aggregate(
         zip_with(col("x"), wLit, (x, wi) => x * wi),
@@ -326,12 +322,11 @@ object Quality {
         .filter(col("y2") * col("mg") <= 0)
         .agg(sums.head, sums.tail: _*)
         .head()
-      if (row.isNullAt(0)) return w // no misclassified docs: converged
-      w = w.indices.map(i => w(i) + row.getLong(i)).toArray
-      r += 1
-    }
-    w
-  }
+      // no misclassified docs: w stays put and the key-stable stop ends
+      // the loop (a zero update is a fixed point either way)
+      if (row.isNullAt(0)) w
+      else w.indices.map(i => w(i) + row.getLong(i)).toArray
+    }.state
 
   /** PORTABLE deterministic hash-slice over doc_id — the same 100 TB
     * training knob as [[sampledPredicate]], built from the md5-prefix

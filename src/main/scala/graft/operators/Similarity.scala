@@ -1860,10 +1860,8 @@ object Similarity {
     * nodes and mass is conserved by construction.
     *
     * Each round is one equi-join (edges ⨝ ranks on src) + one
-    * dst-keyed aggregate; rounds `localCheckpoint` LAZILY — lineage
-    * still truncates to one round deep (the [[Dedup.dupClusters]]
-    * round discipline), but the rounds materialize inside the final
-    * action instead of one scheduled job each. The neighbor sum is a 0.0-seeded fold over the
+    * dst-keyed aggregate, checkpointed lazily (the [[Iterate]] round
+    * discipline). The neighbor sum is a 0.0-seeded fold over the
     * src-SORTED contribution list — float addition is order-dependent,
     * and pinning the order is what makes the result bit-identical to
     * the DuckDB oracle's identical fold (the q127/q140 determinism
@@ -1873,25 +1871,25 @@ object Similarity {
     * algebra. Per-node state is degree-bounded, shuffles are edge-
     * sized — the standard distributed PageRank budget. */
   def pageRank(embeddings: DataFrame, threshold: Double = 0.3,
-      iters: Int = 3, damping: Double = 0.85): DataFrame = {
-    val pairs = similarPairs(embeddings, threshold)
-      .select(col("d1"), col("d2"))
-    val edges = pairs.union(pairs.select(col("d2"), col("d1")))
-      .toDF("src", "dst")
-    // lazy checkpoints: lineage still truncates to a LogicalRDD per
-    // round, but the rounds materialize inside the ONE final action
-    // instead of one scheduled job each (the n-count below pins the
-    // shared withDeg frame first, so rounds read its cache)
+      iters: Int = 3, damping: Double = 0.85): DataFrame =
+    pageRankRun(embeddings, threshold, damping, Iterate.Fixed(iters)).state
+
+  /** [[pageRank]] in any [[Iterate]] mode. */
+  private[graft] def pageRankRun(embeddings: DataFrame, threshold: Double,
+      damping: Double, mode: Iterate.Mode[DataFrame])
+      : Iterate.Result[DataFrame] = {
+    val edges = symmetricEdges(similarPairs(embeddings, threshold))
+    // the n-count below pins the shared withDeg frame first, so the
+    // lazy rounds read its cache
     val withDeg = edges
       .join(edges.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src")
       .localCheckpoint(false)
     val n = withDeg.select(col("src")).distinct().count()
-    var pr = withDeg.select(col("src").as("id")).distinct()
+    val pr0 = withDeg.select(col("src").as("id")).distinct()
       .select(col("id"), lit(1.0 / n).as("pr"))
       .localCheckpoint(false)
-    var it = 0
-    while (it < iters) {
-      pr = withDeg.join(pr, withDeg("src") === pr("id"))
+    Iterate(pr0, mode) { pr =>
+      withDeg.join(pr, withDeg("src") === pr("id"))
         .select(col("dst"), col("src"),
           (col("pr") / col("deg")).as("contrib"))
         .groupBy(col("dst"))
@@ -1901,10 +1899,16 @@ object Similarity {
         .select(col("dst").as("id"),
           (lit((1.0 - damping) / n) + lit(damping) * col("s")).as("pr"))
         .localCheckpoint(false)
-      it += 1
-    }
-    pr.select(col("id").as("vec_id"), col("pr").as("pagerank"))
-      .orderBy(col("vec_id"))
+    }.map(_.select(col("id").as("vec_id"), col("pr").as("pagerank"))
+      .orderBy(col("vec_id")))
+  }
+
+  /** Both directions of each (d1, d2) pair as (src, dst): the edge
+    * list every graph operator here walks. Callers choose its
+    * checkpoint. */
+  private[graft] def symmetricEdges(pairs: DataFrame): DataFrame = {
+    val p = pairs.select(col("d1"), col("d2"))
+    p.union(p.select(col("d2"), col("d1"))).toDF("src", "dst")
   }
 
   /** Multi-source BFS hop distances on the similarity graph — the
@@ -1919,32 +1923,40 @@ object Similarity {
     * against a recursive-CTE oracle with no float caveats at all.
     *
     * Scale: the O(n²) pair join materializes ONCE (localCheckpoint)
-    * and each round is one equi-join on src + one min groupBy —
-    * frontier-paced, edge-sized shuffles, lineage one round deep (the
-    * [[pageRank]]/[[Dedup.dupClustersWithRounds]] round discipline).
-    * At 100 TB the edge list is the persisted similarity-graph
-    * artifact and rounds run on it unchanged. */
+    * and each round is one [[bfsRelax]] — frontier-paced, edge-sized
+    * shuffles (the [[Iterate]] round discipline). At 100 TB the edge
+    * list is the persisted similarity-graph artifact and rounds run
+    * on it unchanged. */
   def bfsHops(embeddings: DataFrame, threshold: Double = 0.3,
-      nSources: Int = 3, maxHops: Int = 4): DataFrame = {
-    val pairs = similarPairs(embeddings, threshold)
-      .select(col("d1"), col("d2"))
-    val edges = pairs.union(pairs.select(col("d2"), col("d1")))
-      .toDF("src", "dst").localCheckpoint(false)
-    var dist = embeddings.filter(col("vec_id") < nSources)
+      nSources: Int = 3, maxHops: Int = 4): DataFrame =
+    bfsHopsRun(embeddings, threshold, nSources, Iterate.Fixed(maxHops))
+      .state
+
+  /** [[bfsHops]] in any [[Iterate]] mode. */
+  private[graft] def bfsHopsRun(embeddings: DataFrame, threshold: Double,
+      nSources: Int, mode: Iterate.Mode[DataFrame])
+      : Iterate.Result[DataFrame] = {
+    val edges = symmetricEdges(similarPairs(embeddings, threshold))
+      .localCheckpoint(false)
+    val dist = embeddings.filter(col("vec_id") < nSources)
       .select(col("vec_id").as("id"), lit(0L).as("hops"))
       .localCheckpoint(false)
-    var r = 0
-    while (r < maxHops) {
-      dist = dist.join(edges, dist("id") === edges("src"))
-        .select(col("dst").as("id"), (col("hops") + 1L).as("hops"))
-        .union(dist)
-        .groupBy(col("id")).agg(min(col("hops")).as("hops"))
-        .localCheckpoint(false)
-      r += 1
-    }
-    dist.select(col("id").as("vec_id"), col("hops"))
-      .orderBy(col("vec_id"))
+    Iterate(dist, mode)(bfsRelax(edges, "id", eager = false))
+      .map(_.select(col("id").as("vec_id"), col("hops"))
+        .orderBy(col("vec_id")))
   }
+
+  /** One BFS relaxation round over (`id`, hops) distances: one edge
+    * equi-join on src + one min groupBy, checkpointed `eager`ly or
+    * lazily (see [[Iterate]]). Shared by [[bfsHops]] and
+    * [[CorpusSignals.contaminationBlastRadius]]. */
+  private[graft] def bfsRelax(edges: DataFrame, id: String,
+      eager: Boolean)(dist: DataFrame): DataFrame =
+    dist.join(edges, dist(id) === edges("src"))
+      .select(col("dst").as(id), (col("hops") + 1L).as("hops"))
+      .union(dist)
+      .groupBy(col(id)).agg(min(col("hops")).as("hops"))
+      .localCheckpoint(eager)
 
   /** k-core decomposition by degree peeling — the graph-mining density
     * filter (Seidman 1983): repeatedly delete nodes of degree < k
@@ -1963,29 +1975,28 @@ object Similarity {
     *
     * Scale: each round is one degree aggregate + two semi joins, all
     * keyed on node id — edge-sized shuffles, no global state, and the
-    * edge set only shrinks. Rounds localCheckpoint lazily — lineage
-    * truncates one round deep, rounds materialize inside the final
-    * action (the [[pageRank]] round discipline). */
+    * edge set only shrinks. Rounds checkpoint lazily (the [[Iterate]]
+    * round discipline). */
   def kCore(embeddings: DataFrame, threshold: Double = 0.3,
-      k: Int = 2, rounds: Int = 4): DataFrame = {
-    val pairs = similarPairs(embeddings, threshold)
-      .select(col("d1"), col("d2"))
-    var edges = pairs.union(pairs.select(col("d2"), col("d1")))
-      .toDF("src", "dst").localCheckpoint(false)
-    var r = 0
-    while (r < rounds) {
+      k: Int = 2, rounds: Int = 4): DataFrame =
+    kCoreRun(embeddings, threshold, k, Iterate.Fixed(rounds)).state
+
+  /** [[kCore]] in any [[Iterate]] mode. */
+  private[graft] def kCoreRun(embeddings: DataFrame, threshold: Double,
+      k: Int, mode: Iterate.Mode[DataFrame]): Iterate.Result[DataFrame] = {
+    val edges = symmetricEdges(similarPairs(embeddings, threshold))
+      .localCheckpoint(false)
+    Iterate(edges, mode) { edges =>
       val keep = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("src").as("id"))
-      edges = edges
+      edges
         .join(keep, edges("src") === keep("id"), "left_semi")
         .join(keep, edges("dst") === keep("id"), "left_semi")
         .localCheckpoint(false)
-      r += 1
-    }
-    edges.groupBy(col("src")).agg(count(lit(1)).as("core_degree"))
+    }.map(_.groupBy(col("src")).agg(count(lit(1)).as("core_degree"))
       .filter(col("core_degree") >= k)
       .select(col("src").as("vec_id"), col("core_degree"))
-      .orderBy(col("vec_id"))
+      .orderBy(col("vec_id")))
   }
 
   /** Label-propagation COMMUNITIES on the similarity graph (Raghavan
@@ -2003,30 +2014,33 @@ object Similarity {
     * Scale: each round is one edge equi-join + a (node, label)-keyed
     * count (map-side combinable) + a partial-aggregatable
     * min(struct(−cnt, label)) argmax — edge-sized shuffles, no
-    * window, lineage one round deep via the localCheckpoint round
-    * discipline. */
+    * window (the [[Iterate]] round discipline). */
   def labelPropagation(embeddings: DataFrame, threshold: Double = 0.3,
-      rounds: Int = 3): DataFrame = {
-    val pairs = similarPairs(embeddings, threshold)
-      .select(col("d1"), col("d2"))
-    val edges = pairs.union(pairs.select(col("d2"), col("d1")))
-      .toDF("src", "dst").localCheckpoint(false)
-    lpaLabels(edges, rounds)
-      .select(col("id").as("vec_id"), col("label").as("community"))
-      .orderBy(col("vec_id"))
-  }
+      rounds: Int = 3): DataFrame =
+    labelPropagationRun(embeddings, threshold, Iterate.Fixed(rounds)).state
+
+  /** [[labelPropagation]] in any [[Iterate]] mode. Synchronous LPA
+    * can 2-cycle (Raghavan 2007 §3), which an [[Iterate.UntilPair]]
+    * test catches against the round before last. */
+  private[graft] def labelPropagationRun(embeddings: DataFrame,
+      threshold: Double, mode: Iterate.Mode[DataFrame])
+      : Iterate.Result[DataFrame] =
+    lpaLabels(symmetricEdges(similarPairs(embeddings, threshold))
+      .localCheckpoint(false), mode)
+      .map(_.select(col("id").as("vec_id"), col("label").as("community"))
+        .orderBy(col("vec_id")))
 
   /** The LPA recurrence over an ALREADY-materializable edge frame —
     * shared by [[labelPropagation]] and [[communityModularity]] so
     * the quality card reuses the detector's edge checkpoint instead
     * of paying the similarity pair join twice. */
-  private def lpaLabels(edges: DataFrame, rounds: Int): DataFrame = {
-    var labels = edges.select(col("src").as("id")).distinct()
+  private def lpaLabels(edges: DataFrame, mode: Iterate.Mode[DataFrame])
+      : Iterate.Result[DataFrame] = {
+    val labels = edges.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("label"))
       .localCheckpoint(false)
-    var r = 0
-    while (r < rounds) {
-      labels = edges.join(labels, edges("dst") === labels("id"))
+    Iterate(labels, mode) { labels =>
+      edges.join(labels, edges("dst") === labels("id"))
         .groupBy(col("src"), col("label"))
         .agg(count(lit(1)).as("cnt"))
         .groupBy(col("src"))
@@ -2034,180 +2048,7 @@ object Similarity {
           .as("b"))
         .select(col("src").as("id"), col("b.l").as("label"))
         .localCheckpoint(false)
-      r += 1
     }
-    labels
-  }
-
-  // -------- convergence-adaptive tiers of the iterative graph family
-  // (r13 verdict item 6). The registered tiers run FIXED unrolled
-  // rounds because the oracle must replay the recurrence; a 100 TB
-  // graph job runs TO A CONVERGENCE TEST instead. These tiers iterate
-  // the IDENTICAL per-round recurrence and collect ONE driver scalar
-  // per round (the q82 changed-count discipline — parallelism-sized,
-  // never data-sized) to decide when to stop, so the fixed-round tier
-  // is literally their prefix: converged result == fixed-round result
-  // at the converged round count, bit-for-bit (GraphConvergenceSpec).
-  // Each returns (result, roundsRun); `maxRounds` bounds pathological
-  // graphs (synchronous LPA can 2-cycle; BFS depth is diameter-bounded
-  // but the diameter is unknown up front).
-
-  /** [[kCore]] peeled to its FIXED POINT: stop when a round deletes
-    * no edge (the surviving-edge count is the per-round scalar). */
-  def kCoreConvergedWithRounds(embeddings: DataFrame,
-      threshold: Double = 0.3, k: Int = 2, maxRounds: Int = 64)
-      : (DataFrame, Int) = {
-    val pairs = similarPairs(embeddings, threshold)
-      .select(col("d1"), col("d2"))
-    var edges = pairs.union(pairs.select(col("d2"), col("d1")))
-      .toDF("src", "dst").localCheckpoint(false)
-    var nEdges = edges.count()
-    var r = 0
-    var converged = false
-    while (!converged && r < maxRounds) {
-      val keep = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("src").as("id"))
-      edges = edges
-        .join(keep, edges("src") === keep("id"), "left_semi")
-        .join(keep, edges("dst") === keep("id"), "left_semi")
-        .localCheckpoint(false)
-      val n2 = edges.count()
-      converged = n2 == nEdges
-      nEdges = n2
-      r += 1
-    }
-    (edges.groupBy(col("src")).agg(count(lit(1)).as("core_degree"))
-      .filter(col("core_degree") >= k)
-      .select(col("src").as("vec_id"), col("core_degree"))
-      .orderBy(col("vec_id")), r)
-  }
-
-  /** [[labelPropagation]] run until the labeling reaches a FIXED
-    * POINT or the classic synchronous-LPA 2-CYCLE (bipartite-ish
-    * regions flip between two labelings forever — Raghavan 2007 §3
-    * notes exactly this; comparing against the round-before-last is
-    * the standard deterministic stop). Two changed-node counts per
-    * round (vs last, vs last-but-one) are the collected scalars. On
-    * either stop the result is whatever the recurrence produced at
-    * round r, so it still equals the fixed tier at r — and the
-    * period-2 invariant `converged == fixed(r + 2)` holds in both
-    * cases (spec-pinned). */
-  def labelPropagationConvergedWithRounds(embeddings: DataFrame,
-      threshold: Double = 0.3, maxRounds: Int = 32)
-      : (DataFrame, Int) = {
-    val pairs = similarPairs(embeddings, threshold)
-      .select(col("d1"), col("d2"))
-    val edges = pairs.union(pairs.select(col("d2"), col("d1")))
-      .toDF("src", "dst").localCheckpoint(false)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("label"))
-      .localCheckpoint(false)
-    var prevPrev: DataFrame = null
-    var r = 0
-    var stop = false
-    while (!stop && r < maxRounds) {
-      val next = edges.join(labels, edges("dst") === labels("id"))
-        .groupBy(col("src"), col("label"))
-        .agg(count(lit(1)).as("cnt"))
-        .groupBy(col("src"))
-        .agg(min(struct((-col("cnt")).as("nc"), col("label").as("l")))
-          .as("b"))
-        .select(col("src").as("id"), col("b.l").as("label"))
-        .localCheckpoint(false)
-      def changedVs(old: DataFrame): Long =
-        next.alias("n").join(old.alias("p"), col("n.id") === col("p.id"))
-          .filter(col("n.label") =!= col("p.label")).count()
-      val changed = changedVs(labels)
-      val cycled = prevPrev != null && changedVs(prevPrev) == 0L
-      prevPrev = labels
-      labels = next
-      stop = changed == 0L || cycled
-      r += 1
-    }
-    (labels.select(col("id").as("vec_id"), col("label").as("community"))
-      .orderBy(col("vec_id")), r)
-  }
-
-  /** [[pageRank]] iterated until max |Δpr| < `tol` (the per-round
-    * scalar); same damped fold-exact recurrence, so the run is the
-    * fixed-round tier's prefix bit-for-bit. */
-  def pageRankConvergedWithRounds(embeddings: DataFrame,
-      threshold: Double = 0.3, damping: Double = 0.85,
-      tol: Double = 1e-7, maxRounds: Int = 200): (DataFrame, Int) = {
-    val pairs = similarPairs(embeddings, threshold)
-      .select(col("d1"), col("d2"))
-    val edges = pairs.union(pairs.select(col("d2"), col("d1")))
-      .toDF("src", "dst")
-    val withDeg = edges
-      .join(edges.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src")
-      .persist()
-    val n = withDeg.select(col("src")).distinct().count()
-    var pr = withDeg.select(col("src").as("id")).distinct()
-      .select(col("id"), lit(1.0 / n).as("pr"))
-      .localCheckpoint(false)
-    var r = 0
-    var converged = false
-    while (!converged && r < maxRounds) {
-      val next = withDeg.join(pr, withDeg("src") === pr("id"))
-        .select(col("dst"), col("src"),
-          (col("pr") / col("deg")).as("contrib"))
-        .groupBy(col("dst"))
-        .agg(aggregate(
-          array_sort(collect_list(struct(col("src"), col("contrib")))),
-          lit(0.0), (acc, x) => acc + x.getField("contrib")).as("s"))
-        .select(col("dst").as("id"),
-          (lit((1.0 - damping) / n) + lit(damping) * col("s")).as("pr"))
-        .localCheckpoint(false)
-      // max over an EMPTY graph's zero rows is NULL — an empty frame
-      // is its own fixed point (the fixed-round tier returns it
-      // gracefully; the converged tier must too, not NPE)
-      val deltaRow = next.alias("n")
-        .join(pr.alias("p"), col("n.id") === col("p.id"))
-        .agg(max(abs(col("n.pr") - col("p.pr")))).head
-      val delta = if (deltaRow.isNullAt(0)) 0.0 else deltaRow.getDouble(0)
-      pr = next
-      converged = delta < tol
-      r += 1
-    }
-    withDeg.unpersist(false)
-    (pr.select(col("id").as("vec_id"), col("pr").as("pagerank"))
-      .orderBy(col("vec_id")), r)
-  }
-
-  /** [[bfsHops]] relaxed until the distance frame reaches its fixed
-    * point (reached-count + hop-sum is the per-round scalar pair —
-    * both monotone, so unchanged together means converged). */
-  def bfsConvergedWithRounds(embeddings: DataFrame,
-      threshold: Double = 0.3, nSources: Int = 3, maxRounds: Int = 64)
-      : (DataFrame, Int) = {
-    val pairs = similarPairs(embeddings, threshold)
-      .select(col("d1"), col("d2"))
-    val edges = pairs.union(pairs.select(col("d2"), col("d1")))
-      .toDF("src", "dst").localCheckpoint(false)
-    var dist = embeddings.filter(col("vec_id") < nSources)
-      .select(col("vec_id").as("id"), lit(0L).as("hops"))
-      .localCheckpoint(false)
-    def scalar(d: DataFrame): (Long, Long) = {
-      val row = d.agg(count(lit(1)), coalesce(sum(col("hops")), lit(0L)))
-        .head
-      (row.getLong(0), row.getLong(1))
-    }
-    var prev = scalar(dist)
-    var r = 0
-    var converged = false
-    while (!converged && r < maxRounds) {
-      dist = dist.join(edges, dist("id") === edges("src"))
-        .select(col("dst").as("id"), (col("hops") + 1L).as("hops"))
-        .union(dist)
-        .groupBy(col("id")).agg(min(col("hops")).as("hops"))
-        .localCheckpoint(false)
-      val cur = scalar(dist)
-      converged = cur == prev
-      prev = cur
-      r += 1
-    }
-    (dist.select(col("id").as("vec_id"), col("hops"))
-      .orderBy(col("vec_id")), r)
   }
 
   /** The unrolled CTE chain of [[labelPropagation]] ending in
@@ -2264,11 +2105,9 @@ object Similarity {
     // ONE similarity pair join feeds both the detector and the card
     // (the detector used to run its own — two O(n²) passes for one
     // query); same edge set, same recurrence, identical labels
-    val pairs = similarPairs(embeddings, threshold)
-      .select(col("d1"), col("d2"))
-    val edges = pairs.union(pairs.select(col("d2"), col("d1")))
-      .toDF("src", "dst").localCheckpoint(false)
-    val comm = lpaLabels(edges, rounds)
+    val edges = symmetricEdges(similarPairs(embeddings, threshold))
+      .localCheckpoint(false)
+    val comm = lpaLabels(edges, Iterate.Fixed(rounds)).state
       .select(col("id"), col("label").as("community"))
     val eTotal = edges.agg(count(lit(1)).as("e_total"))
     // plain node-keyed equi-joins (comm is node-sized — never
@@ -2745,10 +2584,8 @@ object Similarity {
     * never are. */
   def degreeAssortativity(embeddings: DataFrame,
       threshold: Double = 0.3): DataFrame = {
-    val pairs = similarPairs(embeddings, threshold)
-      .select(col("d1"), col("d2"))
-    val edges = pairs.union(pairs.select(col("d2"), col("d1")))
-      .toDF("src", "dst").localCheckpoint(false)
+    val edges = symmetricEdges(similarPairs(embeddings, threshold))
+      .localCheckpoint(false)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("dg"))
     edges
       .join(deg.select(col("src"), col("dg").as("dx")), "src")

@@ -1,18 +1,20 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Similarity
+import graft.operators.{Iterate, Similarity}
 
-/** Convergence-adaptive tiers of the iterative graph family (r13
+/** Convergence-adaptive runs of the iterative graph family (r13
   * verdict item 6): the registered tiers run FIXED unrolled rounds
   * (the oracle replays the recurrence); a 100 TB job iterates to a
-  * convergence test. These specs pin the contract that makes both
-  * tiers one algorithm: the converged run is the fixed-round tier's
-  * PREFIX — its result equals the fixed tier at the converged round
-  * count, bit-for-bit — and the per-round driver state is one scalar
-  * (the q82 changed-count discipline), never data-sized.
+  * convergence test — the [[Iterate]] device's until-mode over the
+  * SAME step. These specs pin the contract that makes both modes one
+  * algorithm: the converged run is the fixed-round tier's PREFIX —
+  * its result equals the fixed tier at the converged round count,
+  * bit-for-bit — and the per-round driver state is one scalar (the
+  * q82 changed-count discipline), never data-sized.
   */
 class GraphConvergenceSpec extends AnyFunSuite {
   lazy val spark = SharedSession.spark
@@ -20,12 +22,27 @@ class GraphConvergenceSpec extends AnyFunSuite {
   private def emb = Tables(spark, "/root/testdata/sf0.001").embeddings
     .select(col("vec_id"), col("embedding"))
 
-  private def rows(df: org.apache.spark.sql.DataFrame) =
+  private def rows(df: DataFrame) =
     df.collect().map(_.toSeq).toSeq
+
+  // the per-round stop scalars: nodes whose (id, label) label changed
+  // between two labelings, and max |Δpr| between two rank frames (an
+  // empty graph's zero rows are their own fixed point)
+  private def changedLabels(a: DataFrame, b: DataFrame): Long =
+    a.alias("n").join(b.alias("p"), col("n.id") === col("p.id"))
+      .filter(col("n.label") =!= col("p.label")).count()
+
+  private def maxRankDelta(a: DataFrame, b: DataFrame): Double = {
+    val row = a.alias("n").join(b.alias("p"), col("n.id") === col("p.id"))
+      .agg(max(abs(col("n.pr") - col("p.pr")))).head
+    if (row.isNullAt(0)) 0.0 else row.getDouble(0)
+  }
 
   test("kCore converged == fixed-round tier at the converged count; " +
       "the fixed point really is fixed") {
-    val (converged, r) = Similarity.kCoreConvergedWithRounds(emb)
+    val run = Similarity.kCoreRun(emb, 0.3, 2,
+      Iterate.UntilKey(64, (e: DataFrame) => e.count()))
+    val (converged, r) = (run.state, run.rounds)
     assert(r >= 1 && r < 64, s"rounds=$r")
     assert(rows(converged) == rows(Similarity.kCore(emb, rounds = r)))
     // idempotence at the fixed point: one more fixed round changes
@@ -36,8 +53,11 @@ class GraphConvergenceSpec extends AnyFunSuite {
 
   test("labelPropagation converged == fixed-round tier; the period-2 " +
       "invariant holds (fixed point OR the classic sync-LPA 2-cycle)") {
-    val (converged, r) =
-      Similarity.labelPropagationConvergedWithRounds(emb)
+    val run = Similarity.labelPropagationRun(emb, 0.3,
+      Iterate.UntilPair(32, (twoBack: Option[DataFrame], prev: DataFrame,
+          next: DataFrame) => changedLabels(next, prev) == 0L ||
+        twoBack.exists(changedLabels(next, _) == 0L)))
+    val (converged, r) = (run.state, run.rounds)
     assert(r >= 1 && r < 32, s"rounds=$r")
     assert(rows(converged) ==
       rows(Similarity.labelPropagation(emb, rounds = r)))
@@ -50,8 +70,10 @@ class GraphConvergenceSpec extends AnyFunSuite {
 
   test("pageRank converged == fixed-round tier at the converged " +
       "count (same fold-exact recurrence, bit-for-bit)") {
-    val (converged, r) = Similarity.pageRankConvergedWithRounds(emb,
-      tol = 1e-3)
+    val run = Similarity.pageRankRun(emb, 0.3, 0.85,
+      Iterate.UntilPair(200, (_: Option[DataFrame], prev: DataFrame,
+          next: DataFrame) => maxRankDelta(next, prev) < 1e-3))
+    val (converged, r) = (run.state, run.rounds)
     assert(r >= 1 && r < 200, s"rounds=$r")
     assert(rows(converged) == rows(Similarity.pageRank(emb, iters = r)))
     // the registered 3-round tier is the SAME walk truncated earlier:
@@ -62,7 +84,13 @@ class GraphConvergenceSpec extends AnyFunSuite {
 
   test("bfs converged == fixed-round tier; distances are the true " +
       "BFS fixed point (one more hop changes nothing)") {
-    val (converged, r) = Similarity.bfsConvergedWithRounds(emb)
+    val run = Similarity.bfsHopsRun(emb, 0.3, 3,
+      Iterate.UntilKey(64, (d: DataFrame) => {
+        val row = d.agg(count(lit(1)), coalesce(sum(col("hops")), lit(0L)))
+          .head
+        (row.getLong(0), row.getLong(1))
+      }))
+    val (converged, r) = (run.state, run.rounds)
     assert(r >= 1 && r < 64, s"rounds=$r")
     assert(rows(converged) == rows(Similarity.bfsHops(emb, maxHops = r)))
     assert(rows(converged) ==

@@ -941,6 +941,15 @@ class TextDedupSpec extends AnyFunSuite {
     assert(rounds <= 10, s"expected <= 10 star rounds on a 64-chain, got $rounds")
   }
 
+  test("dupClusters: a star-round cap below the chain's need reports " +
+      "converged = false") {
+    val pairs = (0L until 63L).map(i => (i, i + 1)).toDF("d1", "d2")
+    val run = Dedup.dupStarRounds(pairs, maxIters = 2,
+      alreadyCanonical = false)
+    assert(run.rounds == 2)
+    assert(!run.converged)
+  }
+
   test("dupClusters on the corpus dup graph: labels are component minima") {
     val pairs = graft.operators.Dedup.minhashDedup(
       Tables(spark, sf).documents)
