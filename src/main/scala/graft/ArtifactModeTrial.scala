@@ -45,16 +45,7 @@ object ArtifactModeTrial {
     val incDocs = docsS.filter(pmod(col("doc_id"), lit(10L)) === 3)
       .localCheckpoint()
 
-    def clock[A](f: => A): (Double, A) = {
-      val t0 = System.nanoTime(); val a = f
-      ((System.nanoTime() - t0) / 1e9, a)
-    }
-    def noop(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    def best2(f: => DataFrame): Double = {
-      def once = clock(noop(f))._1
-      math.min(once, once)
-    }
+    import Bench.{best2, clock}
     def home(p: String): String =
       Artifacts.tempDir(s"graft_amode_${p}_").resolve("a").toString
 

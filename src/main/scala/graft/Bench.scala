@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.util.control.NonFatal
 object Bench {
 
@@ -40,6 +40,27 @@ object Bench {
       System.err.println(
         s"[bench] warm-up q01_pricing_summary failed: ${e.getMessage}")
     }
+
+  /** Wall seconds of evaluating `f`, and its value. */
+  private[graft] def clock[A](f: => A): (Double, A) = {
+    val t0 = System.nanoTime(); val a = f
+    ((System.nanoTime() - t0) / 1e9, a)
+  }
+
+  /** Materialize `df` through the noop sink (every row produced,
+    * nothing written). */
+  private[graft] def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** The trials' clock: best-of-2 wall seconds of BUILDING `f` and
+    * materializing it through the noop sink. Construction sits inside
+    * the clock because several operators (describe, dup clustering,
+    * equi-depth offsets, the IVF/PQ tiers) legitimately collect or
+    * count model-sized results while the DataFrame is being built. */
+  private[graft] def best2(f: => DataFrame): Double = {
+    def once = clock(noop(f))._1
+    math.min(once, once)
+  }
 
   /** PAIRED-BENCH serve mode (`--serve`): read query names from stdin
     * one per line, run each against SPARK_GRAFT_SF_DIR through the
@@ -251,10 +272,18 @@ object Bench {
       s""","detail":"BENCH_DETAIL.json","sf":"$sfJson"}"""
   }
 
-  /** JSON string-content escaping for caller-supplied paths. */
+  /** JSON string-content escaping (the text between the quotes):
+    * quote and backslash, the short forms for LF, CR and TAB, and a
+    * four-hex-digit unicode escape for every other control char
+    * (< 0x20) — a raw control char in a path or in hand-written
+    * oracle SQL would otherwise make the reader's JSON parse fail.
+    * Verify's `oracle_sql.json` and Bench's stdout line share it. */
   private[graft] def jsonEscape(s: String): String = s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   }
@@ -262,7 +291,5 @@ object Bench {
   /** stdout-line byte budget: the 2000-char tail the driver reads the
     * line back from, minus the measured ~76-char sbt success trailer
     * that follows it, minus slack for locale drift in that trailer. */
-  private[graft] val LineBudget =
-    sys.env.get("SPARK_GRAFT_BENCH_LINE_BUDGET")
-      .flatMap(s => scala.util.Try(s.toInt).toOption).getOrElse(1800)
+  private[graft] val LineBudget = 1800
 }

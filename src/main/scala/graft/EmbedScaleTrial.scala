@@ -85,9 +85,9 @@ object EmbedScaleTrial {
     (TrialQueries.map(n => n -> SparkEntry.queries(n)) :+
         ("q310_wideband_16bit" -> wide) :+
         ("q315_wideband_16bit" -> wide315)).foreach { case (name, fn) =>
-      val base = time(spark, baseDir, fn)
-      val dense = time(spark, scaledDir, fn)
-      val sparse = time(spark, sparseDir, fn)
+      val base = Bench.best2(fn(spark, baseDir))
+      val dense = Bench.best2(fn(spark, scaledDir))
+      val sparse = Bench.best2(fn(spark, sparseDir))
       println(f"$name%-28s $base%8.2f $dense%8.2f $sparse%8.2f " +
         f"${dense / base}%5.1fx ${sparse / base}%5.1fx")
     }
@@ -105,8 +105,8 @@ object EmbedScaleTrial {
         .rpLshCandidates(emb, 32, 4, 10000).count()
       val c16 = operators.Similarity
         .rpLshCandidates(emb, 64, 4, 10000).count()
-      // the AUTO-sized width at THIS corpus size — what q318/
-      // rpLshPairsAuto actually runs; the row that shows the sizing
+      // the AUTO-sized width at THIS corpus size — what q318
+      // (portableRpPairsAuto) actually runs; the row that shows the sizing
       // rule keeping candidate volume true-pair-bounded at 10x
       val wAuto = operators.Similarity.signBandWidth(n)
       val cAuto = operators.Similarity
@@ -171,11 +171,7 @@ object EmbedScaleTrial {
       val base = base0.localCheckpoint()
       val nBase = base.count()
       val key = s"incEcon|$label|$scaledDir"
-      def clock[A](f: => A): (Double, A) = {
-        val t0 = System.nanoTime()
-        val a = f
-        ((System.nanoTime() - t0) / 1e9, a)
-      }
+      import Bench.{clock, noop}
       val (tBuild, table) = clock {
         Similarity.materializedIvfExactIndex(spark, base,
           key + "#incbase")
@@ -183,7 +179,7 @@ object EmbedScaleTrial {
       // steady-state serve (index pre-built): best-of-2
       def serveOnce: (Double, DataFrame) = clock {
         val df = Similarity.semDedupAgainstIndex(spark, inc, base, key)
-        df.write.format("noop").mode("overwrite").save()
+        noop(df)
         df
       }
       val (t1, df1) = serveOnce
@@ -209,10 +205,8 @@ object EmbedScaleTrial {
         key)
       tinyDf.collect()
       val tinyParts = partsOf(tinyDf)
-      val (tFused, _) = clock {
-        Similarity.semDedupExact(base.unionByName(inc))
-          .write.format("noop").mode("overwrite").save()
-      }
+      val (tFused, _) = clock(noop(
+        Similarity.semDedupExact(base.unionByName(inc))))
       println(f"$label%-12s $nBase%8d $tBuild%8.2f $tServe%8.2f " +
         f"$partsRead%4d/$allCells%-4d $tFused%8.2f  tiny10=" +
         f"$tinyParts%d/$allCells%d")
@@ -249,19 +243,6 @@ object EmbedScaleTrial {
     }
     reps.reduce(_ unionAll _)
       .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
-  }
-
-  /** Best-of-2 of construction + full materialization (the
-    * [[ScaleTrial]] clock — the IVF/PQ tiers run model-sized driver
-    * actions during construction). */
-  private def time(spark: SparkSession, dir: String,
-      fn: (SparkSession, String) => DataFrame): Double = {
-    def once: Double = {
-      val t0 = System.nanoTime()
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    math.min(once, once)
   }
 
   /** Idempotent scaled-twin build (embeddings grown, everything else

@@ -81,16 +81,7 @@ object IngestScaleTrial {
         embB.filter(!(pmod(col("vec_id"), lit(10L)) === 3 &&
           col("vec_id") < vecSpan))))
 
-    def clock[A](f: => A): (Double, A) = {
-      val t0 = System.nanoTime(); val a = f
-      ((System.nanoTime() - t0) / 1e9, a)
-    }
-    def noop(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    def best2(f: => DataFrame): Double = {
-      def once = clock(noop(f))._1
-      math.min(once, once)
-    }
+    import Bench.{best2, clock}
 
     def runCase(label: String, baseDocs0: DataFrame,
         baseEmb0: DataFrame, emit: Boolean): Unit = {

@@ -64,9 +64,9 @@ object MediaScaleTrial {
         f"${"x" + factor + "r_s"}%8s dense sparse")
       TrialQueries.foreach { name =>
         val fn = SparkEntry.queries(name)
-        val base = time(spark, baseDir, fn)
-        val dense = time(spark, denseDir, fn)
-        val sparse = time(spark, sparseDir, fn)
+        val base = Bench.best2(fn(spark, baseDir))
+        val dense = Bench.best2(fn(spark, denseDir))
+        val sparse = Bench.best2(fn(spark, sparseDir))
         println(f"$name%-24s $base%8.2f $dense%8.2f $sparse%8.2f " +
           f"${dense / base}%5.1fx ${sparse / base}%5.1fx")
       }
@@ -102,11 +102,7 @@ object MediaScaleTrial {
     * column is what every run used to pay. */
   private def artifactEconomics(spark: SparkSession, baseDir: String,
       denseDir: String, factor: Int): Unit = {
-    def clock(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def noop(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
+    import Bench.{best2, clock}
     println(f"${"cell"}%-26s ${"serve_s"}%8s ${"inline_s"}%9s")
     Seq(("base", baseDir), (s"x$factor", denseDir)).foreach {
       case (label, dir0) =>
@@ -116,7 +112,7 @@ object MediaScaleTrial {
         val fpDir = java.nio.file.Files
           .createTempDirectory("graft_mediafp_trial_").resolve("fp")
           .toString
-        val tBuild = clock {
+        val (tBuild, _) = clock {
           Multimodal.mediaFingerprintArtifact(spark, media, fpDir)
         }
         // the decode-and-fingerprint build is paid ONCE PER CORPUS,
@@ -138,24 +134,12 @@ object MediaScaleTrial {
             () => Multimodal.videoDedupFromArtifact(spark, fpDir),
             () => Multimodal.videoDedup(media)))
         tiers.foreach { case (tier, atRest, inline) =>
-          val tServe = math.min(clock(noop(atRest())),
-            clock(noop(atRest())))
-          val tInline = math.min(clock(noop(inline())),
-            clock(noop(inline())))
+          val tServe = best2(atRest())
+          val tInline = best2(inline())
           println(f"${label + "/" + tier}%-26s $tServe%8.2f " +
             f"$tInline%9.2f")
         }
     }
-  }
-
-  private def time(spark: SparkSession, dir: String,
-      fn: (SparkSession, String) => DataFrame): Double = {
-    def once: Double = {
-      val t0 = System.nanoTime()
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    math.min(once, once)
   }
 
   // ---- twin builders --------------------------------------------------

@@ -183,25 +183,11 @@ object ScaleTrial {
     println(f"${"query"}%-28s ${"base_s"}%8s ${"x" + factor + "_s"}%8s ratio")
     TrialQueries.filter(q => only.isEmpty || only(q)).foreach { name =>
       val fn = SparkEntry.queries(name)
-      val base = time(spark, baseDir, fn)
-      val scaled = time(spark, scaledDir, fn)
+      val base = Bench.best2(fn(spark, baseDir))
+      val scaled = Bench.best2(fn(spark, scaledDir))
       println(f"$name%-28s $base%8.2f $scaled%8.2f ${scaled / base}%5.1fx")
     }
     spark.stop()
-  }
-
-  /** Best-of-2 wall time of CONSTRUCTION + full materialization —
-    * several operators (describe, dup clustering, equi-depth offsets)
-    * legitimately run model-sized driver actions while the DataFrame
-    * is being built, so construction must sit inside the clock. */
-  private def time(spark: SparkSession, dir: String,
-      fn: (SparkSession, String) => DataFrame): Double = {
-    def once: Double = {
-      val t0 = System.nanoTime()
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    math.min(once, once)
   }
 
   /** Write the scaled twin of `baseDir` into `outDir` (idempotent —

@@ -15,11 +15,4 @@ object Scalars {
     // proportional to the LITERAL length argument, so a "big enough"
     // constant like 1000000 makes every row pay for a 1MB bound
     concat(upper(substring(c, 1, 1)), lower(c.substr(lit(2), length(c))))
-
-  /** Reference keeps `day` as a string (SURVEY.md §1.2); this is the
-    * opt-in normalization to a real date. try_* because under ANSI
-    * mode (the Spark 4 default) a plain to_date THROWS on the first
-    * malformed payload row — a crawler feed must degrade to null. */
-  def dayToDate(c: Column): Column =
-    try_to_timestamp(c, lit("yyyy-MM-dd")).cast("date")
 }

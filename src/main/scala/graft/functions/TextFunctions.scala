@@ -73,12 +73,6 @@ object TextFunctions {
   def jaccardSorted(aSorted: Column, bSorted: Column): Column =
     graft.plans.FastOps.sortedJaccard(aSorted, bSorted)
 
-  /** Token count via BPE-ish approximation: words plus punctuation
-    * runs. On the synthetic word bags this equals the word count; on
-    * real text it splits punctuation like a byte-pair pretokenizer. */
-  def approxTokenCount(text: Column): Column =
-    size(filter(split(text, """\s+|(?=[\p{Punct}])"""), t => t =!= ""))
-
   /** Heuristic quality score in [0,1]: type/token ratio (lexical
     * diversity), non-stopword mass, and a length prior. The exact
     * formula is mirrored in the DuckDB oracle — keep both in sync. */

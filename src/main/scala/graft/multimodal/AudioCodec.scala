@@ -63,10 +63,6 @@ object AudioCodec {
       sampleRate: Int = FixtureRate): Array[Byte] =
     encodeWav(Array.tabulate(nSamples)(fixtureSample(seed, _)), sampleRate)
 
-  /** Duration of an n-sample clip in milliseconds (floor). */
-  def durationMs(nSamples: Int, sampleRate: Int = FixtureRate): Long =
-    nSamples.toLong * 1000L / sampleRate
-
   /** Decode audio bytes to (samples, sampleRate); None for bytes no
     * installed reader accepts (corrupt media decode to NULL features
     * downstream, never task failures). Non-PCM16 inputs are converted

@@ -8,8 +8,8 @@ import javax.imageio.ImageIO
   * readers ship with every JRE — no external library needed). This is
   * the executor-side kernel the Multimodal operators call from inside
   * their `mapPartitions`/UDF column shapes: encode deterministic PNG
-  * fixtures, decode arbitrary image bytes, pool pixels to a fixed-size
-  * feature vector, and resize.
+  * fixtures, decode arbitrary image bytes, and pool pixels to a
+  * fixed-size feature vector.
   *
   * Everything here is per-row CPU work on bytes that are already local
   * to the task — nothing in this object touches Spark, so the operators
@@ -51,19 +51,6 @@ object ImageCodec {
         img.setRGB(x, y, fixturePixel(seed, x, y))
         x += 1
       }
-      y += 1
-    }
-    encodePng(img)
-  }
-
-  /** Encode a solid-color PNG — the known-answer spec fixture. */
-  def encodeSolidPng(w: Int, h: Int, r: Int, g: Int, b: Int): Array[Byte] = {
-    val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
-    val rgb = (r << 16) | (g << 8) | b
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) { img.setRGB(x, y, rgb); x += 1 }
       y += 1
     }
     encodePng(img)
@@ -134,31 +121,6 @@ object ImageCodec {
   /** Decode + pool in one call; None when the bytes don't decode. */
   def featureFromBytes(bytes: Array[Byte], dim: Int): Option[Array[Float]] =
     decode(bytes).map(pooledFeature(_, dim))
-
-  /** Real resize: decode, scale the longest side down to `maxSide`
-    * (never up), re-encode as PNG. Returns (bytes, w, h); None when
-    * the input doesn't decode. */
-  def resize(bytes: Array[Byte], maxSide: Int)
-      : Option[(Array[Byte], Int, Int)] =
-    decode(bytes).map { img =>
-      val w = img.getWidth
-      val h = img.getHeight
-      val scale = math.min(1.0, maxSide.toDouble / math.max(w, h))
-      val nw = math.max(1, math.round(w * scale).toInt)
-      val nh = math.max(1, math.round(h * scale).toInt)
-      if (nw == w && nh == h) (encodePng(img), w, h)
-      else {
-        val dst = new BufferedImage(nw, nh, BufferedImage.TYPE_INT_RGB)
-        val g2 = dst.createGraphics()
-        try {
-          g2.setRenderingHint(
-            java.awt.RenderingHints.KEY_INTERPOLATION,
-            java.awt.RenderingHints.VALUE_INTERPOLATION_NEAREST_NEIGHBOR)
-          g2.drawImage(img, 0, 0, nw, nh, null)
-        } finally g2.dispose()
-        (encodePng(dst), nw, nh)
-      }
-    }
 
   /** 64-bit average hash (aHash) of a decoded image: pool Rec.709
     * integer luminance (2126 R + 7152 G + 722 B) onto an 8x8 cell

@@ -141,20 +141,6 @@ object Multimodal {
         .otherwise(hashFeature(col("bytes"), dim)).as("feature"))
   }
 
-  private def resizeUdf(maxSide: Int) =
-    udf((b: Array[Byte]) => ImageCodec.resize(b, maxSide))
-
-  /** Real resize, kind=image only: ImageIO decode -> scale longest
-    * side down to `maxSide` -> re-encode PNG. Undecodable bytes yield
-    * NULL dims/bytes. Narrow map-side projection. */
-  def resizeImages(media: DataFrame, maxSide: Int): DataFrame =
-    media.filter(col("kind") === "image")
-      .select(col("media_id"), resizeUdf(maxSide)(col("bytes")).as("r"))
-      .select(col("media_id"),
-        col("r._2").as("new_width"),
-        col("r._3").as("new_height"),
-        col("r._1").as("bytes"))
-
   /** REAL frame sampling for video: parse the container once per
     * clip, extract the frame under each sampled timestamp, decode it
     * with ImageIO, and emit (frame index, timestamp, SHA-256 of the
@@ -292,7 +278,7 @@ object Multimodal {
     * so the inline tiers (hash straight off the decode UDF) and the
     * at-rest tiers (hash read from the fingerprint artifact) run the
     * IDENTICAL decision and cannot drift. */
-  private def fingerprintDedup(hashes0: DataFrame, hashCol: String,
+  private[graft] def fingerprintDedup(hashes0: DataFrame, hashCol: String,
       maxHamming: Int, maxBucket: Int): DataFrame = {
     val hashes = hashes0.filter(col(hashCol).isNotNull)
     val pairs = graft.operators.Dedup.hammingPairs(
@@ -531,19 +517,6 @@ object Multimodal {
       withDeltas(s, dir, "image").select(col("media_id"), col("ahash")),
       "ahash", maxHamming, maxBucket)
 
-  /** [[audioDedupFromArtifact]] over (artifact + committed deltas). */
-  def audioDedupFromAppendedArtifact(s: SparkSession, dir: String,
-      maxHamming: Int = 3, maxBucket: Int = 10000): DataFrame =
-    fingerprintDedup(withDeltas(s, dir, "audio"), "afp", maxHamming,
-      maxBucket)
-
-  /** [[videoDedupFromArtifact]] over (artifact + committed deltas). */
-  def videoDedupFromAppendedArtifact(s: SparkSession, dir: String,
-      maxHamming: Int = 3, minFrac: Double = 0.9,
-      maxBucket: Int = 10000): DataFrame =
-    videoDedupFromFrames(withDeltas(s, dir, "video_frames"), maxHamming,
-      minFrac, maxBucket)
-
   /** [[imageDedup]] from the at-rest fingerprint artifact — zero
     * decodes, media bytes untouched. */
   def imageDedupFromArtifact(s: SparkSession, dir: String,
@@ -629,14 +602,14 @@ object Multimodal {
       .filter(col("matched") >= ceil(lit(minFrac) * col("n")))
       .select(col("inc_id"), col("base_id"))
 
-  /** The probe core over EXPLICIT base fingerprint frames — shared by
-    * the at-rest screen ([[mediaAdmissionScreen]]) and the inline
-    * twin ([[mediaAdmissionScreenInline]]) so the two cannot drift.
-    * Returns one row per DUPLICATE increment item:
-    * (media_id, media_dup_of = min matching base id). */
-  private def mediaAdmissionCore(incMedia: DataFrame, baseImg: DataFrame,
-      baseAud: DataFrame, baseVid: DataFrame, maxHamming: Int,
-      minFrac: Double, maxBucket: Int): DataFrame =
+  /** The probe core over EXPLICIT base fingerprint frames — the
+    * at-rest screen ([[mediaAdmissionScreen]]) passes the artifact's;
+    * IngestSpec passes fingerprints recomputed from decoded base media
+    * to pin the two equal. Returns one row per DUPLICATE increment
+    * item: (media_id, media_dup_of = min matching base id). */
+  private[graft] def mediaAdmissionCore(incMedia: DataFrame,
+      baseImg: DataFrame, baseAud: DataFrame, baseVid: DataFrame,
+      maxHamming: Int, minFrac: Double, maxBucket: Int): DataFrame =
     probe64(imageAHashes(incMedia), baseImg, "ahash", maxHamming,
         maxBucket)
       .unionByName(probe64(audioFingerprints(incMedia), baseAud, "afp",
@@ -658,15 +631,6 @@ object Multimodal {
       withDeltas(s, dir, "image").select(col("media_id"), col("ahash")),
       withDeltas(s, dir, "audio"),
       withDeltas(s, dir, "video_frames"), maxHamming, minFrac, maxBucket)
-
-  /** The inline twin: base fingerprints recomputed from the media
-    * frame (decode-twice) — the artifact ≡ inline pin's other half. */
-  def mediaAdmissionScreenInline(incMedia: DataFrame,
-      baseMedia: DataFrame, maxHamming: Int = 3, minFrac: Double = 0.9,
-      maxBucket: Int = 10000): DataFrame =
-    mediaAdmissionCore(incMedia,
-      imageAHashes(baseMedia), audioFingerprints(baseMedia),
-      videoFrameHashes(baseMedia), maxHamming, minFrac, maxBucket)
 
   /** The media screen run CONTINUOUSLY — a media-record stream
     * (media_id, kind, bytes) screened per micro-batch against the

@@ -61,10 +61,6 @@ object VideoCodec {
       if (n <= 0 || ms <= 0) None else Some((n, ms))
     }
 
-  /** Total clip duration in ms. */
-  def durationMs(bytes: Array[Byte]): Option[Long] =
-    header(bytes).map { case (n, ms) => n.toLong * ms }
-
   /** Raw PNG bytes of frame `idx`; None past the end or on a
     * malformed container. */
   def frameAt(bytes: Array[Byte], idx: Int): Option[Array[Byte]] =

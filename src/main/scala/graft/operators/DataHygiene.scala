@@ -371,7 +371,7 @@ object DataHygiene {
     * (words) → struct(n, cls) with cls ∈ {bad, short, good}. ONE
     * definition shared by the lite and full tiers so the class rules
     * cannot drift. */
-  private def paraStats(paras: Column): Column =
+  private[graft] def paraStats(paras: Column): Column =
     transform(paras, p => {
       val ws = split(p, " ")
       val n = size(ws)
@@ -390,7 +390,7 @@ object DataHygiene {
     * demotion case (short against the trailing edge). Markers
     * verified absent from the organic corpus (the q244/q245 plant
     * convention). */
-  private def plantedParasFull(): Column = {
+  private[graft] def plantedParasFull(): Column = {
     val base = plantedParas()
     when(pmod(col("doc_id"), lit(10)) === 0,
       concat(slice(base, lit(1), lit(1)),
@@ -452,25 +452,6 @@ object DataHygiene {
           aggregate(col("sm"), lit(0L),
             (acc, s) => acc + s.getField("n").cast("long"))
             .cast("double")).as("keep_frac"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** The LITE classifier on the FULL derivation — the spec's
-    * subset-comparison twin: same paragraphs, no smoothing. */
-  private[graft] def paragraphGateLiteOnFull(docs: DataFrame)
-      : DataFrame = {
-    val st = paraStats(plantedParasFull())
-    def cnt(cls: String): Column =
-      size(filter(col("st"), s => s.getField("cls") === cls))
-        .cast("long")
-    def mass(cls: String): Column = aggregate(
-      filter(col("st"), s => s.getField("cls") === cls),
-      lit(0L), (acc, s) => acc + s.getField("n").cast("long"))
-    docs.select(col("doc_id"), col("source"), st.as("st"))
-      .select(col("doc_id"), col("source"),
-        size(col("st")).cast("long").as("n_paras"),
-        cnt("good").as("n_good"), cnt("bad").as("n_bad"),
-        cnt("short").as("n_short"), mass("good").as("kept_words"))
       .orderBy(col("doc_id"))
   }
 

@@ -545,16 +545,6 @@ object Dedup {
     nodes.sorted.map(n => (n, find(n))).toSeq
   }
 
-  /** [[dupClusters]]' distributed tier with its round count — the
-    * (result, rounds) view of [[dupStarRounds]] for the round-count
-    * spec. */
-  private[graft] def dupClustersWithRounds(pairs: DataFrame,
-      maxIters: Int = 20, alreadyCanonical: Boolean = false)
-      : (DataFrame, Int) = {
-    val run = dupStarRounds(pairs, maxIters, alreadyCanonical)
-    (run.state, run.rounds)
-  }
-
   /** [[dupClusters]]' distributed tier: large-star/small-star rounds
     * to an edge-set fixpoint on the [[Iterate]] device, at most
     * `maxIters` of them. The result carries the (node, component

@@ -16,10 +16,9 @@ import graft.Tables
   *    `percentile` quartiles (pandas-style linear interpolation,
   *    matching DuckDB `quantile_cont`). One aggregation pass per
   *    column, unioned — each pass is a single shuffle-free partial agg
-  *    (percentile is the only memory-heavy piece; at 100 TB swap it
-  *    for `approx_percentile` or a t-digest and accept the tolerance).
-  *  - [[fast]] — Spark's built-in `summary()` (approx percentiles),
-  *    the O(1)-memory scale path.
+  *    (percentile is the only memory-heavy piece).
+  *  - [[exactLarge]] — the same values with the quartiles taken by
+  *    the scale-safe [[exactQuantilesMulti]] pass (q50).
   */
 object Describe {
 
@@ -60,13 +59,6 @@ object Describe {
     wide.select(explode(array(rows: _*)).as("r")).select(col("r.*"))
       .orderBy(col("column"))
   }
-
-  /** Exact linear-interpolation quantiles for ONE column — thin
-    * wrapper over [[exactQuantilesMulti]] (`knownCount` is advisory
-    * only; the shared counts pass derives n for free). */
-  def exactQuantiles(df: DataFrame, c: String, probs: Seq[Double],
-      knownCount: Option[Long] = None): Seq[Double] =
-    exactQuantilesMulti(df, Seq(c), probs)(c)
 
   /** Exact linear-interpolation quantiles for MANY columns in one
     * shared pass. The columns are stacked into long format
@@ -322,11 +314,6 @@ object Describe {
         org.apache.spark.sql.types.StructField("max",
           org.apache.spark.sql.types.DoubleType))))
   }
-
-  /** Spark-native approximate path (percentile_approx under the hood). */
-  def fast(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.select(cols.map(col): _*)
-      .summary("count", "mean", "stddev", "min", "25%", "50%", "75%", "max")
 
   /** Plain-text report block, mirroring the reference's
     * `describe().to_string()` email body (F1,

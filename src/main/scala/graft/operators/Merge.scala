@@ -6,16 +6,11 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 
-/** Upsert / merge-on-read — the mutation layer a parquet lake lacks
-  * natively (VERDICT round-1 "what's missing" #5).
-  *
-  *  - [[upsert]] is copy-on-write MERGE semantics as one plan: keep
-  *    every base row whose key has no update (anti join), then union
-  *    the updates — last-write-wins, one shuffle on the key.
-  *  - [[mergeOnRead]] is the read-time flavor: base + delta files
-  *    coexist on disk (cheap writes), and the reader reconciles by
-  *    newest version per key with a keyed window — the
-  *    Hudi/Iceberg-style tradeoff of write amplification vs read cost.
+/** Upsert and snapshot diff — the mutation layer a parquet lake
+  * lacks natively (VERDICT round-1 "what's missing" #5). [[upsert]] is
+  * copy-on-write MERGE semantics as one plan: keep every base row
+  * whose key has no update (anti join), then union the updates —
+  * last-write-wins, one shuffle on the key.
   */
 object Merge {
 
@@ -27,7 +22,7 @@ object Merge {
     * is no "newest" to pick, so duplicate update keys would all
     * survive the union. Callers whose update stream can carry
     * duplicates pass `precedence`: the highest value per key wins
-    * (mergeOnRead-style row_number dedup) before the merge. */
+    * (a keyed row_number dedup) before the merge. */
   def upsert(base: DataFrame, updates: DataFrame,
       keys: Seq[String], precedence: Option[String] = None): DataFrame = {
     val deduped = precedence match {
@@ -39,19 +34,6 @@ object Merge {
     }
     base.join(deduped.select(keys.map(col): _*), keys, "left_anti")
       .unionByName(deduped)
-  }
-
-  /** Read-time reconciliation of base + deltas: every row carries a
-    * `version`; the newest version per key wins (ties broken by the
-    * delta flag so a same-version delta beats base). */
-  def mergeOnRead(slices: Seq[DataFrame], keys: Seq[String],
-      versionCol: String): DataFrame = {
-    val all = slices.reduce(_ unionByName _)
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col(versionCol).desc)
-    all.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
   }
 
   /** q87: deterministic upsert over documents — doc_id < 50 receive a

@@ -3,8 +3,9 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Long <-> wide reshaping (reference P6: the per-contaminant table
+/** Long -> wide reshaping (reference P6: the per-contaminant table
   * split, `/root/reference/dags/my_data_pipeline.py:84-86,158`).
+  * The per-contaminant tables themselves are [[Flatten.perPollutant]].
   *
   * The long format is the scale-native layout (pollutant as data);
   * the wide view is a pivot with an EXPLICIT value list — an implicit
@@ -21,22 +22,4 @@ object Reshape {
       .agg(first(col("avg")).as("daily_avg"),
         first(col("max")).as("daily_max"),
         first(col("min")).as("daily_min"))
-
-  /** wide -> long inverse via stack (unpivot). */
-  def unpivot(wide: DataFrame, pollutants: Seq[String]): DataFrame = {
-    val stackArgs = pollutants.map(p =>
-      s"'$p', ${p}_daily_avg, ${p}_daily_max, ${p}_daily_min")
-      .mkString(", ")
-    wide.select(col("day"), col("country"),
-      expr(s"stack(${pollutants.size}, $stackArgs) " +
-        "as (pollutant, avg, max, min)"))
-      .filter(col("avg").isNotNull || col("max").isNotNull ||
-        col("min").isNotNull)
-  }
-
-  /** Per-key table family (the reference's Dict[contaminant, DF]) —
-    * provided for API parity; prefer the long format + partitionBy. */
-  def splitByKey(long: DataFrame, keys: Seq[String])
-      : Map[String, DataFrame] =
-    keys.map(k => k -> long.filter(col("pollutant") === k)).toMap
 }

@@ -171,22 +171,11 @@ object ScalePatterns {
       .orderBy(col("z"), col("l_orderkey"), col("l_partkey"),
         col("l_linenumber"))
 
-  /** Fixed-width histogram of a numeric column — the distribution
-    * report a data-prep pipeline renders per feature. Pure arithmetic
-    * bucketing (floor((v-lo)/w), clamped to the last bucket), one
-    * groupBy — identical in any engine. */
-  def histogram(df: DataFrame, c: String, lo: Double, width: Double,
-      buckets: Int): DataFrame =
-    df.select(least(floor((col(c).cast("double") - lo) / width),
-        lit(buckets - 1L)).as("bucket"))
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("bucket"))
-
   /** Fixed-width histogram with DATA-DERIVED bounds: lo = min(c),
-    * width = (max-min)/buckets — the self-tuning registration, so no
-    * caller-supplied constant can silently encode one SF's value
-    * range (the hazard of the parameterized [[histogram]]). The
+    * width = (max-min)/buckets — the distribution report a data-prep
+    * pipeline renders per feature, with no caller-supplied constant
+    * that could silently encode one SF's value range. Pure arithmetic
+    * bucketing (floor((v-lo)/w), clamped to the last bucket). The
     * bounds come from one tiny aggregate broadcast back over the
     * scan; bucketing stays a narrow projection + one groupBy. All
     * arithmetic is IEEE double (subtract, divide, floor), so the
@@ -758,9 +747,8 @@ object ScalePatterns {
     * nShards×parallelism partial rows. xor is commutative/associative
     * and width-preserving, so the checksum is independent of row
     * order and partitioning — and DuckDB replays it bit-exactly
-    * (q198). The written-artifact twin is
-    * [[graft.sinks.Sinks.writeTrainingShards]], whose layout spec
-    * pins manifest-from-lake ≡ manifest-from-source; the SAME plan
+    * (q198). ScalePatternsSpec writes the `shard=N` lake and pins
+    * manifest-from-lake ≡ manifest-from-source; the SAME plan
     * also runs as a complete-mode stream with nShards rows of state
     * (continuous export accounting — StreamingSpec pins stream ==
     * batch). */

@@ -953,11 +953,12 @@ object Similarity {
   }
 
   /** The probe + prune + exact-rank core over EXPLICIT index frames —
-    * shared verbatim by the catalog-table tier ([[ivfExactServeQueries]])
-    * and the durable-lake tier ([[ivfExactServeQueriesDurable]]), so
-    * the two cannot drift arithmetically. */
-  private def ivfExactServeFrames(queries: DataFrame, vectors: DataFrame,
-      cents: DataFrame, k: Int, nprobe: Int): DataFrame = {
+    * the catalog-table tier ([[ivfExactServeQueries]]) passes its
+    * session tables; DurableArtifactsSpec passes the durable lake
+    * index ([[ivfExactIndexDurable]]) to pin the two bit-identical. */
+  private[graft] def ivfExactServeFrames(queries: DataFrame,
+      vectors: DataFrame, cents: DataFrame, k: Int,
+      nprobe: Int): DataFrame = {
     val probed = ivfExactProbe(queries, cents, nprobe)
     val touched = probed.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).sorted
@@ -965,18 +966,6 @@ object Similarity {
       prunedToTouched(vectors, touched)
         .select(col("vec_id").as("neighbor_id"), col("cell"),
           col("embedding")), k)
-  }
-
-  /** [[ivfExactServeQueries]] against the DURABLE index — a serving
-    * job in a FRESH JVM probes the committed lake artifact without
-    * retraining (the q319 economics made cross-job). Bit-identical to
-    * the catalog tier by shared core. */
-  def ivfExactServeQueriesDurable(s: SparkSession, queries: DataFrame,
-      embeddings: DataFrame, dir: String, k: Int = 5, nprobe: Int = 2,
-      cells: Int = 8, iters: Int = 2): DataFrame = {
-    val (vectors, cents) =
-      ivfExactIndexDurable(s, embeddings, dir, cells, iters)
-    ivfExactServeFrames(queries, vectors, cents, k, nprobe)
   }
 
   /** Stream of query vectors → per-micro-batch
@@ -2477,28 +2466,6 @@ object Similarity {
     portableRpPairs(embeddings, threshold,
       nPlanes = bands * signBandWidth(n, bands, budgetPerRow), bands,
       maxBucket)
-  }
-
-  /** [[rpLshPairs]] (seeded-gaussian planes) auto-sized the same way —
-    * the production near-dup pair tier with the sizing knob WIRED. */
-  def rpLshPairsAuto(embeddings: DataFrame, threshold: Double = 0.45,
-      bands: Int = 4, maxBucket: Int = 10000,
-      knownCount: Option[Long] = None): DataFrame = {
-    val n = knownCount.getOrElse(embeddings.count())
-    rpLshPairs(embeddings, threshold,
-      nPlanes = bands * signBandWidth(n, bands), bands, maxBucket)
-  }
-
-  /** [[embeddingSplitLeakageLsh]] with [[signBandWidth]]-sized bands —
-    * q310's production path with the corpus-size knob wired: the
-    * grown corpus that degraded the fixed default in the round-12
-    * trial now selects 16-bit+ bands automatically. */
-  def embeddingSplitLeakageLshAuto(emb: DataFrame,
-      threshold: Double = 0.45, bands: Int = 4,
-      knownCount: Option[Long] = None): DataFrame = {
-    val n = knownCount.getOrElse(emb.count())
-    embeddingSplitLeakageLsh(emb, threshold,
-      nPlanes = bands * signBandWidth(n, bands), bands)
   }
 
   /** The SCALE tier of [[embeddingSplitLeakage]] — the same

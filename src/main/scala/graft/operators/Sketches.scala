@@ -47,26 +47,6 @@ object Sketches {
       .groupBy(col("k"))
       .agg(min(coalesce(col("cnt"), lit(0L))).as("est"))
 
-  /** Join-size (inner-product) estimate from two sketches built with
-    * the same (depth, width): per depth Σ_b cntA·cntB, min across
-    * depths — the sketch-only answer to "how big would this equi-join
-    * be" when neither side's per-key counts fit anywhere (classic
-    * a·b estimate, Cormode & Muthukrishnan 2005 §4.2; one-sided:
-    * exact ≤ est ≤ exact + 2·Na·Nb/w w.h.p.). Two d·w-row frames
-    * join — nothing data-sized. [[ScalePatterns.joinSizeProfile]] is
-    * the exact counterpart SketchesSpec bounds this against. */
-  def cmsInnerProduct(a: DataFrame, b: DataFrame): DataFrame =
-    a.select(col("depth"), col("bucket"), col("cnt").as("ca"))
-      // LEFT join + coalesce-to-0, like cmsEstimate: a depth whose
-      // buckets never collide must contribute dot = 0 (an inner join
-      // would DROP that depth, inflating the min — and returning an
-      // empty frame when no depth collides at all)
-      .join(b.select(col("depth"), col("bucket"), col("cnt").as("cb")),
-        Seq("depth", "bucket"), "left")
-      .groupBy(col("depth"))
-      .agg(sum(col("ca") * coalesce(col("cb"), lit(0L))).as("dot"))
-      .agg(min(col("dot")).as("est_join_rows"))
-
   val Depth = 4
   val Width = 512
 
@@ -84,24 +64,17 @@ object Sketches {
       .select(col("k").as("user_id"), col("est"))
   }
 
-  /** The token stream with the CMS SCREEN applied: every token row
-    * evaluates its own sketch estimate ROW-LOCALLY (least over d
-    * lookups into the broadcast d·w counter map — model-sized driver
-    * state, the RuntimeFilters discipline) and survives only if the
-    * estimate clears the `1/share` frequency threshold. One-sided CMS
-    * error (est ≥ exact) makes the screen a guaranteed SUPERSET of
-    * the true heavy tokens — no false negatives, pruning invisible to
-    * the final answer. */
-  def cmsScreenedTokens(docs: DataFrame, share: Long): DataFrame = {
-    val toks = docs.select(explode(split(col("text"), " ")).as("k"))
-    screenTokens(toks, toks.count(), share)
-  }
-
-  /** The screen itself, given the already-tokenized stream and its
-    * total — factored out so [[exactHeavyTokens]] pays for the
-    * tokenize+count job ONCE, not once here and once for its own
-    * threshold. */
-  private def screenTokens(toks: DataFrame, n: Long,
+  /** The CMS SCREEN over an already-tokenized stream `toks` (one
+    * column `k`) of `n` rows: every token row evaluates its own sketch
+    * estimate ROW-LOCALLY (least over d lookups into the broadcast d·w
+    * counter map — model-sized state, the RuntimeFilters
+    * discipline) and survives only if the estimate clears the
+    * `1/share` frequency threshold. One-sided CMS error (est ≥ exact)
+    * makes the screen a guaranteed SUPERSET of the true heavy tokens —
+    * no false negatives, pruning invisible to the final answer. The
+    * caller passes `n` so [[exactHeavyTokens]] pays for the
+    * tokenize+count job ONCE. */
+  private[graft] def screenTokens(toks: DataFrame, n: Long,
       share: Long): DataFrame = {
     val counters = cmsSketch(toks, "k", Depth, Width).collect()
     val cmap = map(counters.flatMap { r =>
@@ -141,7 +114,7 @@ object Sketches {
 
   /** q100: approximate quantiles via percentile_approx (Greenwald-
     * Khanna sketch; mergeable, bounded memory — the 100 TB answer
-    * when Describe.exactQuantiles' domain-sized counts pass is too
+    * when Describe.exactQuantilesMulti's domain-sized counts pass is too
     * expensive), emitted as the sketch's RANK-ERROR CONTRACT rather
     * than its raw picks: GK with accuracy a guarantees the returned
     * value's rank lies within ±n/a of ⌈p·n⌉, so the card states, per

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew-mitigation utilities.
@@ -28,15 +28,4 @@ object Skew {
     saltedLarge.join(replicatedSmall, Seq(key, "__salt"))
       .drop("__salt")
   }
-
-  /** Salted aggregation: two-phase groupBy for hot grouping keys —
-    * partial aggregate on (key, salt), final on key. Correct for any
-    * associative aggregate expressed as (partial, final) pair. */
-  def saltedCount(df: DataFrame, key: String, factor: Int): DataFrame =
-    df.withColumn("__salt",
-        pmod(monotonically_increasing_id(), lit(factor)).cast("int"))
-      .groupBy(col(key), col("__salt"))
-      .agg(count(lit(1)).as("__partial"))
-      .groupBy(col(key))
-      .agg(sum(col("__partial")).as("n"))
 }

@@ -3,7 +3,6 @@ package graft.sinks
 import java.util.Properties
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** Load-stage sinks — the reference's K-series operators
   * (`/root/reference/dags/my_data_pipeline.py:91-140,163-197`).
@@ -53,46 +52,6 @@ object Sinks {
   /** K5: console sink. */
   def console(df: DataFrame, numRows: Int = 20): Unit =
     df.show(numRows, truncate = false)
-
-  /** Training-shard export: the corpus written as a
-    * `shard=N`-partitioned parquet dataset under a deterministic
-    * hash assignment ([[graft.operators.ScalePatterns.shardId]]) —
-    * the at-rest layout a trainer's data loader consumes (one
-    * directory per shard, loadable independently and in parallel).
-    * The repartition ON the shard column aligns task boundaries with
-    * shard directories, so each shard's rows land in a bounded file
-    * set instead of every task spraying a file into every directory
-    * (nShards × tasks small files — the metadata storm
-    * [[compactParquet]] exists to clean up). Determinism of the
-    * ASSIGNMENT (not file layout) is what matters: the manifest
-    * (q198) is order-insensitive by construction, and the layout
-    * spec pins manifest-from-lake ≡ manifest-from-source. */
-  def writeTrainingShards(docs: DataFrame, path: String,
-      nShards: Int = 16): Unit =
-    docs.withColumn("shard", graft.operators.ScalePatterns.shardId(nShards))
-      .repartition(nShards, col("shard"))
-      .write.mode("overwrite").partitionBy("shard").parquet(path)
-
-  /** Small-files compaction — the lake-maintenance pass every
-    * streaming/incremental writer eventually needs (thousands of
-    * KB-sized files turn scans into metadata storms at 100 TB).
-    * Rewrites `inDir` into `outDir` with file count sized from the
-    * actual input bytes. Writing to a separate directory keeps the
-    * operation atomic-by-rename for the caller; a table format
-    * (Iceberg/Delta) would do the swap transactionally. Returns the
-    * output file count. */
-  def compactParquet(spark: org.apache.spark.sql.SparkSession,
-      inDir: String, outDir: String,
-      targetBytes: Long = 128L * 1024 * 1024): Int = {
-    val path = new org.apache.hadoop.fs.Path(inDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val inputBytes = fs.getContentSummary(path).getLength
-    val nFiles = math.max(1L, (inputBytes + targetBytes - 1) / targetBytes).toInt
-    spark.read.parquet(inDir)
-      .coalesce(nFiles) // no shuffle: merges input splits
-      .write.mode("overwrite").parquet(outDir)
-    nFiles
-  }
 }
 
 /** F1+K6: the emailed describe() report becomes a pluggable trait —

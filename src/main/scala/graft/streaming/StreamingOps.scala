@@ -217,21 +217,8 @@ object StreamingOps {
     * Advanced.purchaseErrorPairs. Both sides carry watermarks so join
     * state is evicted once event time passes the interval bound. */
   def purchaseErrorStream(events: DataFrame, windowMinutes: Int = 30,
-      watermark: String = "1 hour"): DataFrame = {
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"))
-      .withWatermark("purchase_ts", watermark)
-    val errors = events.filter(col("event_type") === "error")
-      .select(col("user_id").as("e_user"), col("ts").as("error_ts"))
-      .withWatermark("error_ts", watermark)
-    purchases.join(errors,
-      col("p_user") === col("e_user") &&
-        col("error_ts") >= col("purchase_ts") &&
-        col("error_ts") <=
-          col("purchase_ts") + expr(s"INTERVAL $windowMinutes MINUTES"))
-      .select(col("p_user").as("user_id"), col("purchase_ts"),
-        col("error_ts"))
-  }
+      watermark: String = "1 hour"): DataFrame =
+    purchaseErrorJoin(events, windowMinutes, watermark, "inner")
 
   /** LEFT OUTER flavor of [[purchaseErrorStream]]: matched pairs emit
     * immediately, and a purchase with NO error in its window emits
@@ -240,7 +227,13 @@ object StreamingOps {
     * same bound that evicts the join state). Batch twin:
     * Advanced.purchaseErrorPairsOuter (q128). */
   def purchaseErrorStreamOuter(events: DataFrame, windowMinutes: Int = 30,
-      watermark: String = "1 hour"): DataFrame = {
+      watermark: String = "1 hour"): DataFrame =
+    purchaseErrorJoin(events, windowMinutes, watermark, "leftOuter")
+
+  /** The watermarked purchase ⋈ error interval join behind both
+    * [[purchaseErrorStream]] flavors; only `joinType` differs. */
+  private def purchaseErrorJoin(events: DataFrame, windowMinutes: Int,
+      watermark: String, joinType: String): DataFrame = {
     val purchases = events.filter(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"))
       .withWatermark("purchase_ts", watermark)
@@ -252,7 +245,7 @@ object StreamingOps {
         col("error_ts") >= col("purchase_ts") &&
         col("error_ts") <=
           col("purchase_ts") + expr(s"INTERVAL $windowMinutes MINUTES"),
-      "leftOuter")
+      joinType)
       .select(col("p_user").as("user_id"), col("purchase_ts"),
         col("error_ts"))
   }

@@ -177,15 +177,19 @@ class ArtifactMaintenanceSpec extends AnyFunSuite {
       == rows(Multimodal.imageDedupFromArtifact(spark, dirB)))
     assert(rows(Multimodal.imageDedupFromAppendedArtifact(spark, dirA))
       == rows(Multimodal.imageDedup(union)))
-    // audio
-    assert(rows(Multimodal.audioDedupFromAppendedArtifact(spark, dirA))
+    // audio: the shared fingerprint core over (artifact + deltas)
+    def audioAppended = Multimodal.fingerprintDedup(
+      Artifacts.withDeltas(spark, dirA, "audio"), "afp", 3, 10000)
+    assert(rows(audioAppended)
       == rows(Multimodal.audioDedupFromArtifact(spark, dirB)))
-    assert(rows(Multimodal.audioDedupFromAppendedArtifact(spark, dirA))
+    assert(rows(audioAppended)
       == rows(Multimodal.audioDedup(union)))
-    // video
-    assert(rows(Multimodal.videoDedupFromAppendedArtifact(spark, dirA))
+    // video: the frame-hash tier over (artifact + deltas)
+    def videoAppended = Multimodal.videoDedupFromFrames(
+      Artifacts.withDeltas(spark, dirA, "video_frames"))
+    assert(rows(videoAppended)
       == rows(Multimodal.videoDedupFromArtifact(spark, dirB)))
-    assert(rows(Multimodal.videoDedupFromAppendedArtifact(spark, dirA))
+    assert(rows(videoAppended)
       == rows(Multimodal.videoDedup(union)))
     // cold session: serve only, no decode, counter flat
     val s2 = spark.newSession()

@@ -105,6 +105,16 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(decode(line) == Map("q01" -> 1.0))
   }
 
+  test("jsonEscape spells quote, backslash, TAB, CR, LF and U+0001 " +
+      "exactly, and Jackson reads the original back") {
+    val raw = "a\"b\\c\td\re\nf\u0001g"
+    val escaped = Bench.jsonEscape(raw)
+    assert(escaped == "a\\\"b\\\\c\\td\\re\\nf\\u0001g", escaped)
+    val back = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue("\"" + escaped + "\"", classOf[String])
+    assert(back == raw)
+  }
+
   test("a query that threw is counted as failed, never as a timing") {
     val results = Seq("q01_a" -> 1.4, "q03_c" -> 2.0)
     val line = Bench.buildJson(results, "/x", failed = Seq("q02_b"))

@@ -115,6 +115,24 @@ class DataHygieneSpec extends AnyFunSuite {
       && r.getDouble(7) == 1.0))
   }
 
+  /** The LITE classifier on the FULL derivation — the subset
+    * comparison's twin: the same paragraphs, no smoothing. */
+  private def paragraphGateLiteOnFull(docs: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val st = DataHygiene.paraStats(DataHygiene.plantedParasFull())
+    def cnt(cls: String) =
+      size(filter(col("st"), s => s.getField("cls") === cls)).cast("long")
+    def mass(cls: String) = aggregate(
+      filter(col("st"), s => s.getField("cls") === cls),
+      lit(0L), (acc, s) => acc + s.getField("n").cast("long"))
+    docs.select(col("doc_id"), col("source"), st.as("st"))
+      .select(col("doc_id"), col("source"),
+        size(col("st")).cast("long").as("n_paras"),
+        cnt("good").as("n_good"), cnt("bad").as("n_bad"),
+        cnt("short").as("n_short"), mass("good").as("kept_words"))
+      .orderBy(col("doc_id"))
+  }
+
   test("full jusText tier (q351): hand-corpus smoothing, " +
       "promotion/demotion both live on the real corpus, and the " +
       "lite tier is a per-doc SUBSET (goods never demoted, smoothing " +
@@ -139,7 +157,7 @@ class DataHygieneSpec extends AnyFunSuite {
     assert(full.values.exists(_.getLong(6) > 0), "no demotion fired")
     // lite-tier subset on the SAME derivation: smoothing only
     // resolves shorts — goods and bads never flip, mass only grows
-    val lite = DataHygiene.paragraphGateLiteOnFull(docs).collect()
+    val lite = paragraphGateLiteOnFull(docs).collect()
       .map(r => r.getLong(0) -> r).toMap
     assert(full.keySet == lite.keySet)
     full.foreach { case (id, f) =>

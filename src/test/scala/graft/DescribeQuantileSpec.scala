@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Describe
 
-/** exactQuantiles: equality (to 1 ulp) with Spark's exact
+/** exactQuantilesMulti: equality (to 1 ulp) with Spark's exact
   * `percentile` — the interpolations are mathematically equal
   * (lo + d·(hi-lo) vs the weighted (1-d)·lo + d·hi) but can differ in
   * the last bit on non-integral positions — and a plan assertion that
@@ -32,7 +32,8 @@ class DescribeQuantileSpec extends AnyFunSuite {
     val df = vals.toDF("x")
     val expected = df.agg(array(
       probs.map(p => percentile(col("x"), lit(p))): _*)).head().getSeq[Double](0)
-    assertClose(Describe.exactQuantiles(df, "x", probs), expected)
+    assertClose(Describe.exactQuantilesMulti(df, Seq("x"), probs)("x"),
+      expected)
   }
 
   test("exactQuantiles matches percentile on a larger keyed range") {
@@ -40,18 +41,20 @@ class DescribeQuantileSpec extends AnyFunSuite {
       .select((pmod(col("id") * 37, lit(991)).cast("double") / 7).as("x"))
     val expected = df.agg(array(
       probs.map(p => percentile(col("x"), lit(p))): _*)).head().getSeq[Double](0)
-    assertClose(Describe.exactQuantiles(df, "x", probs), expected)
+    assertClose(Describe.exactQuantilesMulti(df, Seq("x"), probs)("x"),
+      expected)
   }
 
   test("single distinct value and knownCount path") {
     val df = Seq.fill(40)(3.25).toDF("x")
-    assert(Describe.exactQuantiles(df, "x", probs, Some(40L)) ==
+    assert(Describe.exactQuantilesMulti(df, Seq("x"), probs)("x") ==
       Seq(3.25, 3.25, 3.25))
   }
 
   test("empty probs returns empty without running a job") {
     val df = Seq(1.0, 2.0).toDF("x")
-    assert(Describe.exactQuantiles(df, "x", Seq.empty) == Seq.empty)
+    assert(Describe.exactQuantilesMulti(df, Seq("x"), Seq.empty)("x") ==
+      Seq.empty)
   }
 
   test("multi-column pass matches per-column percentile") {

@@ -28,6 +28,18 @@ class DurableArtifactsSpec extends AnyFunSuite {
     java.nio.file.Files.createTempDirectory("graft_durable_spec_")
       .resolve("idx").toString
 
+  /** The IVF-exact serve (k=5, cells=8, iters=2) over the DURABLE
+    * index in `dir`: the catalog tier's probe + prune + rank core on
+    * the committed lake frames. */
+  private def servedDurable(s: org.apache.spark.sql.SparkSession,
+      queries: org.apache.spark.sql.DataFrame,
+      embeddings: org.apache.spark.sql.DataFrame, dir: String,
+      nprobe: Int = 2): org.apache.spark.sql.DataFrame = {
+    val (vectors, cents) =
+      Similarity.ivfExactIndexDurable(s, embeddings, dir, 8, 2)
+    Similarity.ivfExactServeFrames(queries, vectors, cents, 5, nprobe)
+  }
+
   test("durable: build once, commit marker written last, rebuild only " +
       "when uncommitted") {
     val dir = freshDir()
@@ -84,8 +96,8 @@ class DurableArtifactsSpec extends AnyFunSuite {
     val queries = emb.filter(col("vec_id") % 50 === 7)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     // session 1 builds and serves
-    val served1 = Similarity.ivfExactServeQueriesDurable(spark, queries,
-      emb, dir).collect().map(_.toSeq)
+    val served1 = servedDurable(spark, queries, emb, dir)
+      .collect().map(_.toSeq)
     val builds = Artifacts.durableBuilds.get()
     assert(Artifacts.isCommitted(dir))
     // a FRESH session (new session state — the closest one JVM gets
@@ -97,7 +109,7 @@ class DurableArtifactsSpec extends AnyFunSuite {
       .select(col("vec_id"), col("embedding"))
     val q2 = t2.filter(col("vec_id") % 50 === 7)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val served2 = Similarity.ivfExactServeQueriesDurable(s2, q2, t2, dir)
+    val served2 = servedDurable(s2, q2, t2, dir)
       .collect().map(_.toSeq)
     assert(Artifacts.durableBuilds.get() == builds,
       "cold-session serve retrained the quantizer")
@@ -581,8 +593,7 @@ class DurableArtifactsSpec extends AnyFunSuite {
     val dir = freshDir()
     val queries = emb.filter(col("vec_id") === 7)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val served = Similarity.ivfExactServeQueriesDurable(spark, queries,
-      emb, dir, nprobe = 2)
+    val served = servedDurable(spark, queries, emb, dir, nprobe = 2)
     served.collect()
     val scans = scansOf(served.queryExecution.executedPlan)
       .filter(_.metadata("Location").contains(dir))

@@ -57,14 +57,6 @@ class ExtensionsAndScaleSpec extends AnyFunSuite {
     assert(a.except(b).isEmpty && b.except(a).isEmpty)
   }
 
-  test("salted two-phase count equals plain groupBy count") {
-    val plain = t.lineitem.groupBy("l_returnflag").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val salted = Skew.saltedCount(t.lineitem, "l_returnflag", 8)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(plain == salted)
-  }
-
   test("bucketed tables co-locate: bucketed join plans without shuffle") {
     spark.sql("DROP TABLE IF EXISTS b_orders")
     spark.sql("DROP TABLE IF EXISTS b_lineitem")

@@ -33,25 +33,6 @@ class FormatsSpec extends AnyFunSuite {
     roundTrip("csv", Map("header" -> "true", "quote" -> "\"",
       "escape" -> "\"")))
 
-  test("compaction rewrites a many-small-files dir into size-targeted files") {
-    val base = java.nio.file.Files.createTempDirectory("graft_compact")
-    val inDir = s"$base/in"
-    val outDir = s"$base/out"
-    docs.repartition(20).write.parquet(inDir) // the small-files disease
-    def parquetFiles(d: String) = new java.io.File(d).listFiles()
-      .count(f => f.getName.endsWith(".parquet"))
-    assert(parquetFiles(inDir) == 20)
-    val inputBytes = new java.io.File(inDir).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
-    // target half the input -> exactly 2 output files
-    val n = graft.sinks.Sinks.compactParquet(spark, inDir, outDir,
-      targetBytes = (inputBytes + 1) / 2)
-    assert(n == 2 && parquetFiles(outDir) == 2)
-    val back = spark.read.parquet(outDir)
-    assert(back.count() == docs.count())
-    assert(back.except(docs).isEmpty && docs.except(back).isEmpty)
-  }
-
   test("schema evolution: mergeSchema unifies old and new writers") {
     // v1 files lack the column a later writer added — the reader must
     // surface the union schema with nulls for pre-evolution rows

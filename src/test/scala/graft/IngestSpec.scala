@@ -199,8 +199,11 @@ class IngestSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val baseMedia = Multimodal.syntheticMediaFrom(
       docs.filter(pmod(col("doc_id"), lit(10L)) =!= 3))
-    val inline = Multimodal.mediaAdmissionScreenInline(incAll,
-      baseMedia).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val inline = Multimodal.mediaAdmissionCore(incAll,
+        Multimodal.imageAHashes(baseMedia),
+        Multimodal.audioFingerprints(baseMedia),
+        Multimodal.videoFrameHashes(baseMedia), 3, 0.9, 10000)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(hitsAll == inline, "media screen: artifact != inline")
     // per-doc independence: screening the planted and natural slices
     // separately unions to the whole screen (the stream-twin argument)

@@ -12,16 +12,30 @@ class MultimodalSpec extends AnyFunSuite {
   private def t = Tables(spark, "/root/testdata/sf0.001")
   private val dim = Multimodal.featureDim
 
+  /** A solid-color PNG — the known-answer fixture. */
+  private def encodeSolidPng(w: Int, h: Int, r: Int, g: Int,
+      b: Int): Array[Byte] = {
+    val img = new java.awt.image.BufferedImage(w, h,
+      java.awt.image.BufferedImage.TYPE_INT_RGB)
+    val rgb = (r << 16) | (g << 8) | b
+    for (y <- 0 until h; x <- 0 until w) img.setRGB(x, y, rgb)
+    ImageCodec.encodePng(img)
+  }
+
+  /** Total GRV1 clip duration in ms, from the container header. */
+  private def durationMs(clip: Array[Byte]): Option[Long] =
+    VideoCodec.header(clip).map { case (n, ms) => n.toLong * ms }
+
   test("known-color PNG decodes to the known feature vector") {
     // solid red: mean R=1, G=0, B=0; every luminance stripe = 0.299
-    val red = ImageCodec.encodeSolidPng(8, 8, 255, 0, 0)
+    val red = encodeSolidPng(8, 8, 255, 0, 0)
     val f = ImageCodec.featureFromBytes(red, dim).get
     assert(math.abs(f(0) - 1.0f) < 1e-6f)
     assert(f(1) == 0.0f && f(2) == 0.0f)
     (3 until dim).foreach(i =>
       assert(math.abs(f(i) - 0.299f) < 1e-6f, s"stripe $i: ${f(i)}"))
     // solid mid-gray: every slot = 128/255
-    val gray = ImageCodec.encodeSolidPng(5, 7, 128, 128, 128)
+    val gray = encodeSolidPng(5, 7, 128, 128, 128)
     val g = ImageCodec.featureFromBytes(gray, dim).get
     g.foreach(v => assert(math.abs(v - 128f / 255f) < 1e-6f))
   }
@@ -37,7 +51,7 @@ class MultimodalSpec extends AnyFunSuite {
   test("corrupt bytes decode to NULL feature, not a task failure") {
     assert(ImageCodec.featureFromBytes("not a png".getBytes, dim).isEmpty)
     val df = Seq((1L, "image", "garbage".getBytes),
-        (2L, "image", ImageCodec.encodeSolidPng(4, 4, 0, 255, 0)))
+        (2L, "image", encodeSolidPng(4, 4, 0, 255, 0)))
       .toDF("media_id", "kind", "bytes")
       .withColumn("meta", struct(lit(4).as("width"), lit(4).as("height"),
         lit(null).cast("long").as("duration_ms")))
@@ -104,7 +118,7 @@ class MultimodalSpec extends AnyFunSuite {
     val clip = VideoCodec.encodeFixtureVideo(
       nFrames = 4, w = 6, h = 5, frameMs = 250, seed = 11L)
     assert(VideoCodec.header(clip).contains((4, 250)))
-    assert(VideoCodec.durationMs(clip).contains(1000L))
+    assert(durationMs(clip).contains(1000L))
     (0 until 4).foreach { i =>
       val png = VideoCodec.frameAt(clip, i).get
       assert(png.sameElements(
@@ -224,27 +238,6 @@ class MultimodalSpec extends AnyFunSuite {
       if (kind == "audio")
         assert(new String(b.take(4), "US-ASCII") == "RIFF")
       else assert(new String(b.take(4), "US-ASCII") == "GRV1")
-    }
-  }
-
-  test("resize really rescales: decoded dims and pixels match") {
-    val bytes = ImageCodec.encodeFixturePng(12, 8, seed = 7L)
-    val (out, nw, nh) = ImageCodec.resize(bytes, maxSide = 6).get
-    assert(nw == 6 && nh == 4)
-    val img = ImageCodec.decode(out).get
-    assert(img.getWidth == 6 && img.getHeight == 4)
-    // no upscaling
-    val (_, w2, h2) = ImageCodec.resize(bytes, maxSide = 100).get
-    assert(w2 == 12 && h2 == 8)
-    // operator shape over the synthetic table
-    val r = Multimodal.resizeImages(Multimodal.syntheticMedia(t), maxSide = 8)
-    val rows = r.select("media_id", "new_width", "new_height", "bytes")
-      .collect()
-    assert(rows.nonEmpty)
-    rows.foreach { row =>
-      val img2 = ImageCodec.decode(row.getAs[Array[Byte]]("bytes")).get
-      assert(img2.getWidth == row.getInt(1) && img2.getHeight == row.getInt(2))
-      assert(math.max(img2.getWidth, img2.getHeight) <= 8)
     }
   }
 

@@ -113,19 +113,6 @@ class ScalePatternsSpec extends AnyFunSuite {
     assert(zed < single * 0.7, s"zorder=$zed single=$single")
   }
 
-  test("mergeOnRead picks the newest version per key, deltas beat base") {
-    import graft.operators.Merge
-    val base = Seq((1L, "a", 1L), (2L, "b", 1L), (3L, "c", 1L))
-      .toDF("id", "v", "version")
-    val delta1 = Seq((2L, "b2", 2L), (4L, "d", 2L)).toDF("id", "v", "version")
-    val delta2 = Seq((2L, "b3", 3L)).toDF("id", "v", "version")
-    val got = Merge.mergeOnRead(Seq(base, delta1, delta2),
-        Seq("id"), "version")
-      .select("id", "v").collect().map(r => r.getLong(0) -> r.getString(1))
-      .toMap
-    assert(got == Map(1L -> "a", 2L -> "b3", 3L -> "c", 4L -> "d"))
-  }
-
   test("upsert: updates replace, inserts append, untouched rows survive") {
     import graft.operators.Merge
     val base = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
@@ -272,12 +259,21 @@ class ScalePatternsSpec extends AnyFunSuite {
     assert(diff.length == 1, s"expected exactly one shard to change")
   }
 
+  /** The corpus as a `shard=N`-partitioned parquet lake under the
+    * deterministic [[ScalePatterns.shardId]] assignment — the layout a
+    * trainer's data loader reads, one directory per shard. */
+  private def writeTrainingShards(docs: org.apache.spark.sql.DataFrame,
+      path: String, nShards: Int = 16): Unit =
+    docs.withColumn("shard", ScalePatterns.shardId(nShards))
+      .repartition(nShards, col("shard"))
+      .write.mode("overwrite").partitionBy("shard").parquet(path)
+
   test("writeTrainingShards: shard=N layout, manifest-from-lake equals " +
     "manifest-from-source") {
     val dir = java.nio.file.Files.createTempDirectory("graft_shards")
       .toString
     val docs = t.documents
-    graft.sinks.Sinks.writeTrainingShards(docs, dir)
+    writeTrainingShards(docs, dir)
     val dirs = new java.io.File(dir).listFiles()
       .filter(_.isDirectory).map(_.getName).filter(_.startsWith("shard="))
     assert(dirs.nonEmpty && dirs.forall { n =>

@@ -1113,9 +1113,11 @@ class SimilaritySpec extends AnyFunSuite {
       .portableRpPairsAuto(t.embeddings, knownCount = Some(n))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(k2 == auto.keySet)
-    // the gaussian production tier takes the same wired knob and
+    // the gaussian production tier takes the same width rule and
     // still catches the planted twin at the auto-derived width
-    val gauss = Similarity.rpLshPairsAuto(t.embeddings.union(twin))
+    val withTwin = t.embeddings.union(twin)
+    val gauss = Similarity.rpLshPairs(withTwin,
+        nPlanes = 4 * Similarity.signBandWidth(withTwin.count(), 4))
       .filter(col("d1") === 7 && col("d2") === 777777L).collect()
     assert(gauss.length == 1 && gauss.head.getDouble(2) == 1.0)
     // the q320 composition: a twin planted ACROSS splits (vec 7 is

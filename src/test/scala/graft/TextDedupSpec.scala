@@ -850,17 +850,6 @@ class TextDedupSpec extends AnyFunSuite {
       .head.getInt(0) == 3)
   }
 
-  test("approxTokenCount: == word count on word bags; splits punctuation") {
-    val df = Seq(("plain word bag text", "it's pi=3.14, ok!")).toDF("a", "b")
-    val got = df.select(
-      graft.functions.TextFunctions.approxTokenCount(col("a")),
-      graft.functions.TextFunctions.approxTokenCount(col("b"))).head
-    assert(got.getInt(0) == 4) // == whitespace count on the bag
-    // splits BEFORE each punct char (runs, not singles):
-    // it | 's | pi | =3 | .14 | , | ok | ! = 8
-    assert(got.getInt(1) == 8)
-  }
-
   test("capBlocks: default caps leave q26/q112 output unchanged " +
     "(cap does not fire on test data)") {
     val docs = Tables(spark, sf).documents
@@ -934,8 +923,11 @@ class TextDedupSpec extends AnyFunSuite {
     val n = 64
     val pairs = (0L until (n - 1).toLong).map(i => (i, i + 1))
       .toDF("d1", "d2")
-    val (res, rounds) = graft.operators.Dedup.dupClustersWithRounds(pairs, 20)
-    val labels = res.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val run = graft.operators.Dedup.dupStarRounds(pairs, maxIters = 20,
+      alreadyCanonical = false)
+    val rounds = run.rounds
+    val labels = run.state.collect().map(r => r.getLong(0) -> r.getLong(1))
+      .toMap
     assert(labels.size == n)
     assert(labels.values.forall(_ == 0L))
     assert(rounds <= 10, s"expected <= 10 star rounds on a 64-chain, got $rounds")

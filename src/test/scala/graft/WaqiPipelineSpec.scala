@@ -49,34 +49,33 @@ class WaqiPipelineSpec extends AnyFunSuite {
     assert(got.toSeq == Seq("New york", "Paris", "Amsterdam"))
   }
 
-  test("pivot(long->wide) then unpivot is the identity") {
-    val long = Flatten.longFormat(WaqiSource.ok(parsed),
-      WaqiSource.Pollutants)
-    val back = Reshape.unpivot(
-      Reshape.pivotWide(long, WaqiSource.Pollutants), WaqiSource.Pollutants)
-    val a = long.select("day", "country", "pollutant", "avg", "max", "min")
-      .collect().map(_.toSeq).toSet
-    val b = back.select("day", "country", "pollutant", "avg", "max", "min")
-      .collect().map(_.toSeq).toSet
-    assert(a == b)
+  test("pivotWide(long) matches Flatten.perPollutant for each pollutant") {
+    val ok = WaqiSource.ok(parsed)
+    val long = Flatten.longFormat(ok, WaqiSource.Pollutants)
+    val wide = Reshape.pivotWide(long, WaqiSource.Pollutants)
+    WaqiSource.Pollutants.foreach { p =>
+      val stats = Seq("avg", "max", "min").map(st => s"${p}_daily_$st")
+      val a = wide.select("day", "country" +: stats: _*)
+        .filter(stats.map(col(_).isNotNull).reduce(_ || _))
+        .collect().map(_.toSeq).toSet
+      val b = Flatten.perPollutant(ok, p)
+        .select("day", "country" +: stats: _*)
+        .collect().map(_.toSeq).toSet
+      assert(a == b, s"pollutant $p")
+    }
   }
 
-  test("splitByKey: per-key family partitions the long table (P6 parity)") {
-    val long = Flatten.longFormat(WaqiSource.ok(parsed),
-      WaqiSource.Pollutants)
-    val fam = Reshape.splitByKey(long, WaqiSource.Pollutants)
+  test("perPollutant: per-key family partitions the long table (P6 parity)") {
+    val ok = WaqiSource.ok(parsed)
+    val long = Flatten.longFormat(ok, WaqiSource.Pollutants)
+    val fam = WaqiSource.Pollutants
+      .map(p => p -> Flatten.perPollutant(ok, p)).toMap
     assert(fam.keySet == WaqiSource.Pollutants.toSet)
     // each member holds exactly its key's rows; members partition long
     fam.foreach { case (k, df) =>
-      assert(df.filter(col("pollutant") =!= k).isEmpty)
+      assert(df.count() == long.filter(col("pollutant") === k).count())
     }
     assert(fam.values.map(_.count()).sum == long.count())
-  }
-
-  test("dayToDate parses the reference's string day; garbage -> null") {
-    val got = Seq("2026-08-10", "not a day")
-      .toDF("d").select(Scalars.dayToDate(col("d"))).collect()
-    assert(got(0).getDate(0).toString == "2026-08-10" && got(1).isNullAt(0))
   }
 
   test("end-to-end app: reports per pollutant, errors counted") {
