@@ -350,7 +350,6 @@ object CorpusSignals {
   private def bpeTrainMergesFromUnits(units: DataFrame,
       nMerges: Int): DataFrame = {
     val spark = units.sparkSession
-    import spark.implicits._
     val wf0 = units
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .select(col("freq"), concat(lit("  "),

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.Exact._
 
 /** Scalar / date / window / reshape function breadth — the library's
   * coverage of the everyday expression surface (each function used in

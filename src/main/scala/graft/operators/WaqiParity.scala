@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.sources.{WaqiFixtures, WaqiSource}
 
@@ -35,7 +34,8 @@ object WaqiParity {
         "pm25").orderBy("country", "day")
     }),
     // same flatten, but the payloads arrive through the DataSource V2
-    // table (one input partition per city) instead of a local Dataset
+    // table (the fetch device's slices as input partitions) instead of
+    // a local Dataset
     "q63_waqi_dsv2_source" -> ((s, _) => {
       import s.implicits._
       val raw = s.read.format("graft.sources.WaqiTableProvider").load()

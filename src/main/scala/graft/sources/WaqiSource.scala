@@ -17,10 +17,10 @@ import org.apache.spark.sql.types._
   *    `status != "ok"`, so failed sources contribute zero data rows
   *    (observable parity with the reference) while staying countable
   *    as an error metric instead of vanishing;
-  *  - fan-out is a Dataset of payloads, not a sequential driver loop —
-  *    at scale the fetch itself becomes `mapPartitions` over a URL
-  *    table or a DataSource V2 provider; everything downstream of the
-  *    payload Dataset is unchanged.
+  *  - fan-out is a Dataset of payloads, not a sequential driver loop:
+  *    the [[Fetch]] device runs bounded windows of fetches in a few
+  *    partitions, on the Dataset path or the DataSource V2 provider;
+  *    everything downstream of the payload Dataset is unchanged.
   */
 object WaqiSource {
 
@@ -45,27 +45,29 @@ object WaqiSource {
           Pollutants.map(p => StructField(p, dayStat)))))))))),
     StructField("_corrupt_record", StringType)))
 
-  /** The Dataset-path fetch: distribute the city list, one partition
-    * per city, and run [[WaqiTransport.fetch]] inside `mapPartitions`
-    * — executor-side and parallel, the Dataset twin of the DataSource
-    * V2 scan in [[WaqiTableProvider]]. At 100 TB-pipeline scale the
-    * city list is a table of millions of URLs and the same shape
-    * holds: the transport ships to executors, payload bytes are born
-    * there, and the driver never sees a body. */
+  /** The Dataset-path fetch: the city list goes into the [[Fetch]]
+    * device's contiguous slices, one partition each (at most 2 × the
+    * session's default parallelism, no shuffle), and each task streams
+    * its slice through the device's bounded window of
+    * [[WaqiTransport.fetch]] calls — executor-side and parallel, the
+    * Dataset twin of the DataSource V2 scan in [[WaqiTableProvider]].
+    * Rows come back in input order. At 100 TB-pipeline scale the city
+    * list is a table of millions of URLs and the same shape holds: the
+    * transport ships to executors, payload bytes are born there, and
+    * the driver never sees a body. */
   def fetchPayloads(spark: SparkSession, cities: Seq[String],
       transport: WaqiTransport): Dataset[(String, String)] = {
     import spark.implicits._
-    spark.createDataset(cities)
-      .repartition(math.max(cities.size, 1))
-      .mapPartitions(it => it.map(city => (city, transport.fetch(city))))
+    val slices =
+      Fetch.slices(cities, spark.sparkContext.defaultParallelism)
+    spark.createDataset(spark.sparkContext.parallelize(slices, slices.size)
+      .flatMap(Fetch.window(_, transport)))
   }
 
   /** Parse raw payload strings (one JSON document per city) into the
     * typed layout. PERMISSIVE: bad documents become rows with only
     * `_corrupt_record` set. */
   def parse(payloads: Dataset[(String, String)]): DataFrame = {
-    val spark = payloads.sparkSession
-    import spark.implicits._
     payloads.toDF("city", "raw")
       .withColumn("j", from_json(col("raw"), payloadSchema,
         Map("mode" -> "PERMISSIVE",

@@ -4,6 +4,7 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -26,16 +27,20 @@ import org.apache.spark.unsafe.types.UTF8String
   *     .option("token", "...").load()        // the LIVE path
   * }}}
   *
-  * One input partition PER CITY: each partition's `PartitionReader`
-  * runs its city's [[WaqiTransport.fetch]] executor-side, in parallel
-  * — unlike the reference's sequential driver-side loop
-  * (my_data_pipeline.py:78,155). The transport is the injection seam:
-  * [[HttpWaqiTransport]] is the real HTTP GET (loopback-exercised in
-  * WaqiDsv2Spec — this container has no egress), and the default
-  * [[FixtureWaqiTransport]] serves the canned payloads so every other
-  * query/spec stays deterministic. A partition carries only (city,
-  * transport class, options) — payload bytes are born on executors
-  * and never route through the driver.
+  * Input partitions are the [[Fetch]] device's slices: at most 2 × the
+  * session's default parallelism, each a contiguous run of cities that
+  * its `PartitionReader` streams through the device's bounded window of
+  * [[WaqiTransport.fetch]] calls executor-side, in parallel — unlike
+  * the reference's sequential driver-side loop
+  * (my_data_pipeline.py:78,155). A list no longer than that (the 7
+  * fixture cities on 4 cores) still gets one partition per city. The
+  * transport is the injection seam: [[HttpWaqiTransport]] is the real
+  * HTTP GET (exercised against a loopback server in WaqiDsv2Spec), and
+  * the default [[FixtureWaqiTransport]] serves the canned payloads so
+  * every other query/spec stays deterministic. A
+  * partition carries only (cities, transport class, options) — the
+  * reader builds one transport per partition, and payload bytes are
+  * born on executors and never route through the driver.
   */
 class WaqiTableProvider extends TableProvider {
 
@@ -77,9 +82,10 @@ final class WaqiTable(properties: Map[String, String])
         }
         val fqcn =
           opts.getOrElse("transport", WaqiTableProvider.DefaultTransport)
-        cities.map { city =>
-          WaqiInputPartition(city, fqcn, opts): InputPartition
-        }.toArray
+        val parallelism = SparkSession.active.sparkContext.defaultParallelism
+        Fetch.slices(cities, parallelism)
+          .map(slice => WaqiInputPartition(slice, fqcn, opts): InputPartition)
+          .toArray
       }
 
       override def createReaderFactory(): PartitionReaderFactory =
@@ -92,31 +98,31 @@ final class WaqiTable(properties: Map[String, String])
   }
 }
 
-/** One city's unit of work; serialized to executors. Carries the
+/** One slice's unit of work; serialized to executors. Carries the
   * transport RECIPE (class + options), not a payload — the fetch
   * itself happens in the reader. */
-final case class WaqiInputPartition(city: String, transportFqcn: String,
-    options: Map[String, String]) extends InputPartition
+final case class WaqiInputPartition(cities: Seq[String],
+    transportFqcn: String, options: Map[String, String])
+    extends InputPartition
 
+/** Streams its slice through [[Fetch.window]]. With HttpWaqiTransport
+  * each fetch is the live api.waqi.info call; the fixture transport
+  * answers from canned payloads. The window's task-completion listener
+  * frees its pool, so [[close]] has nothing left to do. */
 final class WaqiPartitionReader(p: WaqiInputPartition)
     extends PartitionReader[InternalRow] {
-  private var consumed = false
-  private var payload: String = _
+  private val rows = Fetch.window(p.cities,
+    WaqiTransport.instantiate(p.transportFqcn, p.options))
+  private var row: InternalRow = _
 
-  override def next(): Boolean =
-    if (consumed) false
-    else {
-      // THE fetch: executor-side, one GET per city partition. With
-      // HttpWaqiTransport this is the live api.waqi.info call; the
-      // fixture transport answers from canned payloads.
-      payload = WaqiTransport.instantiate(p.transportFqcn, p.options)
-        .fetch(p.city)
-      consumed = true
-      true
-    }
+  override def next(): Boolean = rows.hasNext && {
+    val (city, payload) = rows.next()
+    row = InternalRow(UTF8String.fromString(city),
+      UTF8String.fromString(payload))
+    true
+  }
 
-  override def get(): InternalRow =
-    InternalRow(UTF8String.fromString(p.city), UTF8String.fromString(payload))
+  override def get(): InternalRow = row
 
   override def close(): Unit = ()
 }
