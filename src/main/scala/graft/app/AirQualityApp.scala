@@ -1,6 +1,6 @@
 package graft.app
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.{Describe, Flatten}
 import graft.pipeline.Pipeline
@@ -8,7 +8,7 @@ import graft.sinks.{ConsoleReportSink, RecordingReportSink, ReportSink, Sinks, S
 import graft.sources.{FixtureWaqiTransport, WaqiFixtures, WaqiSource, WaqiTransport}
 
 /** The reference pipeline end-to-end (SURVEY.md §3.1 trace):
-  * extract (the fetch device; canned payloads by default) →
+  * extract (canned payloads by default) →
   * parse → flatten per pollutant → per-table describe report →
   * parquet sink partitioned by pollutant.
   *
@@ -36,24 +36,18 @@ object AirQualityApp {
       case None => new ConsoleReportSink
     }
 
-  /** Extract goes through [[WaqiSource.fetchPayloads]] (the bounded
-    * fetch device) with the canned fixture cities and transport by
-    * default; pass `HttpWaqiTransport` and real city names for the live
-    * feed. The payloads are cached for the run, so the error count,
-    * the four reports and the parquet write share one fetch per city,
-    * as the reference's single extract does. */
+  /** Extract goes through [[WaqiSource.fetchPayloads]] with the canned
+    * fixture cities and transport by default; pass `HttpWaqiTransport`
+    * and real city names for the live feed. The payloads stay cached,
+    * as `long` does, so the error count, the four reports, the parquet
+    * write and any later use of the returned frames share one fetch per
+    * city, as the reference's single extract does. */
   def run(spark: SparkSession, outDir: Option[String] = None,
       reporter0: Option[ReportSink] = None,
       cities: Seq[String] = WaqiFixtures.all.map(_._1),
       transport: WaqiTransport = new FixtureWaqiTransport): Result = {
     val payloads = WaqiSource.fetchPayloads(spark, cities, transport)
       .persist()
-    try runOn(payloads, outDir, reporter0)
-    finally payloads.unpersist()
-  }
-
-  private def runOn(payloads: Dataset[(String, String)],
-      outDir: Option[String], reporter0: Option[ReportSink]): Result = {
     val parsed = WaqiSource.parse(payloads)
     val okRows = WaqiSource.ok(parsed)
     val nErrors = WaqiSource.errors(parsed).count()

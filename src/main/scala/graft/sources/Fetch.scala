@@ -1,47 +1,27 @@
 package graft.sources
 
-import java.util.concurrent.{Callable, ExecutionException, Executors, Future, ThreadFactory}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.{InterruptibleIterator, TaskContext}
-
-/** The bounded fetch device behind both WAQI scan paths
-  * ([[WaqiSource.fetchPayloads]] and [[WaqiTableProvider]]).
+/** How both WAQI scan paths ([[WaqiSource.fetchPayloads]] and
+  * [[WaqiTableProvider]]) split a city list into Spark tasks.
   *
-  * '''Partitioning.''' A city list goes into
+  * A city list goes into
   * `max(1, min(cities, PartitionsPerCore × defaultParallelism))`
-  * contiguous slices ([[slices]]), one Spark task each. One task per
-  * city made the fetch scheduling-bound: a 200-city batch cost 405
-  * tasks for a CPU-only transport. Two slices per core keep a second
-  * wave for the scheduler to balance a slow slice with, and a list
-  * shorter than that still gets one partition per city.
+  * contiguous slices ([[slices]]), one Spark task each, and a task
+  * calls [[WaqiTransport.fetch]] once per city of its slice, in order.
+  * One task per city made the fetch scheduling-bound: a 200-city batch
+  * cost 405 tasks for a CPU-only transport. Two slices per core keep a
+  * second wave for the scheduler to balance a slow slice with, and a
+  * list shorter than that still gets one partition per city. The
+  * factor is a constant by design (not tuned against other factors):
+  * no conf or option sets it.
   *
-  * '''Fetching inside a task.''' A slice streams through [[window]]:
-  *  - at most `Depth` = 16 [[WaqiTransport.fetch]] calls in flight, on
-  *    a fixed pool of `min(Depth, slice size)` daemon threads that the
-  *    task owns — never a thread per city, never a JVM-wide pool;
-  *  - results come out in input order as the head of the window
-  *    completes, so a slice is never buffered whole;
-  *  - the pool is shut down when the iterator is exhausted and from a
-  *    `TaskContext` completion listener, so a failed or killed task
-  *    frees it too, and no fetch thread outlives its task;
-  *  - a killed task stops at its next row (the window is an
-  *    `InterruptibleIterator`), and starts no fetch if it was killed
-  *    before its first row — a failed action returns while its
-  *    sibling tasks are still being killed;
-  *  - a fetch that throws (transports return failures as error
-  *    payloads, so a throw is a contract breach) fails the task with
-  *    the original exception.
-  * The window hides a live transport's latency (16 GETs per task
-  * overlap); for a CPU-only transport it costs one pool per task.
-  * Both factors are constants by design: no conf or option sets them.
+  * A task fetches its slice sequentially: with a CPU-only transport the
+  * slices already keep every core busy. Overlapping a live transport's
+  * latency inside a task (a bounded in-flight window) is left until a
+  * benchmark workload has a transport with latency to measure it on.
   */
 object Fetch {
 
   val PartitionsPerCore = 2
-  val Depth = 16
-  /** Name prefix of every pool thread (what a leak check looks for). */
-  val ThreadPrefix = "graft-fetch-"
 
   /** Slice `i` of `k` holds cities `[i·n/k, (i+1)·n/k)` — deterministic
     * and contiguous, so concatenating the slices gives the input order.
@@ -52,64 +32,6 @@ object Fetch {
     (0 until k).map { i =>
       all.slice((i.toLong * all.size / k).toInt,
         ((i + 1).toLong * all.size / k).toInt)
-    }
-  }
-
-  /** `(city, payload)` per city of `slice`, in order, through the
-    * bounded window. Runs inside a Spark task, which owns the pool. */
-  def window(slice: Seq[String], transport: WaqiTransport)
-      : Iterator[(String, String)] = {
-    val task = TaskContext.get()
-    require(task != null, "the fetch window runs inside a Spark task")
-    if (slice.isEmpty) Iterator.empty
-    else new InterruptibleIterator(task,
-      new Window(task, slice.toIndexedSeq, transport))
-  }
-
-  private val threadIds = new AtomicInteger()
-
-  private object DaemonThreads extends ThreadFactory {
-    override def newThread(r: Runnable): Thread = {
-      val t = new Thread(r, ThreadPrefix + threadIds.incrementAndGet())
-      t.setDaemon(true)
-      t
-    }
-  }
-
-  private final class Window(task: TaskContext, cities: IndexedSeq[String],
-      transport: WaqiTransport) extends Iterator[(String, String)] {
-    // threads start with the first submitted fetch, in the first next()
-    private val pool = Executors.newFixedThreadPool(
-      math.min(Depth, cities.size), DaemonThreads)
-    private val inFlight = new java.util.ArrayDeque[Future[String]](Depth)
-    private var submitted = 0
-    private var emitted = 0
-
-    task.addTaskCompletionListener[Unit](_ => close())
-
-    private def refill(): Unit =
-      while (submitted < cities.size && inFlight.size < Depth) {
-        val city = cities(submitted)
-        inFlight.add(pool.submit(new Callable[String] {
-          override def call(): String = transport.fetch(city)
-        }))
-        submitted += 1
-      }
-
-    private def close(): Unit = pool.shutdownNow()
-
-    override def hasNext: Boolean = emitted < cities.size
-
-    override def next(): (String, String) = {
-      if (!hasNext) throw new NoSuchElementException("fetch window drained")
-      refill()
-      val payload =
-        try inFlight.poll().get()
-        catch { case e: ExecutionException => throw e.getCause }
-      val city = cities(emitted)
-      emitted += 1
-      if (emitted == cities.size) close()
-      (city, payload)
     }
   }
 }

@@ -5,11 +5,9 @@ package graft.sources
   *
   * Implementations MUST be serializable and cheap to construct: a
   * transport instance (or the class name + options to build one) ships
-  * to executors, where [[fetch]] runs once per city INSIDE the scan,
-  * through the [[Fetch]] device: a few partitions, each with up to 16
-  * calls in flight on its own threads — unlike the reference's
-  * sequential driver-side loop (my_data_pipeline.py:78,155). So
-  * [[fetch]] must be safe to call from several threads at once.
+  * to executors, where [[fetch]] runs once per city INSIDE the scan —
+  * the slices of [[Fetch.slices]] in parallel, unlike the reference's
+  * sequential driver-side loop (my_data_pipeline.py:78,155).
   * Failures never throw out of [[fetch]]: transport-level errors come
   * back as an error-status payload string, so the downstream
   * PERMISSIVE parse + status dispatch (S2) handles HTTP failures, API

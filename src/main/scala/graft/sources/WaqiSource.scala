@@ -18,9 +18,9 @@ import org.apache.spark.sql.types._
   *    (observable parity with the reference) while staying countable
   *    as an error metric instead of vanishing;
   *  - fan-out is a Dataset of payloads, not a sequential driver loop:
-  *    the [[Fetch]] device runs bounded windows of fetches in a few
-  *    partitions, on the Dataset path or the DataSource V2 provider;
-  *    everything downstream of the payload Dataset is unchanged.
+  *    [[Fetch.slices]] splits the cities into a few partitions, on the
+  *    Dataset path or the DataSource V2 provider; everything downstream
+  *    of the payload Dataset is unchanged.
   */
 object WaqiSource {
 
@@ -45,11 +45,10 @@ object WaqiSource {
           Pollutants.map(p => StructField(p, dayStat)))))))))),
     StructField("_corrupt_record", StringType)))
 
-  /** The Dataset-path fetch: the city list goes into the [[Fetch]]
-    * device's contiguous slices, one partition each (at most 2 × the
-    * session's default parallelism, no shuffle), and each task streams
-    * its slice through the device's bounded window of
-    * [[WaqiTransport.fetch]] calls — executor-side and parallel, the
+  /** The Dataset-path fetch: the city list goes into [[Fetch.slices]],
+    * one partition each (at most 2 × the session's default parallelism,
+    * no shuffle), and each task calls [[WaqiTransport.fetch]] once per
+    * city of its slice — executor-side and parallel across slices, the
     * Dataset twin of the DataSource V2 scan in [[WaqiTableProvider]].
     * Rows come back in input order. At 100 TB-pipeline scale the city
     * list is a table of millions of URLs and the same shape holds: the
@@ -61,7 +60,7 @@ object WaqiSource {
     val slices =
       Fetch.slices(cities, spark.sparkContext.defaultParallelism)
     spark.createDataset(spark.sparkContext.parallelize(slices, slices.size)
-      .flatMap(Fetch.window(_, transport)))
+      .flatMap(_.iterator.map(c => (c, transport.fetch(c)))))
   }
 
   /** Parse raw payload strings (one JSON document per city) into the

@@ -27,20 +27,20 @@ import org.apache.spark.unsafe.types.UTF8String
   *     .option("token", "...").load()        // the LIVE path
   * }}}
   *
-  * Input partitions are the [[Fetch]] device's slices: at most 2 × the
-  * session's default parallelism, each a contiguous run of cities that
-  * its `PartitionReader` streams through the device's bounded window of
-  * [[WaqiTransport.fetch]] calls executor-side, in parallel — unlike
-  * the reference's sequential driver-side loop
-  * (my_data_pipeline.py:78,155). A list no longer than that (the 7
-  * fixture cities on 4 cores) still gets one partition per city. The
-  * transport is the injection seam: [[HttpWaqiTransport]] is the real
-  * HTTP GET (exercised against a loopback server in WaqiDsv2Spec), and
-  * the default [[FixtureWaqiTransport]] serves the canned payloads so
-  * every other query/spec stays deterministic. A
-  * partition carries only (cities, transport class, options) — the
-  * reader builds one transport per partition, and payload bytes are
-  * born on executors and never route through the driver.
+  * Input partitions are [[Fetch.slices]]: at most 2 × the session's
+  * default parallelism, each a contiguous run of cities whose
+  * `PartitionReader` calls [[WaqiTransport.fetch]] once per city
+  * executor-side, the slices in parallel — unlike the reference's
+  * sequential driver-side loop (my_data_pipeline.py:78,155). A list no
+  * longer than that (the 7 fixture cities on 4 cores) still gets one
+  * partition per city. The transport is the injection seam:
+  * [[HttpWaqiTransport]] is the real HTTP GET (exercised against a
+  * loopback server in WaqiDsv2Spec), and the default
+  * [[FixtureWaqiTransport]] serves the canned payloads so every other
+  * query/spec stays deterministic. A partition carries only (cities,
+  * transport class, options) — the reader builds one transport per
+  * partition, and payload bytes are born on executors and never route
+  * through the driver.
   */
 class WaqiTableProvider extends TableProvider {
 
@@ -105,20 +105,19 @@ final case class WaqiInputPartition(cities: Seq[String],
     transportFqcn: String, options: Map[String, String])
     extends InputPartition
 
-/** Streams its slice through [[Fetch.window]]. With HttpWaqiTransport
+/** Fetches its slice one city per `next()`. With HttpWaqiTransport
   * each fetch is the live api.waqi.info call; the fixture transport
-  * answers from canned payloads. The window's task-completion listener
-  * frees its pool, so [[close]] has nothing left to do. */
+  * answers from canned payloads. */
 final class WaqiPartitionReader(p: WaqiInputPartition)
     extends PartitionReader[InternalRow] {
-  private val rows = Fetch.window(p.cities,
-    WaqiTransport.instantiate(p.transportFqcn, p.options))
+  private val transport = WaqiTransport.instantiate(p.transportFqcn, p.options)
+  private val cities = p.cities.iterator
   private var row: InternalRow = _
 
-  override def next(): Boolean = rows.hasNext && {
-    val (city, payload) = rows.next()
+  override def next(): Boolean = cities.hasNext && {
+    val city = cities.next()
     row = InternalRow(UTF8String.fromString(city),
-      UTF8String.fromString(payload))
+      UTF8String.fromString(transport.fetch(city)))
     true
   }
 

@@ -1,55 +1,26 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.GraftBus
 import org.apache.spark.sql.{Encoders, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{Fetch, WaqiSource, WaqiTransport}
+import graft.app.AirQualityApp
+import graft.sinks.RecordingReportSink
+import graft.sources.{Fetch, FixtureWaqiTransport, WaqiFixtures, WaqiSource, WaqiTransport}
 
-/** Sleeps 20 ms per fetch and records how many fetches run at once,
-  * in total and per slice (the city's `slice<i>:` prefix), in JVM-wide
-  * counters that the local executors share. */
-final class ProbeTransport extends WaqiTransport {
+/** Serves the fixture payloads and logs every fetched city in a
+  * JVM-wide queue that the local executors share. */
+final class CountingTransport extends WaqiTransport {
+  private val fixtures = new FixtureWaqiTransport
   override def fetch(city: String): String = {
-    val slice = city.takeWhile(_ != ':')
-    val now = ProbeTransport.enter(slice)
-    try {
-      Thread.sleep(20)
-      s"""{"status": "ok", "echo": "$city", "inFlight": $now}"""
-    } finally ProbeTransport.exit(slice)
+    CountingTransport.fetched.add(city)
+    fixtures.fetch(city)
   }
 }
 
-object ProbeTransport {
-  val inFlight = new AtomicInteger()
-  val peak = new AtomicInteger()
-  private val perSlice =
-    new java.util.concurrent.ConcurrentHashMap[String, (AtomicInteger, AtomicInteger)]()
-
-  private def counters(slice: String) =
-    perSlice.computeIfAbsent(slice, _ => (new AtomicInteger, new AtomicInteger))
-
-  def enter(slice: String): Int = {
-    val now = inFlight.incrementAndGet()
-    peak.accumulateAndGet(now, math.max)
-    val (cur, top) = counters(slice)
-    top.accumulateAndGet(cur.incrementAndGet(), math.max)
-    now
-  }
-
-  def exit(slice: String): Unit = {
-    inFlight.decrementAndGet()
-    counters(slice)._1.decrementAndGet()
-  }
-
-  def slicePeaks: Map[String, Int] =
-    perSlice.asScala.map { case (k, (_, top)) => k -> top.get }.toMap
-
-  def reset(): Unit = { inFlight.set(0); peak.set(0); perSlice.clear() }
+object CountingTransport {
+  val fetched = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
 
 /** Echoes the city, and breaks the transport contract by throwing on
@@ -60,10 +31,10 @@ final class ThrowingTransport extends WaqiTransport {
     else s"""{"status": "ok", "echo": "$city"}"""
 }
 
-/** The bounded fetch device ([[Fetch]]) on both scan paths: rows in
-  * input order, at most 2 × cores partitions, at most 16 fetches in
-  * flight per partition, no fetch thread outliving its task, and a
-  * throwing transport failing the action with its own exception. */
+/** [[Fetch.slices]] on both scan paths: rows in input order, at most
+  * 2 × cores partitions, the same slices on either path, and a
+  * throwing transport failing the action with its own exception; and
+  * the app fetching each city once. */
 class WaqiFetchSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SharedSession.spark
   private def cores = spark.sparkContext.defaultParallelism
@@ -71,28 +42,6 @@ class WaqiFetchSpec extends AnyFunSuite {
   private def cities(n: Int): Seq[String] = (0 until n).map(i => s"c$i")
 
   private def echo(city: String): String = new ThrowingTransport().fetch(city)
-
-  private def fetchThreads: Seq[String] =
-    Thread.getAllStackTraces.keySet.asScala.toSeq.map(_.getName)
-      .filter(_.startsWith(Fetch.ThreadPrefix))
-
-  private def runningTasks: Int = {
-    GraftBus.drain(spark.sparkContext)
-    spark.sparkContext.statusTracker.getExecutorInfos.map(_.numRunningTasks).sum
-  }
-
-  /** A failed action returns while its sibling tasks are still being
-    * killed, and a shut-down pool's threads exit asynchronously: wait
-    * until no task runs and the threads are gone. A leaked pool's idle
-    * threads never exit. */
-  private def assertNoFetchThreads(): Unit = {
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while ((runningTasks > 0 || fetchThreads.nonEmpty) &&
-        System.nanoTime() < deadline)
-      Thread.sleep(20)
-    assert(runningTasks == 0)
-    assert(fetchThreads.isEmpty, s"live fetch threads: $fetchThreads")
-  }
 
   private def dsv2(cs: Seq[String], transport: Class[_]) =
     spark.read.format("graft.sources.WaqiTableProvider")
@@ -109,13 +58,11 @@ class WaqiFetchSpec extends AnyFunSuite {
       assert(ds.collect().toSeq == want, s"$n cities, Dataset path")
       assert(ds.rdd.getNumPartitions <= 2 * cores)
       assert(ds.rdd.getNumPartitions == math.max(1, math.min(n, 2 * cores)))
-      assertNoFetchThreads()
       val df = dsv2(cs, classOf[ThrowingTransport])
       val got = df.as(Encoders.tuple(Encoders.STRING, Encoders.STRING))
         .collect().toSeq
       assert(got == want, s"$n cities, DSv2 path")
       assert(df.rdd.getNumPartitions <= 2 * cores)
-      assertNoFetchThreads()
     }
   }
 
@@ -130,34 +77,9 @@ class WaqiFetchSpec extends AnyFunSuite {
       .map(_.map(_.getString(0)).toSeq).toSeq
     assert(viaDataset == slices)
     assert(viaDsv2 == slices)
-    assertNoFetchThreads()
   }
 
-  test("a 20 ms transport runs more than one fetch at a time per " +
-      "partition, and never more than 16") {
-    // city names carry their slice, so the probe can count per slice
-    val n = 200
-    val raw = Fetch.slices(cities(n), cores)
-    val cs = raw.zipWithIndex.flatMap { case (s, i) =>
-      s.map(c => s"slice$i:$c") }
-    Seq[Seq[String] => Long](
-      c => WaqiSource.fetchPayloads(spark, c, new ProbeTransport).count(),
-      c => dsv2(c, classOf[ProbeTransport]).count()
-    ).foreach { count =>
-      ProbeTransport.reset()
-      assert(count(cs) == n)
-      val peaks = ProbeTransport.slicePeaks
-      assert(peaks.size == raw.size)
-      assert(peaks.values.forall(p => p > 1 && p <= Fetch.Depth), peaks)
-      assert(ProbeTransport.peak.get > math.min(raw.size, cores))
-      assert(ProbeTransport.peak.get <= Fetch.Depth * raw.size)
-      assert(ProbeTransport.inFlight.get == 0)
-      assertNoFetchThreads()
-    }
-  }
-
-  test("a throwing transport fails the action with its own exception " +
-      "and leaves no fetch thread behind") {
+  test("a throwing transport fails the action with its own exception") {
     val cs = cities(50).patch(23, Seq("boom"), 1)
     Seq(
       () => WaqiSource.fetchPayloads(spark, cs, new ThrowingTransport).count(),
@@ -168,7 +90,19 @@ class WaqiFetchSpec extends AnyFunSuite {
         .takeWhile(_ != null).toSeq
       assert(causes.exists(c => c.isInstanceOf[IllegalStateException] &&
         c.getMessage == "contract breach at boom"), causes)
-      assertNoFetchThreads()
     }
+  }
+
+  test("the app fetches each city once, also when the returned frames " +
+      "are used after the run") {
+    CountingTransport.fetched.clear()
+    val cs = WaqiFixtures.all.map(_._1)
+    val r = AirQualityApp.run(spark,
+      reporter0 = Some(new RecordingReportSink((_, _) => ())),
+      cities = cs, transport = new CountingTransport)
+    assert(r.long.orderBy("pollutant", "country", "day").collect().nonEmpty)
+    assert(r.perPollutant.values.map(_.count()).sum == r.long.count())
+    assert(CountingTransport.fetched.asScala.toSeq.sorted == cs.sorted)
+    r.long.unpersist()
   }
 }
