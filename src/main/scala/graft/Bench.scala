@@ -1,35 +1,47 @@
 package graft
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.util.control.NonFatal
 object Bench {
 
-  /** One timing-session setup shared by Bench, JobProfile and Explain —
-    * if they diverged, profiled times and dumped plans would stop being
-    * representative of bench times. */
-  private[graft] def timingSession(): SparkSession = {
+  /** The one session factory. A launcher's master (spark-submit's
+    * `--master`, or `-Dspark.master`) and its shuffle partitions win;
+    * without one the session runs `local[SPARK_GRAFT_CPUS]` with as many
+    * shuffle partitions. Verify builds with no `conf`, the timing
+    * session with its AQE settings ([[timingSession]]). */
+  private[graft] def session(conf: (String, String)*): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalescing floor (guide §2.2): with parallelismFirst on,
-      // the post-shuffle target is max(bytes/parallelism,
-      // minPartitionSize) — at production shuffle sizes the first
-      // term dominates and this floor is unread; in the small-shuffle
-      // regime the 1 MB default serializes CPU-dense stages (shingle
-      // arrays, signature/verify passes decompress far wider than
-      // their shuffle bytes). Parameterised, local default 64k.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCED_PARTITION", "64k"))
-      // let AQE apply the same byte-based sizing to persisted plans
-      // (off by default only to keep cached output partitioning
-      // stable for reuse, which nothing here relies on)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
+    val builder = SparkSession.builder()
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    if (!new SparkConf().contains("spark.master"))
+      builder.master(s"local[$cpus]")
+        .config("spark.sql.shuffle.partitions", cpus)
+    conf.foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** The session of Bench, JobProfile, Explain, the trials and the WAQI
+    * app — if they diverged, profiled times and dumped plans would stop
+    * being representative of bench times. Verify's outputs are not all
+    * the same under it: q148_quality_classifier and
+    * q193_classifier_sampled read other float probabilities. */
+  private[graft] def timingSession(): SparkSession = session(
+    // AQE coalescing floor (guide §2.2): with parallelismFirst on,
+    // the post-shuffle target is max(bytes/parallelism,
+    // minPartitionSize) — at production shuffle sizes the first
+    // term dominates and this floor is unread; in the small-shuffle
+    // regime the 1 MB default serializes CPU-dense stages (shingle
+    // arrays, signature/verify passes decompress far wider than
+    // their shuffle bytes). Parameterised, local default 64k.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
+      sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCED_PARTITION", "64k"),
+    // let AQE apply the same byte-based sizing to persisted plans
+    // (off by default only to keep cached output partitioning
+    // stable for reuse, which nothing here relies on)
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
 
   /** Warm the JVM (codegen, parquet reader, shuffle paths) so the
     * first measured query isn't charged for JIT + classloading. */

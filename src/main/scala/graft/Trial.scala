@@ -1,0 +1,815 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
+import graft.multimodal.{AudioCodec, ImageCodec, Multimodal, VideoCodec}
+import graft.operators.{Dedup, Ingest, Similarity}
+
+/** Scale trials: grow a base SF directory `factor`× into twin
+  * directories ([[buildTwin]]) and measure how queries and serving
+  * paths grow with it. One main, one mode per trial:
+  *
+  *  - `scale`: the growth table over a curated set of scale-
+  *    representative queries on a twin whose facts (orders/lineitem,
+  *    events, documents) grow with disjoint keys. Document replicas are
+  *    near-duplicates, so the dup graph gets `factor`× denser — the
+  *    stress a bigger crawl produces — and the edge count crosses the
+  *    driver union-find bound, so the distributed star-rounds tier runs.
+  *    Dimensions and embeddings stay as they are (the all-pairs
+  *    embedding tiers scale through LSH/IVF, measured by `embed`).
+  *  - `embed`: the growth table of the embedding family on a dense twin
+  *    (replicas are near-twins of their originals, so the true-pair
+  *    mass grows ~factor²) and a sparse one (replicas rolled by
+  *    `replica` dimensions, so cross-replica cosines fall to the random
+  *    background and the true-pair mass grows ~factor), then the
+  *    structural counts: the exact tier's pair space against the banded
+  *    candidate volume at 8-bit, 16-bit and auto-sized bands.
+  *  - `media`: the same for the multimodal dedup family: a dense twin
+  *    of perceptually-near copies made with the real codecs, a sparse
+  *    one regenerated from shifted doc ids; the counts are pigeonhole
+  *    candidates against the all-pairs contract.
+  *  - `embed-inc`: incremental SemDeDup with the increment fixed while
+  *    the base grows: the one-time index build, the steady-state serve
+  *    against the pre-built index (the claim: ≈ flat) with the
+  *    partitions its pruned scan read, and q314's whole-corpus SemDeDup
+  *    that the incremental path exists to avoid.
+  *  - `media-artifact`: the at-rest fingerprint artifact's one-time
+  *    build (the decode, once per corpus) against each dedup tier served
+  *    from it and the inline tier that re-decodes every run.
+  *  - `ingest`: the composed admission manifest (q341/q342's serving
+  *    core): three one-time artifact builds, each screen served from its
+  *    artifact, and [[operators.Ingest.admitBatch]] — the claims being
+  *    manifest ≈ flat as the base grows and ≈ Σ(screen serves).
+  *  - `artifact-mode`: commit-protocol overhead (the same builds, a
+  *    nightly append and a serve under `rename` and under `marker`),
+  *    then the exact screen's serve as its delta count grows 1 → 8 and
+  *    after compaction folds them.
+  *
+  * For `scale`, `embed` and `media`, `extra` is `counts` (only the
+  * structural counts) or a comma-separated subset of the growth table.
+  * `baseSfDir` defaults to `SPARK_GRAFT_SF_DIR`.
+  *
+  * Usage: runMain graft.Trial <mode> [baseSfDir] [factor] [workDir] [extra]
+  */
+object Trial {
+
+  private type Query = (SparkSession, String) => DataFrame
+
+  // ---- twin builder -------------------------------------------------
+
+  /** An id key: the span every column keyed on it shifts by per
+    * replica is `max(column) + 1` over the base `table`. */
+  private[graft] final case class Key(table: String, column: String)
+
+  /** How a twin grows one table. Replica `i` shifts each key column by
+    * `i` × its key's span, so replicas hold disjoint ids, and `vary`
+    * then turns it into a near-copy or an unrelated row set. Replica 0
+    * is the base, byte for byte. */
+  private[graft] sealed abstract class Grow(val keys: (String, Key)*) {
+    def base(spark: SparkSession, baseDir: String, table: String)
+        : DataFrame = spark.read.parquet(s"$baseDir/$table.parquet")
+    def check(base: DataFrame, factor: Int): Unit = ()
+    def vary(replica: DataFrame, i: Int): DataFrame = replica
+  }
+
+  /** Ids shift; rows are otherwise copied. */
+  private[graft] final case class IdShift(shifts: (String, Key)*)
+      extends Grow(shifts: _*)
+
+  /** Replicas ≥ 1 append ` replica<i>` to the text: near-duplicates. */
+  private[graft] case object DenseDocs
+      extends Grow("doc_id" -> Key("documents", "doc_id")) {
+    override def vary(d: DataFrame, i: Int): DataFrame =
+      d.withColumn("text", concat(col("text"), lit(s" replica$i")))
+        .withColumn("n_chars",
+          length(col("text")).cast(d.schema("n_chars").dataType))
+  }
+
+  /** Replicas ≥ 1 move dimension 0 by `i`·1e-3: cosine ≈ 0.9999 to
+    * their originals, so each original gains factor − 1 near-twins. */
+  private[graft] case object DenseEmbeddings
+      extends Grow("vec_id" -> Key("embeddings", "vec_id")) {
+    override def vary(d: DataFrame, i: Int): DataFrame =
+      d.withColumn("embedding", transform(col("embedding"),
+        (x, idx) => when(idx === 0, x + lit(i * 1e-3f))
+          .otherwise(x).cast("float")))
+  }
+
+  /** Replica `i` is rolled by `i` dimensions: norms and within-replica
+    * geometry stay exact, cross-replica cosines fall to the random
+    * background. Rolls repeat past the dimension, so `factor` ≤ dim. */
+  private[graft] case object RolledEmbeddings
+      extends Grow("vec_id" -> Key("embeddings", "vec_id")) {
+    override def check(base: DataFrame, factor: Int): Unit = {
+      val dim = base.select(size(col("embedding"))).head.getInt(0)
+      require(factor <= dim,
+        s"rolled replicas need factor <= dim ($factor > $dim): replica " +
+          "rolls repeat and the sparse-growth premise breaks")
+    }
+    override def vary(d: DataFrame, i: Int): DataFrame = {
+      val e = col("embedding")
+      d.withColumn("embedding",
+        concat(slice(e, lit(i + 1), size(e) - i), slice(e, lit(1), lit(i))))
+    }
+  }
+
+  /** The base's materialized media; replicas ≥ 1 are perceptually-near
+    * copies made with the real codecs: images brightened, audio
+    * re-levelled, video brightened frame by frame. */
+  private[graft] case object DenseMedia
+      extends Grow("media_id" -> Key("media", "media_id")) {
+    override def base(spark: SparkSession, baseDir: String,
+        table: String): DataFrame =
+      Multimodal.materializedMedia(spark, baseDir)
+    override def vary(d: DataFrame, i: Int): DataFrame =
+      d.withColumn("bytes",
+        when(col("kind") === "image",
+          brightenImage(col("bytes"), lit(i % 8 + 1)))
+          .when(col("kind") === "audio", relevelAudio(col("bytes"), lit(i)))
+          .otherwise(brightenVideo(col("bytes"), lit(i % 8 + 1))))
+  }
+
+  /** Replicas ≥ 1 are regenerated from their shifted ids (media content
+    * is a pure function of doc_id): unrelated content, background-only
+    * collisions. */
+  private[graft] case object SparseMedia
+      extends Grow("media_id" -> Key("media", "media_id")) {
+    override def base(spark: SparkSession, baseDir: String,
+        table: String): DataFrame =
+      Multimodal.materializedMedia(spark, baseDir)
+    override def vary(d: DataFrame, i: Int): DataFrame =
+      Multimodal.syntheticMediaFrom(d.select(col("media_id").as("doc_id")))
+  }
+
+  /** `max(c) + 1` over `df`: the span that keeps replicas' ids apart. */
+  private def span(df: DataFrame, c: String): Long =
+    df.agg(max(col(c))).head.getLong(0) + 1
+
+  /** Writes the `factor`× twin of `baseDir` into `outDir`: each table
+    * with a rule grows by it, every other table is copied as it is
+    * (raw `events.ts` included, under `nanosAsLong`, which is restored
+    * afterwards). The `_TWIN` marker, written last, names the build; a
+    * call that finds the same name writes nothing. A grown media table
+    * is registered for `outDir` either way, or [[Multimodal]] would
+    * derive unperturbed media from the copied documents. */
+  private[graft] def buildTwin(spark: SparkSession, baseDir: String,
+      outDir: String, factor: Int, rules: Map[String, Grow]): Unit = {
+    val marker = Paths.get(outDir, "_TWIN")
+    val name = s"$baseDir x$factor " +
+      rules.toSeq.sortBy(_._1).mkString(" ")
+    if (!Files.exists(marker) || Files.readString(marker) != name) {
+      Files.createDirectories(marker.getParent)
+      val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+      val prev = spark.conf.getOption(nanos)
+      spark.conf.set(nanos, "true")
+      try {
+        def base(t: String): DataFrame = rules.get(t)
+          .fold(spark.read.parquet(s"$baseDir/$t.parquet"))(
+            _.base(spark, baseDir, t))
+        val spans = scala.collection.mutable.Map.empty[Key, Long]
+        def shift(k: Key): Long =
+          spans.getOrElseUpdate(k, span(base(k.table), k.column))
+        val tables = new java.io.File(baseDir).list().toSeq
+          .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet"))
+        // every rule checks its base before any table is written
+        (tables ++ rules.keys).distinct.map { t =>
+          val df = base(t)
+          t -> rules.get(t).fold(df) { g =>
+            g.check(df, factor)
+            (0 until factor).map { i =>
+              if (i == 0) df
+              else g.vary(g.keys.foldLeft(df) { case (d, (c, k)) =>
+                d.withColumn(c, col(c) + lit(i * shift(k)))
+              }, i)
+            }.reduce(_ unionAll _)
+          }
+        }.foreach { case (t, grown) =>
+          grown.write.mode("overwrite").parquet(s"$outDir/$t.parquet")
+        }
+      } finally prev.fold(spark.conf.unset(nanos))(spark.conf.set(nanos, _))
+      Files.writeString(marker, name)
+    }
+    if (rules.contains("media"))
+      Multimodal.registerMediaPath(spark, outDir, s"$outDir/media.parquet")
+  }
+
+  /** One twin of a mode: its directory suffix, the column label of its
+    * growth ratio, and its rules. */
+  private[graft] final case class Twin(suffix: String, label: String,
+      rules: Map[String, Grow])
+
+  private val OrderKey = Key("orders", "o_orderkey")
+
+  private[graft] val Twins: Map[String, Seq[Twin]] = Map(
+    "scale" -> Seq(Twin("", "ratio", Map(
+      "orders" -> IdShift("o_orderkey" -> OrderKey),
+      "lineitem" -> IdShift("l_orderkey" -> OrderKey),
+      "events" -> IdShift("event_id" -> Key("events", "event_id"),
+        "user_id" -> Key("events", "user_id")),
+      "documents" -> DenseDocs))),
+    "embed" -> Seq(
+      Twin("", "dense", Map("embeddings" -> DenseEmbeddings)),
+      Twin("r", "sparse", Map("embeddings" -> RolledEmbeddings))),
+    "media" -> Seq(
+      Twin("", "dense", Map("media" -> DenseMedia)),
+      Twin("r", "sparse", Map("media" -> SparseMedia))),
+    "ingest" -> Seq(Twin("", "", Map(
+      "documents" -> DenseDocs, "embeddings" -> DenseEmbeddings))))
+
+  private def build(spark: SparkSession, a: Args, t: Twin): String = {
+    val dir = s"${a.workDir}/x${a.factor}${t.suffix}"
+    buildTwin(spark, a.baseDir, dir, a.factor, t.rules)
+    dir
+  }
+
+  // ---- growth tables ------------------------------------------------
+
+  /** A growth table: registry queries, timed on the base and on every
+    * twin, each twin's time printed as a ratio to the base's. */
+  private[graft] final case class Growth(width: Int, queries: Seq[String])
+
+  private[graft] val GrowthTables: Map[String, Growth] = Map(
+    "scale" -> Growth(28, Seq(
+      "q01_pricing_summary", // full-scan agg
+      "q03_segment_revenue", // fact-fact join + agg
+      "q24_dedup_exact", // hash-keyed dedup
+      "q28_minhash_dedup", // LSH candidate generation + verify
+      "q82_dup_clusters", // connected components over the dup graph
+      "q50_describe_lineitem", // one-pass moments + distributed quantiles
+      "q67_token_batches", // two-phase prefix sum
+      "q70_grouped_percentiles", // per-group exact quantiles
+      "q73_salted_skew_join", // skew-mitigated join
+      "q107_topk_custom_operator", // custom map-side-pruned top-k plan
+      "q118_equi_depth_hist", // exact NTILE machinery
+      "q119_key_skew_profile", // key-distribution diagnostic
+      "q130_curation_pipeline", // composed curation plan
+      "q138_line_dedup_rewrite", // line-level dedup + rewrite
+      "q140_bigram_fluency", // LM scoring with in-engine model
+      "q149_global_row_ids", // two-phase global numbering
+      "q153_column_stats", // one-scan ANALYZE (exact-NDV audit tier)
+      "q188_column_stats_approx", // ANALYZE default: no multi-distinct Expand
+      "q189_cross_corpus_bloom", // bloom-prefixed anti-join screen
+      "q181_mad_outliers", // events family: 2 rounds of quantile machinery
+      "q192_exact_substr_dedup", // token-span dedup on a 10x-denser dup corpus
+      "q173_sessionize", // events family: gap-based keyed-window sessions
+      "q190_best_of_cluster", // keep-best over the EXACT pair tier (block², audit-only)
+      "q196_best_of_cluster_lsh", // keep-best over LSH edges — the scale tier
+      "q191_curriculum_batches", // quality-sharded cumsum packing
+      "q198_shard_manifest", // partial-agg manifest: nShards rows out
+      "q199_span_decontaminate", // bench-gram broadcast + drop-set rewrite
+      "q200_contamination_report", // broadcast semi join, bench-sized rollup
+      "q201_release_manifest", // composed release pipeline, one plan
+      "q197_intradoc_line_dedup", // zero-shuffle projection: must be ~flat
+      "q202_sparse_cosine_pairs", // df-capped posting join on a denser corpus
+      "q204_source_novelty", // gram-keyed argmin + tiny cum window
+      "q206_manifest_merge", // two manifests + an nShards-row join
+      "q208_exact_heavy_tokens", // CMS screen + candidate-only exact agg
+      "q210_fluency_bands", // LM scoring + distributed-rank CDF lookup
+      "q211_release_card", // six 1-row branches, scalar assembly
+      "q212_heldout_fluency", // model left joins, crawl-side scan
+      "q213_heldout_fluency_local", // broadcast-model udf projection
+      "q214_ccnet_keep", // the composed held-out gate
+      "q215_curation_funnel", // four stage aggregates, four rows out
+      "q217_minhash_calibration", // row-local md5 sigs + df-capped posting join
+      "q218_token_diversity", // zero-shuffle run-length fold: must be ~flat
+      "q219_bpe_fertility", // train+encode compose + source rollup
+      "q220_calibrated_fluency", // LM scores + 2 rounds of quantile machinery
+      "q221_nearest_duplicates", // q202 pairs + doc-keyed argmax rollup
+      "q222_epoch_shuffle", // hash-sharded two-phase prefix rank
+      "q223_vocab_coverage", // counts-of-counts spectrum + tiny window
+      "q224_split_leakage", // q202 pairs + hash-split label joins
+      "q225_packing_efficiency", // q67 prefix plan + batch rollup
+      "q227_budget_waterfill", // one source rollup + tiny solve
+      "q230_length_spectrum", // row-local bucket + tiny groupBy
+      "q231_contamination_radius", // seed semi-join + frontier rounds
+      "q233_contamination_by_source", // q92 sweep + source rollup
+      "q234_quality_length_joint", // LM scores + CDF + bucket rollup
+      "q235_cleaning_impact_card", // five 1-row branches, scalar assembly
+      "q236_source_quota", // per-source sharded quality cumsum
+      "q237_source_overlap", // gram-keyed self-join, source-df bounded
+      "q238_interleaved_order", // per-source two-phase rank + closed form
+      "q239_eval_holdout", // custom TopK: k-bounded heaps before shuffle
+      "q240_length_packing", // per-bucket two-phase rank + pack rollup
+      "q241_jump_reshard", // row-local codegen loop + 1-row rollup
+      "q242_release_packing", // curation -> quota -> packing, one plan
+      "q243_source_overlap_sketch", // one partial-agg signature pass
+      "q244_code_shape_gate", // row-local line algebra: must be ~flat-linear
+      "q245_encoding_noise", // row-local counts + source rollup
+      "q246_license_screen", // row-local classify + source×class rollup
+      "q247_weighted_reservoir", // TakeOrdered heaps: k fixed, ~flat
+      "q249_dup_flow_matrix", // fp-keyed self-join riding dup mass
+      "q250_epoch_allocation", // one source rollup + tiny tier solve
+      "q251_source_health", // five per-source branches, |sources| rows out
+      "q252_epoch_schedule", // broadcast alloc join + bounded explode
+      "q253_eval_windows", // row-local hash offset + slice: must be ~flat
+      "q254_cell_suppression", // two tiny rollups: must be ~flat
+      "q255_retrieval_triplets", // q165 candidate-sized scoring + tiny assembly
+      "q256_pack_boundaries", // q240 assignment + row-local slot algebra
+      "q257_sampled_quantiles", // hash-slice sample + bucketed counts pass
+      "q258_screen_artifact", // at-rest bloom route + bucketed anti join
+      "q259_viterbi_fertility", // word-type DP + vocab-literal fold
+      "q260_paragraph_gate", // row-local paragraph algebra: must be ~flat
+      "q261_horizon_dedup", // keyed collect + row-local chain fold
+      "q262_knn_labels", // probe-broadcast exact-cosine + k-row votes
+      "q265_bitext_margin", // one sim matrix reused by both kNN sides
+      "q267_type_growth", // first-occurrence groupBy + 10-row broadcast
+      "q268_collocations", // vocab-sized count groupBys + TakeOrdered
+      "q269_containment_pairs", // q26 block tier, size filter dropped
+      "q270_winnowing_pairs", // row-local selection + df-capped postings
+      "q271_kn_fluency", // checkpointed bigram model, crawl-side scan
+      "q272_ess_card", // q170 + per-source folds
+      "q273_screen_agreement", // three screens + |screens|^2 rollup
+      "q274_containment_winnowed", // winnowed candidates + exact verify
+      "q275_dispersion_card", // no-pair-join sum-vector identity: ~flat-linear
+      "q276_centroid_outliers", // broadcast centroids + quantile machinery
+      "q277_burst_detect", // daily rollup + 2 keyed windows: must be ~flat
+      "q278_centroid_drift", // two |labels|xdim rollups + tiny join
+      "q279_rolling_active", // 7x fan-out of distinct (user,day), no window
+      "q280_script_mix", // row-local class counts + |sources| rollup
+      "q281_compression_ratio", // narrow deflate UDF: must be ~flat-linear
+      "q282_value_drift", // decile cuts + bucket rollups on 10x events
+      "q283_affinity_lift", // per-user type-set self-join, |types|^2 out
+      "q284_modularity_card", // LPA rounds + label joins (embeddings as-is)
+      "q285_hourly_profile", // |types|x24 rollup on 10x events: ~flat
+      "q286_stationary_mix", // |types|^2 kernel + rounds: rollup-bound
+      "q287_concentration_card", // user rollup + tiny Lorenz algebra
+      "q288_cluster_separation", // centroid + quantile passes (embeddings as-is)
+      "q289_zipf_profile", // (source,token) rollup on 10x docs
+      "q290_assortativity", // shared edge relation + integer sums
+      "q291_fk_integrity", // anti joins on 10x facts (disjoint key spaces)
+      "q292_key_uniqueness", // exact count_distinct per table at 10x
+      "q293_growth_accounting", // user-keyed lag + weekly rollup, 10x users
+      "q294_gap_profile", // keyed lag + quantile machinery on 10x events
+      "q295_path_motifs", // two keyed leads + |types|^3 rollup, 10x events
+      "q296_anisotropy_card", // dim^2 products rollup + kernel rounds
+      "q297_homoglyph_screen", // row-local regex pair + source rollup
+      "q298_anisotropy_sampled", // the q296 hash-slice knob: kernel on ~half
+      "q299_postings_materialized", // at-rest bucketed postings, 0-Exchange self-join
+      "q300_portable_simhash_pairs", // 64-accumulator doc rollup + chunk buckets
+      "q301_vocab_utilization", // word-TYPE greedy walk + piece rollup
+      "q303_memorization_spectrum", // span exposure + threshold join, O(tokens)
+      "q304_luhn_screen", // row-local regex + integer fold: must be ~flat
+      "q305_corr_matrix", // one map-side moment pass over 10x lineitem
+      "q307_prefix_jaccard", // lossless prefix-filter candidates + exact verify
+      "q308_windowed_pmi", // window-2 pair rollup, Zipf-bounded pair vocab
+      "q309_length_drift_ks", // domain-bounded CDF window: must be ~flat
+      "q312_portable_minhash_pairs", // portable-LSH candidates ride dup density
+      "q322_jump_portable", // row-local jump walk + 1-row rollup: must be ~flat-linear
+      "q323_perceptron_exact", // integer GD rounds over persisted features
+      "q324_perceptron_served", // train + ZERO-shuffle serve: the classifier serving economics
+      "q325_perceptron_sampled", // the 100 TB knob: training rides the FIXED slice fraction
+      "q335_portable_incremental_neardups")), // inc×base probe: rides increment + dup mass, never base²
+    "embed" -> Growth(28, Seq(
+      "q306_embedding_leakage", // exact pair audit: O(n²) BY CONTRACT
+      "q310_leakage_lsh", // the scale twin: capped banded candidates
+      "q302_ivfpq_topk", // IVF-PQ train+serve fused (one-time cost inside)
+      "q311_ivfpq_served", // serve-from-artifact: the steady-state cell
+      "q313_ivf_exact_topk", // exact-arithmetic IVF: train linear, serve cell-bounded
+      "q314_semdedup_exact", // SemDeDup: pair work rides cell occupancy
+      "q315_portable_rp_pairs", // portable sign-LSH: same banded regime as q310
+      "q318_rp_pairs_auto", // AUTO-sized bands: width re-derives per corpus
+      "q326_cluster_balanced_sample")), // balanced sampling: one assign pass + per-cell ranks
+    "media" -> Growth(24, Seq(
+      "q147_image_dedup", // aHash + chunk pigeonhole + CC
+      "q264_image_phash_dedup", // DCT pHash tier of the same machinery
+      "q195_audio_dedup", // chunked-RMS fingerprint tier
+      "q266_video_dedup"))) // per-(frame_idx, chunk) pigeonhole
+
+  /** `embed`'s cells beyond the registry: the 16-bit band re-tune a 10×
+    * corpus calls for (nPlanes = 64, bands = 4 cut the random-background
+    * collision term b·n²/2^w 256× against the default 8-bit bands), on
+    * q310's plane family and on q315's md5 one. */
+  private val WideBand: Seq[(String, Query)] = Seq(
+    "q310_wideband_16bit" -> ((s, d) => Similarity.embeddingSplitLeakageLsh(
+      Tables(s, d).embeddings, nPlanes = 64, bands = 4)),
+    "q315_wideband_16bit" -> ((s, d) => Similarity.portableRpPairs(
+      Tables(s, d).embeddings, nPlanes = 64, bands = 4)))
+
+  private def cells(mode: String): Seq[(String, Query)] = {
+    val registry = SparkEntry.queries
+    GrowthTables(mode).queries.map(n => n -> registry(n)) ++
+      (if (mode == "embed") WideBand else Nil)
+  }
+
+  /** The structural counts behind the wall clocks, one line per dir. */
+  private val Counts: Map[String, (SparkSession, String) => Unit] = Map(
+    // the exact tier's pair space (n(n-1)/2 by contract) against the
+    // banded candidate volume at both widths and at the auto-sized
+    // width q318 runs for this corpus size: b·n²/2^w in numbers
+    "embed" -> { (spark, dir) =>
+      val emb = Tables(spark, dir).embeddings
+        .select(col("vec_id"), col("embedding"))
+      val n = emb.count()
+      def cands(planes: Int) =
+        Similarity.rpLshCandidates(emb, planes, 4, 10000).count()
+      val wAuto = Similarity.signBandWidth(n)
+      println(s"$dir: n=$n exact_pairs=${n * (n - 1) / 2} " +
+        s"banded_8bit_cands=${cands(32)} banded_16bit_cands=${cands(64)} " +
+        s"auto_w=$wAuto auto_cands=${cands(4 * wAuto)}")
+    },
+    // pigeonhole candidates per family against the all-pairs contract
+    "media" -> { (spark, dir) =>
+      val media = Multimodal.materializedMedia(spark, dir)
+      val im = Multimodal.imageAHashes(media).filter(col("ahash").isNotNull)
+      val au = Multimodal.audioFingerprints(media)
+        .filter(col("afp").isNotNull)
+      val nIm = im.count(); val nAu = au.count()
+      val cIm = Dedup.hammingCandidates(im, "media_id", "ahash", 10000)
+        .distinct().count()
+      val cAu = Dedup.hammingCandidates(au, "media_id", "afp", 10000)
+        .distinct().count()
+      println(s"$dir: images n=$nIm all_pairs=${nIm * (nIm - 1) / 2} " +
+        s"pigeonhole_cands=$cIm | audio n=$nAu " +
+        s"all_pairs=${nAu * (nAu - 1) / 2} pigeonhole_cands=$cAu")
+    })
+
+  /** `scale`, `embed` and `media`: best-of-2 per query on the base and
+    * every twin, each twin's ratio to the base, then the counts. */
+  private def growth(spark: SparkSession, a: Args): Unit = {
+    val twins = Twins(a.mode)
+    val dirs = a.baseDir +: twins.map(build(spark, a, _))
+    if (!a.extra.contains("counts")) {
+      dirs.foreach(Bench.warmUp(spark, _))
+      val w = GrowthTables(a.mode).width
+      println("query".padTo(w, ' ') + f" ${"base_s"}%8s" +
+        twins.map(t => f" ${"x" + a.factor + t.suffix + "_s"}%8s").mkString +
+        " " + twins.map(_.label).mkString(" "))
+      val only = a.extra.map(_.split(",").toSet)
+      cells(a.mode).filter(c => only.forall(_(c._1))).foreach {
+        case (name, fn) =>
+          val ts = dirs.map(d => Bench.best2(fn(spark, d)))
+          println(name.padTo(w, ' ') + ts.map(t => f" $t%8.2f").mkString +
+            " " + ts.tail.map(t => f"${t / ts.head}%5.1fx").mkString(" "))
+      }
+    }
+    Counts.get(a.mode).foreach(c => dirs.foreach(c(spark, _)))
+  }
+
+  // ---- fixed-increment modes ----------------------------------------
+
+  /** Rows in the `id % 10` slots `s` of replica 0 (ids below the base's
+    * `span`). Slot 3 is tonight's increment: the same rows at both
+    * scales, since a night's crawl does not grow with the archive. */
+  private def inSlots(id: String, span: Long, s: Int*): Column =
+    pmod(col(id), lit(10L)).isin(s: _*) && col(id) < span
+
+  /** The fixed-increment cases: `cell(label, dir, emit)` reads base_x1
+    * from the base and base_xN from the twin, each without the
+    * increment's id slots ([[inSlots]]; replicas ≥ 1 keep their
+    * near-copies of it: a bigger crawl holds more near-dups of tonight's
+    * batch). One unmeasured pass on base_x1 runs first, so codegen and
+    * first-touch costs land there and not on whichever case runs first. */
+  private def fixedIncrement(a: Args, twinDir: String, header: String)(
+      cell: (String, String, Boolean) => Unit): Unit = {
+    cell("warmup", a.baseDir, false)
+    println(header)
+    Seq("base_x1" -> a.baseDir, s"base_x${a.factor}" -> twinDir)
+      .foreach { case (label, dir) => cell(label, dir, true) }
+  }
+
+  /** A fresh artifact home, deleted when the JVM exits. */
+  private def home(p: String): String =
+    Artifacts.tempDir(s"graft_trial_${p}_").resolve("a").toString
+
+  /** `embed-inc`: build = the one-time quantizer + partitioned write
+    * (allowed to grow ~linearly, paid once per index lifetime); serve =
+    * q327's decision against the pre-built index, best-of-2, with the
+    * partitions its pruned scan read (`tiny10`: those a 10-vector batch
+    * reads, the per-micro-batch streaming probe); fused = q314's
+    * whole-corpus SemDeDup, re-paid every night. */
+  private def embedInc(spark: SparkSession, a: Args): Unit = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import Bench.{clock, noop}
+    val twin = build(spark, a, Twins("embed").head)
+    Bench.warmUp(spark, a.baseDir)
+    def scansOf(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case ad: AdaptiveSparkPlanExec => scansOf(ad.executedPlan)
+      case q: QueryStageExec => scansOf(q.plan)
+      case f: FileSourceScanExec => Seq(f)
+      case other => other.children.flatMap(scansOf)
+    }
+    // metrics live on the EXECUTED plan: collect `df` first
+    def partsOf(df: DataFrame): Long =
+      scansOf(df.queryExecution.executedPlan)
+        .filter(_.metadata("Location").contains("graft_ivfx_"))
+        .filterNot(_.metadata("Location").contains("cents"))
+        .head.metrics("numPartitions").value
+    def emb(dir: String) = Tables(spark, dir).embeddings
+      .select(col("vec_id"), col("embedding"))
+    val sp = span(emb(a.baseDir), "vec_id")
+    val inc = emb(a.baseDir).filter(inSlots("vec_id", sp, 3))
+      .localCheckpoint()
+    val nInc = inc.count()
+    fixedIncrement(a, twin, f"${"cell"}%-12s ${"n_base"}%8s " +
+      f"${"build_s"}%8s ${"serve_s"}%8s ${"parts"}%9s ${"fused_s"}%8s") {
+      (label, dir, emit) =>
+        val base = emb(dir).filter(!inSlots("vec_id", sp, 3))
+          .localCheckpoint()
+        val nBase = base.count()
+        val key = s"incEcon|$label|$twin"
+        val (tBuild, table) = clock {
+          Similarity.materializedIvfExactIndex(spark, base, key + "#incbase")
+        }
+        def serveOnce: (Double, DataFrame) = clock {
+          val df = Similarity.semDedupAgainstIndex(spark, inc, base, key)
+          noop(df)
+          df
+        }
+        val (t1, df1) = serveOnce
+        val tServe = math.min(t1, serveOnce._1)
+        df1.collect()
+        val partsRead = partsOf(df1)
+        val allCells = spark.table(table).select(col("cell"))
+          .distinct().count()
+        val tinyDf = Similarity.semDedupAgainstIndex(spark,
+          inc.limit(10).localCheckpoint(), base, key)
+        tinyDf.collect()
+        val tinyParts = partsOf(tinyDf)
+        val (tFused, _) = clock(noop(
+          Similarity.semDedupExact(base.unionByName(inc))))
+        if (emit)
+          println(f"$label%-12s $nBase%8d $tBuild%8.2f $tServe%8.2f " +
+            f"$partsRead%4d/$allCells%-4d $tFused%8.2f  tiny10=" +
+            f"$tinyParts%d/$allCells%d")
+    }
+    println(s"increment fixed at n=$nInc (the base corpus's % 10 = 3 " +
+      "slice) at both scales; tiny10 = partitions a 10-vector batch " +
+      "reads (the per-micro-batch streaming probe)")
+  }
+
+  /** `media-artifact`: the one-time artifact build gets its own line
+    * (every tier shares it), then each tier's serve from the artifact
+    * against its inline twin. A fresh artifact home per run, so the
+    * build is measured, not served from an earlier trial's commit. */
+  private def mediaArtifact(spark: SparkSession, a: Args): Unit = {
+    import Bench.{best2, clock}
+    val dense = build(spark, a, Twins("media").head)
+    Bench.warmUp(spark, a.baseDir)
+    println(f"${"cell"}%-26s ${"serve_s"}%8s ${"inline_s"}%9s")
+    Seq(("base", a.baseDir), (s"x${a.factor}", dense)).foreach {
+      case (label, dir) =>
+        val media = Multimodal.materializedMedia(spark, dir)
+        val fpDir = home("mediafp")
+        val (tBuild, _) = clock {
+          Multimodal.mediaFingerprintArtifact(spark, media, fpDir)
+        }
+        println(f"${label + "/shared_fp_build"}%-26s $tBuild%8.2f" +
+          "   (once per corpus, all tiers share it)")
+        Seq[(String, () => DataFrame, () => DataFrame)](
+          ("image_ahash",
+            () => Multimodal.imageDedupFromArtifact(spark, fpDir),
+            () => Multimodal.imageDedup(media)),
+          ("image_phash",
+            () => Multimodal.imageDedupPhashFromArtifact(spark, fpDir),
+            () => Multimodal.imageDedupPhash(media)),
+          ("audio",
+            () => Multimodal.audioDedupFromArtifact(spark, fpDir),
+            () => Multimodal.audioDedup(media)),
+          ("video",
+            () => Multimodal.videoDedupFromArtifact(spark, fpDir),
+            () => Multimodal.videoDedup(media))).foreach {
+          case (tier, atRest, inline) =>
+            val tServe = best2(atRest())
+            val tInline = best2(inline())
+            println(f"${label + "/" + tier}%-26s $tServe%8.2f " +
+              f"$tInline%9.2f")
+        }
+    }
+  }
+
+  /** `ingest`: the increment is the base's slot-3 documents with their
+    * embedding sidecar. A session-tier job (q340's shape) pays
+    * build_s + manifest_s every JVM; the at-rest job pays manifest_s. */
+  private def ingest(spark: SparkSession, a: Args): Unit = {
+    import Bench.{best2, clock}
+    val twin = build(spark, a, Twins("ingest").head)
+    Bench.warmUp(spark, a.baseDir)
+    def docs(dir: String) = Tables(spark, dir).documents
+    def emb(dir: String) = Tables(spark, dir).embeddings
+      .select(col("vec_id"), col("embedding"))
+    val docSpan = span(docs(a.baseDir), "doc_id")
+    val vecSpan = span(emb(a.baseDir), "vec_id")
+    val incDocs = docs(a.baseDir).filter(inSlots("doc_id", docSpan, 3))
+      .localCheckpoint()
+    val incVecs = emb(a.baseDir).filter(inSlots("vec_id", vecSpan, 3))
+      .localCheckpoint()
+    val records = incDocs
+      .join(emb(a.baseDir).select(col("vec_id").as("doc_id"),
+        col("embedding")), Seq("doc_id"), "left")
+      .select(col("doc_id"), col("text"), col("lang"), col("source"),
+        col("embedding"))
+      .localCheckpoint()
+    val nInc = records.count()
+    fixedIncrement(a, twin, f"${"cell"}%-10s ${"n_base"}%8s " +
+      f"${"build_s"}%8s ${"exact_s"}%8s ${"near_s"}%8s ${"sem_s"}%8s " +
+      f"${"manifest_s"}%10s ${"sum_scr"}%8s") { (label, dir, emit) =>
+      val baseDocs = docs(dir).filter(!inSlots("doc_id", docSpan, 3))
+        .localCheckpoint()
+      val baseEmb = emb(dir).filter(!inSlots("vec_id", vecSpan, 3))
+        .localCheckpoint()
+      val nBase = baseDocs.count()
+      val (screenDir, nearDir, semDir) =
+        (home("scr"), home("near"), home("sem"))
+      val (tB1, _) = clock(
+        Dedup.materializedScreenBaseDurable(spark, baseDocs, screenDir))
+      val (tB2, _) = clock(
+        Dedup.portableNearDupBaseDurableFrom(spark, baseDocs, nearDir))
+      val (tB3, _) = clock(
+        Similarity.ivfExactIndexDurable(spark, baseEmb, semDir))
+      val tExact = best2(Dedup.crossCorpusNewFromDurableArtifact(
+        spark, incDocs, baseDocs, screenDir))
+      val tNear = best2(Dedup.portableIncNearDupsAgainstArtifact(
+        spark, incDocs, baseDocs, nearDir))
+      val tSem = best2(Similarity.semDedupAgainstIndexDurable(
+        spark, incVecs, baseEmb, semDir))
+      val tManifest = best2(Ingest.admitBatch(spark, records,
+        baseDocs, baseEmb, nearDir, semDir, screenDir))
+      if (emit)
+        println(f"$label%-10s $nBase%8d ${tB1 + tB2 + tB3}%8.2f " +
+          f"$tExact%8.2f $tNear%8.2f $tSem%8.2f $tManifest%10.2f " +
+          f"${tExact + tNear + tSem}%8.2f")
+    }
+    println(s"increment fixed at n=$nInc (the base corpus's % 10 = 3 " +
+      "slice + embedding sidecar) at both scales; manifest_s is the " +
+      "at-rest composition (admitBatch); a session-tier job pays " +
+      "build_s + manifest_s per JVM")
+  }
+
+  /** `artifact-mode`: the marker protocol's extra cost should be its
+    * move-in + lock I/O, a per-entry term, and serving should not
+    * depend on the mode; union width should cost a per-delta planning
+    * + scan term that compaction returns to the single-table cost
+    * without touching the corpus. Slot 4 of replica 0 is day 1's
+    * append; the base also holds no copy of the increment (slot 3 of
+    * every replica). */
+  private def artifactMode(spark: SparkSession, a: Args): Unit = {
+    import Bench.{best2, clock}
+    val twin = build(spark, a, Twins("ingest").head)
+    Bench.warmUp(spark, a.baseDir)
+    def docs(dir: String) = Tables(spark, dir).documents
+    val sp = span(docs(a.baseDir), "doc_id")
+    val incDocs = docs(a.baseDir).filter(inSlots("doc_id", sp, 3))
+      .localCheckpoint()
+    def base(dir: String) = docs(dir).filter(
+      pmod(col("doc_id"), lit(10L)) =!= 3 && !inSlots("doc_id", sp, 4))
+    def day1(dir: String) = docs(dir).filter(inSlots("doc_id", sp, 4))
+    def serve(scr: String, b: DataFrame) =
+      best2(Dedup.crossCorpusNewFromAppendedArtifact(spark, incDocs, b, scr))
+
+    // ---- part 1: commit-mode overhead ----
+    fixedIncrement(a, twin, f"${"cell"}%-10s ${"mode"}%-7s " +
+      f"${"n_base"}%8s ${"scr_bld_s"}%9s ${"near_bld_s"}%9s " +
+      f"${"append_s"}%9s ${"serve_s"}%9s") { (label, dir, emit) =>
+      Seq("rename", "marker").foreach { mode =>
+        val prev = sys.props.get("graft.artifacts.commit")
+        sys.props("graft.artifacts.commit") = mode
+        try {
+          val b = base(dir).localCheckpoint()
+          val nBase = b.count()
+          val (scr, near) = (home(s"scr_$mode"), home(s"near_$mode"))
+          val (tScr, _) = clock(
+            Dedup.materializedScreenBaseDurable(spark, b, scr))
+          val (tNear, _) = clock(
+            Dedup.portableNearDupBaseDurableFrom(spark, b, near))
+          val (tApp, _) = clock(
+            Dedup.appendFpsToScreenBase(spark, day1(dir), scr, "m4"))
+          val tServe = serve(scr, b)
+          if (emit)
+            println(f"$label%-10s $mode%-7s $nBase%8d $tScr%9.2f " +
+              f"$tNear%9.2f $tApp%9.2f $tServe%9.2f")
+        } finally prev match {
+          case Some(v) => sys.props("graft.artifacts.commit") = v
+          case None => sys.props -= "graft.artifacts.commit"
+        }
+      }
+    }
+
+    // ---- part 2: delta-growth economics (rename mode, big base) ----
+    val bigBase = base(twin).localCheckpoint()
+    val scr8 = home("scr_growth")
+    Dedup.materializedScreenBaseDurable(spark, bigBase, scr8)
+    println(f"${"n_deltas"}%8s ${"serve_s"}%9s")
+    println(f"${0}%8d ${serve(scr8, bigBase)}%9.2f")
+    (1 to 8).foreach { k =>
+      // each nightly delta is day 1's slice, retagged per night
+      Dedup.appendFpsToScreenBase(spark, day1(twin).withColumn("text",
+        concat(col("text"), lit(s" night$k"))), scr8, s"n$k")
+      if (Seq(1, 2, 4, 8).contains(k))
+        println(f"$k%8d ${serve(scr8, bigBase)}%9.2f")
+    }
+    val scr8c = home("scr_compacted")
+    val (tCompact, _) = clock(Dedup.compactScreenBase(spark, scr8, scr8c))
+    println(f"${"compact"}%8s ${serve(scr8c, bigBase)}%9.2f  (fold itself " +
+      f"$tCompact%.2f s, artifact rows only)")
+  }
+
+  // ---- media perturbations ------------------------------------------
+
+  private val brightenImage = udf((b: Array[Byte], delta: Int) =>
+    perturbImage(b, delta))
+
+  private val relevelAudio = udf((b: Array[Byte], replica: Int) =>
+    perturbAudio(b, replica))
+
+  private val brightenVideo = udf((b: Array[Byte], delta: Int) =>
+    perturbVideo(b, delta))
+
+  /** Decode → uniform brightness shift (clamped) → re-encode PNG.
+    * aHash compares each cell to the image mean, so a uniform shift
+    * moves numerator and mean together — the planted near-dup device
+    * MultimodalSpec uses, here at corpus scale. */
+  private[graft] def perturbImage(b: Array[Byte],
+      delta: Int): Array[Byte] =
+    ImageCodec.decode(b).map { img =>
+      val out = new java.awt.image.BufferedImage(img.getWidth,
+        img.getHeight, java.awt.image.BufferedImage.TYPE_INT_RGB)
+      var y = 0
+      while (y < img.getHeight) {
+        var x = 0
+        while (x < img.getWidth) {
+          val p = img.getRGB(x, y)
+          def c(v: Int) = math.min(255, math.max(0, v + delta))
+          out.setRGB(x, y, (c((p >> 16) & 0xff) << 16) |
+            (c((p >> 8) & 0xff) << 8) | c(p & 0xff))
+          x += 1
+        }
+        y += 1
+      }
+      ImageCodec.encodePng(out)
+    }.getOrElse(b)
+
+  /** Decode → scale every sample by a per-replica gain → re-encode
+    * WAV. rmsFingerprint normalizes by the clip mean RMS, so the
+    * energy PROFILE (and the fingerprint) is gain-invariant. */
+  private[graft] def perturbAudio(b: Array[Byte],
+      replica: Int): Array[Byte] =
+    AudioCodec.decode(b).map { case (samples, rate) =>
+      val gain = 1.0 / (1 + (replica % 4))
+      AudioCodec.encodeWav(
+        samples.map(s => (s * gain).toShort), rate.toInt)
+    }.getOrElse(b)
+
+  /** Re-encode the GRV1 container with every frame brightened — the
+    * clip stays frame-count- and cadence-identical, each frame an
+    * aHash near-dup of the original's. */
+  private[graft] def perturbVideo(b: Array[Byte],
+      delta: Int): Array[Byte] =
+    (for {
+      (nFrames, frameMs) <- VideoCodec.header(b)
+      frames <- Some((0 until nFrames)
+        .flatMap(i => VideoCodec.frameAt(b, i)))
+      if frames.length == nFrames
+    } yield VideoCodec.encode(
+      frames.map(perturbImage(_, delta)), frameMs)).getOrElse(b)
+
+  // ---- arguments ----------------------------------------------------
+
+  private[graft] final case class Args(mode: String, baseDir: String,
+      factor: Int, workDir: String, extra: Option[String])
+
+  private val WorkDirs: Map[String, String] = Map(
+    "scale" -> "/tmp/graft_scale",
+    "embed" -> "/tmp/graft_escale", "embed-inc" -> "/tmp/graft_escale",
+    "media" -> "/tmp/graft_mscale", "media-artifact" -> "/tmp/graft_mscale",
+    "ingest" -> "/tmp/graft_iscale", "artifact-mode" -> "/tmp/graft_iscale")
+
+  private val Usage = "usage: graft.Trial <" +
+    WorkDirs.keys.toSeq.sorted.mkString("|") +
+    "> [baseSfDir] [factor] [workDir] [counts | q1,q2,...]"
+
+  /** Unknown modes, subsets and stray arguments fail before any twin
+    * is built, never as a silent zero-query run. */
+  private[graft] def parse(args: Array[String]): Args = {
+    def arg(i: Int) = args.lift(i).filter(_.nonEmpty)
+    val mode = arg(0).filter(WorkDirs.contains)
+      .getOrElse(throw new IllegalArgumentException(Usage))
+    arg(4).foreach {
+      case "counts" => require(Counts.contains(mode), s"$mode has no counts")
+      case names =>
+        require(GrowthTables.contains(mode), s"$mode takes no query subset")
+        val unknown = names.split(",").toSet.diff(cells(mode).map(_._1).toSet)
+        require(unknown.isEmpty,
+          s"not in the $mode table: ${unknown.toSeq.sorted.mkString(", ")}")
+    }
+    Args(mode,
+      arg(1).orElse(sys.env.get("SPARK_GRAFT_SF_DIR")).getOrElse(
+        throw new IllegalArgumentException(s"no baseSfDir: $Usage")),
+      arg(2).fold(10)(_.toInt), arg(3).getOrElse(WorkDirs(mode)), arg(4))
+  }
+
+  def main(args: Array[String]): Unit = {
+    val a = parse(args)
+    val spark = Bench.timingSession()
+    try a.mode match {
+      case "scale" | "embed" | "media" => growth(spark, a)
+      case "embed-inc" => embedInc(spark, a)
+      case "media-artifact" => mediaArtifact(spark, a)
+      case "ingest" => ingest(spark, a)
+      case "artifact-mode" => artifactMode(spark, a)
+    } finally spark.stop()
+  }
+}

@@ -76,14 +76,7 @@ object AirQualityApp {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("air-quality-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.timingSession()
     val r = run(spark, args.headOption)
     Sinks.console(r.long.orderBy("pollutant", "country", "day"), 50)
     println(s"error payloads: ${r.nErrors}")

@@ -2477,7 +2477,7 @@ object Similarity {
     * near-dup detection, and rollup equality on corpora where the
     * bands lose nothing.
     *
-    * SIZING (measured, EmbedScaleTrial): band WIDTH is the log(n)
+    * SIZING (measured, `Trial embed`): band WIDTH is the log(n)
     * knob. With b bands of w sign bits, random-background collisions
     * alone contribute ~b·n²/2^w candidate pairs — at n=50k the
     * default 8-bit bands are collision-dominated (~20M background

@@ -44,7 +44,9 @@ object WaqiTransport {
   * `status: "error: ..."` payload. Exercised for real in
   * WaqiDsv2Spec against a loopback HTTP server — the sandbox has no
   * egress, but the GET -> body -> parse path is the same code that
-  * would hit api.waqi.info. */
+  * would hit api.waqi.info. The city is percent-encoded as one path
+  * segment and the token as a query value, so `new york` reaches the
+  * server as `new%20york`. */
 final class HttpWaqiTransport(baseUrl: String, token: String,
     connectTimeoutMs: Int, readTimeoutMs: Int) extends WaqiTransport {
 
@@ -56,7 +58,9 @@ final class HttpWaqiTransport(baseUrl: String, token: String,
 
   override def fetch(city: String): String =
     try {
-      val conn = new java.net.URI(s"$baseUrl/$city/?token=$token").toURL
+      def enc(v: String) = java.net.URLEncoder
+        .encode(v, java.nio.charset.StandardCharsets.UTF_8).replace("+", "%20")
+      val conn = new java.net.URI(s"$baseUrl/${enc(city)}/?token=${enc(token)}").toURL
         .openConnection().asInstanceOf[java.net.HttpURLConnection]
       conn.setConnectTimeout(connectTimeoutMs)
       conn.setReadTimeout(readTimeoutMs)

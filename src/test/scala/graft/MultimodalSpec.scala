@@ -473,7 +473,7 @@ class MultimodalSpec extends AnyFunSuite {
     // image: brightness shift keeps the aHash within the q147 verify
     // bound, so original + perturbed replica collapse
     val png = ImageCodec.encodeFixturePng(12, 9, seed = 42L)
-    val pPng = MediaScaleTrial.perturbImage(png, 5)
+    val pPng = Trial.perturbImage(png, 5)
     assert(!java.util.Arrays.equals(png, pPng), "perturb must re-encode")
     val h0 = ImageCodec.aHashFromBytes(png).get
     val h1 = ImageCodec.aHashFromBytes(pPng).get
@@ -481,7 +481,7 @@ class MultimodalSpec extends AnyFunSuite {
       s"brightened replica drifted ${java.lang.Long.bitCount(h0 ^ h1)} bits")
     // audio: per-replica gain keeps the RMS-profile fingerprint close
     val wav = AudioCodec.encodeFixtureWav(2000, seed = 7L)
-    val pWav = MediaScaleTrial.perturbAudio(wav, replica = 1)
+    val pWav = Trial.perturbAudio(wav, replica = 1)
     val f0 = AudioCodec.fingerprintFromBytes(wav).get
     val f1 = AudioCodec.fingerprintFromBytes(pWav).get
     assert(java.lang.Long.bitCount(f0 ^ f1) <= 3,
@@ -489,7 +489,7 @@ class MultimodalSpec extends AnyFunSuite {
     // video: frame-wise brightening preserves frame count, cadence and
     // per-frame hash proximity
     val vid = VideoCodec.encodeFixtureVideo(3, 8, 6, frameMs = 40, seed = 3L)
-    val pVid = MediaScaleTrial.perturbVideo(vid, 5)
+    val pVid = Trial.perturbVideo(vid, 5)
     assert(VideoCodec.header(pVid) == VideoCodec.header(vid))
     val hs0 = VideoCodec.frameHashes(vid).get
     val hs1 = VideoCodec.frameHashes(pVid).get
@@ -501,9 +501,9 @@ class MultimodalSpec extends AnyFunSuite {
     }
     // corrupt bytes pass through unchanged (never an exception)
     val junk = "notmedia".getBytes
-    assert(java.util.Arrays.equals(MediaScaleTrial.perturbImage(junk, 3), junk))
-    assert(java.util.Arrays.equals(MediaScaleTrial.perturbAudio(junk, 1), junk))
-    assert(java.util.Arrays.equals(MediaScaleTrial.perturbVideo(junk, 3), junk))
+    assert(java.util.Arrays.equals(Trial.perturbImage(junk, 3), junk))
+    assert(java.util.Arrays.equals(Trial.perturbAudio(junk, 1), junk))
+    assert(java.util.Arrays.equals(Trial.perturbVideo(junk, 3), junk))
 
     // and the dedup tiers collapse original + perturbed replica while
     // an unrelated item survives — the trial's dense twin in miniature

@@ -101,6 +101,35 @@ class WaqiDsv2Spec extends AnyFunSuite {
     }
   }
 
+  test("HttpWaqiTransport: a city with a space reaches the server as one path segment") {
+    val payload = WaqiFixtures.all.toMap.apply("paris")
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    try {
+      server.createContext("/feed", { exchange =>
+        val uri = exchange.getRequestURI
+        seen.add(s"${uri.getRawPath}?${uri.getRawQuery}")
+        val (code, body) =
+          if (uri.getPath == "/feed/new york/" && uri.getQuery == "token=a b&c")
+            200 -> payload
+          else 404 -> "Error 404: unknown station"
+        val bytes = body.getBytes(StandardCharsets.UTF_8)
+        exchange.sendResponseHeaders(code, bytes.length)
+        exchange.getResponseBody.write(bytes)
+        exchange.close()
+      })
+      server.start()
+      val http = new HttpWaqiTransport(Map(
+        "baseUrl" -> s"http://127.0.0.1:${server.getAddress.getPort}/feed",
+        "token" -> "a b&c"))
+      assert(http.fetch("new york") == payload)
+      // plain city names keep their URL byte for byte
+      assert(http.fetch("amsterdam").startsWith("Error 404"))
+      assert(seen.toArray.toSeq == Seq(
+        "/feed/new%20york/?token=a%20b%26c", "/feed/amsterdam/?token=a%20b%26c"))
+    } finally server.stop(0)
+  }
+
   test("LIVE api.waqi.info fetch (WAQI_LIVE=1 gated; skipped offline)") {
     // The one reference behavior a zero-egress sandbox cannot reach:
     // the real API's envelope (reference dags/my_data_pipeline.py:34-48
