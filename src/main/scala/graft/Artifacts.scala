@@ -6,36 +6,34 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import scala.util.control.NonFatal
 
-/** Session-scoped lake-artifact plumbing shared by the materialized
-  * index builders ([[operators.TextAnalysis.materializedPostingsTable]],
-  * [[operators.Similarity.materializedIvfIndex]] and the PQ sidecars):
+/** The build-once device for every lake artifact, and its plumbing.
+  * [[durable]] is the ONE device: a build runs once per (owner, home,
+  * params), publishes under a commit marker, records its params and
+  * is served as-is on every later call. Two kinds of home feed it:
   *
-  *  - [[digest]] names catalog tables from a COLLISION-RESISTANT
-  *    digest of the dataset path (first 16 hex of md5) instead of the
-  *    32-bit `String.hashCode` — two dataset directories can collide
-  *    on hashCode and silently overwrite each other's artifact
-  *    (mode=overwrite) or serve each other's rows;
-  *  - [[tempDir]] registers every artifact directory on ONE shared
-  *    exit-time cleanup list (a single JVM shutdown hook drains it,
-  *    each deletion an isolated best-effort step), so a long-lived
-  *    test/bench session neither leaks parquet trees into the system
-  *    temp dir nor accumulates one hook thread per artifact;
-  *  - [[KeyedMemo]] is the build-once-per-key device the index
-  *    builders share: the map itself is never locked across a build
-  *    (a multi-minute Spark job), only the KEY's own cell monitor is
-  *    — concurrent builds of different keys proceed in parallel and
-  *    lock nesting between builders cannot deadlock.
+  *  - DURABLE homes ([[durableRoot]], [[durableDirFor]]) are keyed to
+  *    the source data's fingerprint and survive the JVM, so tomorrow's
+  *    job serves tonight's build;
+  *  - SESSION homes ([[sessionHome]]) are unique per session object
+  *    and key, under one JVM-wide [[tempDir]] root that is deleted at
+  *    exit: a session's queries share one build, `spark.newSession()`
+  *    gets its own, and nothing outlives the process.
   *
-  * The DURABLE layer ([[durable]], [[pathFingerprint]],
-  * [[isCommitted]], [[writeBucketed]] / [[registerBucketedTable]])
-  * runs entirely on the Hadoop [[FileSystem]] API, so an artifact
-  * home can be a local path, an `hdfs://` dir or an object-store URI
-  * — the same surface the payloads are written through. Commit
-  * protocol is capability-aware ([[commitMode]]): staging + one
-  * atomic directory rename where the FS supports it (local, HDFS),
-  * marker-last in-place commit where it doesn't (S3 and friends have
-  * no atomic directory rename — renaming there is a copy loop that
-  * can be observed half-done, so the marker alone is the transaction
+  * The memo, the params check and the exit-time cleanup are the same
+  * for both. Catalog table names derive from [[digest]] (first 16 hex
+  * of md5), never from the 32-bit `String.hashCode`, on which two
+  * homes can collide and overwrite or serve each other's rows.
+  *
+  * The device runs entirely on the Hadoop [[FileSystem]] API
+  * ([[pathFingerprint]], [[isCommitted]], [[writeBucketed]] /
+  * [[registerBucketedTable]] too), so a durable home can be a local
+  * path, an `hdfs://` dir or an object-store URI — the same surface
+  * the payloads are written through. Commit protocol is
+  * capability-aware ([[commitMode]]): staging + one atomic directory
+  * rename where the FS supports it (local, HDFS), marker-last
+  * in-place commit where it doesn't (S3 and friends have no atomic
+  * directory rename — renaming there is a copy loop that can be
+  * observed half-done, so the marker alone is the transaction
   * boundary and a best-effort build lock keeps concurrent
   * first-builders from writing over each other).
   *
@@ -95,16 +93,47 @@ object Artifacts {
     }))
 
   /** A fresh LOCAL temp directory that is recursively deleted on JVM
-    * exit — the home of session-scoped (non-durable) artifacts. */
+    * exit. */
   def tempDir(prefix: String): java.nio.file.Path = {
     val dir = java.nio.file.Files.createTempDirectory(prefix)
     cleanupHook
-    cleanupPaths(dir)
+    cleanupActions.add(() => deleteTree(dir))
     dir
   }
 
-  private def cleanupPaths(p: java.nio.file.Path): Unit =
-    cleanupActions.add(() => deleteTree(p))
+  /** The one root every [[sessionHome]] lives under. */
+  private lazy val sessionRoot = tempDir("graft_session_").toString
+
+  /** A random id per session OBJECT (sessions do not override
+    * equality). */
+  private val sessionIds =
+    new java.util.concurrent.ConcurrentHashMap[SparkSession, String]
+
+  /** The SESSION home of an artifact: `<root>/<family><digest>`, the
+    * digest over this session object's id and `key`. Build there with
+    * [[durable]]: the session's later calls with the same (family,
+    * key) are memo hits, `spark.newSession()` gets its own home and
+    * build, and the root is deleted at JVM exit. `key` must carry
+    * every build parameter the caller varies, so two configurations
+    * get two homes instead of failing the params check. The family
+    * prefix stays in the path (plan specs find scans by it). */
+  def sessionHome(s: SparkSession, family: String, key: String): String = {
+    val id = sessionIds.computeIfAbsent(s, _ => nonce())
+    s"$sessionRoot/$family${digest(s"$id|$key")}"
+  }
+
+  private val sessionTables = new KeyedMemo[(SparkSession, String), DataFrame]
+
+  /** A parquet table inside an artifact home. Under a [[sessionHome]]
+    * it is read ONCE per session: its committed files never change
+    * while the JVM lives, and a re-read costs a schema-inference job
+    * per call (plus a listing job once the table has more partition
+    * dirs than `spark.sql.sources.parallelPartitionDiscovery.threshold`
+    * — the 512-dir near-dup base). Anywhere else it is read afresh. */
+  def parquet(s: SparkSession, path: String): DataFrame =
+    if (path.startsWith(s"$sessionRoot/"))
+      sessionTables.getOrBuild((s, path))(s.read.parquet(path))
+    else s.read.parquet(path)
 
   private def deleteTree(p: java.nio.file.Path): Unit = {
     import java.nio.file.Files
@@ -218,9 +247,9 @@ object Artifacts {
     readSmall(fs, new Path(p, ParamsFile))
   }
 
-  /** Durable builds EXECUTED by this JVM — a spec hook: a cold-session
-    * reload that really served the at-rest artifact leaves this
-    * counter untouched. */
+  /** Builds EXECUTED by this JVM, at durable and session homes alike
+    * — a spec hook: a cold-session reload that really served the
+    * at-rest artifact leaves this counter untouched. */
   val durableBuilds = new java.util.concurrent.atomic.AtomicLong
 
   private val durableMemo = new KeyedMemo[(Any, String), String]
@@ -249,8 +278,7 @@ object Artifacts {
         if (NoAtomicRenameSchemes(scheme)) "marker" else "rename")
   }
 
-  /** The DURABLE build-once device — the piece the session-scoped
-    * [[KeyedMemo]] + [[tempDir]] convention deliberately lacks: a
+  /** The build-once device, for durable and session homes alike: a
     * committed artifact — written by this JVM, a previous session, or
     * another job entirely — is served as-is, so the "build once,
     * serve many" economics survive process exit. `params` is the
@@ -1080,7 +1108,7 @@ object Artifacts {
     * same key build once while unrelated keys never serialize. A
     * build that throws leaves its cell uninitialized — the next call
     * retries, matching the old getOrElseUpdate semantics. */
-  final class KeyedMemo[K, V] {
+  private final class KeyedMemo[K, V] {
     private val cells =
       new java.util.concurrent.ConcurrentHashMap[K, () => V]
     def getOrBuild(key: K)(build: => V): V =

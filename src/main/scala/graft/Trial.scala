@@ -511,8 +511,9 @@ object Trial {
           .localCheckpoint()
         val nBase = base.count()
         val key = s"incEcon|$label|$twin"
-        val (tBuild, table) = clock {
-          Similarity.materializedIvfExactIndex(spark, base, key + "#incbase")
+        val (tBuild, (vectors, _)) = clock {
+          Similarity.ivfExactIndexDurable(spark, base,
+            Similarity.ivfExactSessionHome(spark, key + "#incbase"))
         }
         def serveOnce: (Double, DataFrame) = clock {
           val df = Similarity.semDedupAgainstIndex(spark, inc, base, key)
@@ -523,8 +524,7 @@ object Trial {
         val tServe = math.min(t1, serveOnce._1)
         df1.collect()
         val partsRead = partsOf(df1)
-        val allCells = spark.table(table).select(col("cell"))
-          .distinct().count()
+        val allCells = vectors.select(col("cell")).distinct().count()
         val tinyDf = Similarity.semDedupAgainstIndex(spark,
           inc.limit(10).localCheckpoint(), base, key)
         tinyDf.collect()

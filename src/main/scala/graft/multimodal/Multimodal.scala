@@ -422,32 +422,30 @@ object Multimodal {
     array_join(c.cast("array<string>"), ",")
 
   /** The synthetic media table MATERIALIZED to parquet once per
-    * (session, sfDir) and read back as a real scan. In production
-    * media bytes are stored bytes — every operator's input is a table
-    * scan, not a per-query re-encode of the fixture corpus; the
-    * per-query cost under test is then the DECODE kernel, which is the
-    * part a 100 TB run actually pays. Content is a pure function of
-    * doc_id, so the one-time build is deterministic and shared safely
-    * across the five media queries. */
+    * (session, sfDir) at a [[graft.Artifacts.sessionHome]] and read
+    * back as a real scan. In production media bytes are stored bytes —
+    * every operator's input is a table scan, not a per-query re-encode
+    * of the fixture corpus; the per-query cost under test is then the
+    * DECODE kernel, which is the part a 100 TB run actually pays.
+    * Content is a pure function of doc_id, so the one-time build is
+    * deterministic and shared safely across the media queries. */
+  def materializedMedia(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(mediaPaths.getOrElse((s, d), {
+      val home = graft.Artifacts.durable(s,
+          graft.Artifacts.sessionHome(s, "graft_media_", d), "media") { p =>
+        syntheticMedia(Tables(s, d)).write.mode("overwrite").parquet(s"$p/m")
+      }
+      s"$home/m"
+    }))
+
+  /** Media tables that [[materializedMedia]] must serve for a
+    * directory instead of deriving media from its documents table —
+    * the scale-trial twins' perturbed/regenerated corpora. */
   private val mediaPaths =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
 
-  /** Pre-register an at-rest media table for `d` — the scale-trial
-    * twins build perturbed/regenerated corpora that
-    * [[materializedMedia]] must serve for their directory instead of
-    * re-deriving media from the copied documents table. */
   def registerMediaPath(s: SparkSession, d: String, path: String): Unit =
     mediaPaths.update((s, d), path)
-
-  def materializedMedia(s: SparkSession, d: String): DataFrame = {
-    val path = mediaPaths.getOrElseUpdate((s, d), {
-      val p = java.nio.file.Files.createTempDirectory("graft_media_")
-        .toString
-      syntheticMedia(Tables(s, d)).write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
 
   private val bothImageHashesUdf =
     udf((b: Array[Byte]) => ImageCodec.hashesFromBytes(b))

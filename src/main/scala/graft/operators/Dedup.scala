@@ -778,49 +778,38 @@ object Dedup {
     * small increment still touches only its own slices. */
   private val BhPartitions = 64
 
-  private val baseBucketTables = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   /** The AT-REST form of the incremental-neardup base side: the banded
-    * bucket table written ONCE to the lake as a real catalog table —
-    * partitioned by `pp = band * 64 + (bh mod 64)` (512 directories
-    * covering the (band, bh) bucket space) and bucketed+sorted by `bh`
-    * inside each partition. This is the artifact SURVEY §8 promises
+    * bucket table written ONCE per (session, key, signature
+    * parameters) at a [[graft.Artifacts.sessionHome]], partitioned by
+    * `pp = band * 64 + (bh mod 64)` (512 directories covering the
+    * (band, bh) bucket space). This is the artifact SURVEY §8 promises
     * for q155 at 100 TB: the nightly increment never re-shingles the
     * corpus, it PLANS ITS SCAN from its own touched bucket keys and
-    * reads only those partitions (the [[graft.operators.ScalePatterns
-    * .bucketedTableNames]] precedent, plus partition pruning). Cached
-    * per (session, key) like the q162 bucketed tables. */
+    * reads only those partitions. Returns the table as a frame. */
   def materializedNearDupBase(s: SparkSession, base: DataFrame, key: String,
-      shingleSize: Int = 3, numPerms: Int = 32, bands: Int = 8): String = {
+      shingleSize: Int = 3, numPerms: Int = 32, bands: Int = 8): DataFrame = {
     // the signature parameters are part of the artifact identity — a
     // key reused with different shingle/perm/band settings must build
     // its own table, not probe the first build's bucket space
-    val fullKey = s"$key|s=$shingleSize|p=$numPerms|b=$bands"
-    baseBucketTables.getOrElseUpdate((s, fullKey), {
-      // sanitized FULL key in the table name (hashCode alone can
-      // collide across keys and silently overwrite another base)
-      val name = "graft_nd_base_" +
-        fullKey.replaceAll("[^A-Za-z0-9]", "_").takeRight(48) +
-        "_" + java.lang.Integer.toHexString(fullKey.hashCode)
-      val dir = java.nio.file.Files.createTempDirectory("graft_nd_base_")
+    val params = s"s=$shingleSize|p=$numPerms|b=$bands"
+    val d = graft.Artifacts.durable(s, graft.Artifacts.sessionHome(s,
+        "graft_nd_base_", s"$key|$params"), s"ndbase|$params") { d =>
       bandBuckets(base, shingleSize, numPerms, bands)
         .withColumn("pp", (col("band") * BhPartitions +
           pmod(col("bh"), lit(BhPartitions.toLong))).cast("int"))
         // r17 (guide §6, "hash distribution avoids the many-small-
         // files problem"): cluster rows by their output directory
-        // BEFORE the partitioned+bucketed write — without it every
-        // write task holds rows of ~all 512 pp dirs and opens a file
-        // per (dir × bucket) it touches (measured: 9 tasks × ~4k file
-        // creates = 216 s of task time at sf0.1; the serve then pays
-        // the same multiple reading them back). One task per pp slice
-        // writes each (pp, bucket) file exactly once. Layout, values
-        // and the pruning contract (IncrementalMatSpec) are unchanged.
+        // BEFORE the partitioned write — without it every write task
+        // holds rows of ~all 512 pp dirs and opens a file per dir it
+        // touches (measured: 9 tasks × ~4k file creates = 216 s of
+        // task time at sf0.1; the serve then pays the same multiple
+        // reading them back). One task per pp slice writes each pp
+        // file exactly once. Layout, values and the pruning contract
+        // (IncrementalMatSpec) are unchanged.
         .repartition(col("pp"))
-        .write.partitionBy("pp").bucketBy(8, "bh").sortBy("bh")
-        .option("path", s"$dir/t").mode("overwrite").saveAsTable(name)
-      name
-    })
+        .write.partitionBy("pp").mode("overwrite").parquet(s"$d/t")
+    }
+    graft.Artifacts.parquet(s, s"$d/t")
   }
 
   /** [[incrementalNearDups]] probing the MATERIALIZED base bucket
@@ -837,7 +826,7 @@ object Dedup {
       fresh: DataFrame, key: String, shingleSize: Int = 3,
       numPerms: Int = 32, bands: Int = 8, threshold: Double = 0.5,
       maxBucket: Int = 10000): DataFrame = {
-    val table = materializedNearDupBase(s, base, key, shingleSize,
+    val bb = materializedNearDupBase(s, base, key, shingleSize,
       numPerms, bands)
     // the increment's signatures feed the touched-partition collect
     // AND the bucket join — localCheckpoint runs the minhash job once
@@ -848,8 +837,8 @@ object Dedup {
     val touched = nb0.select(col("pp")).distinct()
       .collect().map(_.getInt(0)).sorted
     val bbScan =
-      if (touched.isEmpty) s.table(table).filter(lit(false))
-      else s.table(table).filter(col("pp").isin(touched.map(Int.box): _*))
+      if (touched.isEmpty) bb.filter(lit(false))
+      else bb.filter(col("pp").isin(touched.map(Int.box): _*))
     freshBasePairs(nb0.select(col("doc_id"), col("band"), col("bh")),
       bbScan.select(col("doc_id"), col("band"), col("bh")), base, fresh,
       shingleSize, threshold, maxBucket)
@@ -1542,56 +1531,24 @@ object Dedup {
   def docsDurableDir(prefix: String, d: String): String =
     graft.Artifacts.durableDirFor(prefix, d, "documents.parquet")
 
-  private val screenArtifacts = scala.collection.mutable.Map
-    .empty[(SparkSession, String), (String, String)]
-
-  /** Materialize the don't-re-ingest screen as an AT-REST artifact
-    * pair, built once per (session, key) and reused by every later
-    * screening job ([[materializedNearDupBase]]'s convention applied
-    * to the exact-dup screen): the collapsed base fingerprint set as
-    * a bucketed lake table (the exact side of the screen — bucketed
-    * by fp so the maybe-branch anti join never re-shuffles the base),
-    * and the serialized Bloom sketch over xxhash64(fp) as a one-row
-    * binary parquet (the routing side — KBs at rest, read by the
-    * driver of any screening job without touching the base corpus).
-    * At 100 TB this is the difference between re-scanning and
-    * re-collapsing the ingested corpus on every crawl snapshot and
-    * reading a fingerprint table + a sketch file. */
-  def materializedScreenBase(s: SparkSession, base: DataFrame,
-      key: String, fpp: Double = 0.01): (String, String) = {
-    // fpp shapes the persisted Bloom sketch — part of the identity
-    val fullKey = s"$key|fpp=$fpp"
-    screenArtifacts.getOrElseUpdate((s, fullKey), {
-      val name = "graft_screen_base_" +
-        fullKey.replaceAll("[^A-Za-z0-9]", "_").takeRight(48) +
-        "_" + java.lang.Integer.toHexString(fullKey.hashCode)
-      val dir = java.nio.file.Files.createTempDirectory("graft_screen_")
-      val fps = base.select(contentFp.as("fp")).distinct().persist()
-      try {
-        fps.write.bucketBy(8, "fp").sortBy("fp")
-          .option("path", s"$dir/fps").mode("overwrite").saveAsTable(name)
-        val bloom = RuntimeFilters.buildBloom(
-          fps.select(xxhash64(col("fp")).as("h")), "h", fps.count(), fpp)
-        import s.implicits._
-        Seq(Tuple1(bloom)).toDF("bloom")
-          .coalesce(1).write.mode("overwrite").parquet(s"$dir/bloom")
-      } finally fps.unpersist(false)
-      (name, s"$dir/bloom")
-    })
-  }
-
   /** [[crossCorpusNewBloomScreened]] reading the screen from the
     * at-rest artifact instead of re-deriving it from the base corpus:
     * the bloom row routes definite-new candidates around the shuffle,
     * the bucketed fingerprint table settles the maybe branch with an
     * anti join that shuffles ONLY the maybe-side (the base side is
     * pre-bucketed on fp). Row-identical to the inline form and to the
-    * plain anti join — q258 pins that against the q145/q189 oracle. */
+    * plain anti join — q258 pins that against the q145/q189 oracle.
+    * The artifact is [[materializedScreenBaseDurable]]'s, built once
+    * per (session, key, fpp) at its [[screenSessionHome]]. */
   def crossCorpusNewFromArtifact(s: SparkSession, candidates: DataFrame,
-      base: DataFrame, key: String, fpp: Double = 0.01): DataFrame = {
-    val (table, bloomDir) = materializedScreenBase(s, base, key, fpp)
-    screenServe(s, candidates, table, bloomDir)
-  }
+      base: DataFrame, key: String, fpp: Double = 0.01): DataFrame =
+    crossCorpusNewFromDurableArtifact(s, candidates, base,
+      screenSessionHome(s, key, fpp), fpp)
+
+  /** The session home of the don't-re-ingest screen for `key`. */
+  private[graft] def screenSessionHome(s: SparkSession, key: String,
+      fpp: Double = 0.01): String =
+    graft.Artifacts.sessionHome(s, "graft_screen_", s"$key|fpp=$fpp")
 
   /** The bloom-route + bucketed-anti-join serve over an EXPLICIT
     * screen artifact (fps table name + bloom file) — shared by the
@@ -1610,14 +1567,20 @@ object Dedup {
     definiteNew.unionByName(maybeDup)
   }
 
-  /** The DURABLE screen base — [[materializedScreenBase]]'s artifact
-    * pair written under a commit-marked lake dir (the q330
-    * machinery): the collapsed fingerprint set as a BUCKETED table
-    * whose bucket spec a fresh session re-declares over the existing
-    * files ([[graft.Artifacts.registerBucketedTable]] — read.parquet
-    * would lose the co-location), and the Bloom sketch as a one-row
-    * parquet any screening job's driver reads without touching the
-    * base corpus. A crawl snapshot's screen thus survives the JVM:
+  /** The don't-re-ingest screen as an AT-REST artifact pair, written
+    * under a commit-marked dir (the q330 machinery) and reused by
+    * every later screening job: the collapsed base fingerprint set as
+    * a BUCKETED table (the exact side of the screen — bucketed by fp
+    * so the maybe-branch anti join never re-shuffles the base; a
+    * fresh session re-declares the bucket spec over the existing
+    * files, [[graft.Artifacts.registerBucketedTable]], as read.parquet
+    * would lose the co-location), and the serialized Bloom sketch
+    * over xxhash64(fp) as a one-row parquet (the routing side — KBs at
+    * rest, read by the driver of any screening job without touching
+    * the base corpus). At 100 TB this is the difference between
+    * re-scanning and re-collapsing the ingested corpus on every crawl
+    * snapshot and reading a fingerprint table + a sketch file. At a
+    * durable home the screen of a crawl snapshot survives the JVM:
     * tomorrow's screening job routes + anti-joins against tonight's
     * artifact with ZERO base work (base is by-name — never evaluated
     * on the committed path). */

@@ -285,12 +285,18 @@ object Describe {
     val rows = cols.sorted.map { c =>
       val b = cols.indexOf(c) * 5
       val n = r.getLong(b)
-      val s = r.getDouble(b + 1)
-      val s2 = r.getDouble(b + 2)
-      val qs = quartiles(c)
-      org.apache.spark.sql.Row(c, n, s / n,
-        math.sqrt((s2 - s * s / n) / (n - 1)), r.getDouble(b + 3),
-        qs(0), qs(1), qs(2), r.getDouble(b + 4))
+      // no non-NULL value: the sums are NULL, and so is every stat
+      // [[exact]] reports
+      if (n == 0) org.apache.spark.sql.Row(c, n, null, null, null, null,
+        null, null, null)
+      else {
+        val s = r.getDouble(b + 1)
+        val s2 = r.getDouble(b + 2)
+        val qs = quartiles(c)
+        org.apache.spark.sql.Row(c, n, s / n,
+          math.sqrt((s2 - s * s / n) / (n - 1)), r.getDouble(b + 3),
+          qs(0), qs(1), qs(2), r.getDouble(b + 4))
+      }
     }
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1),

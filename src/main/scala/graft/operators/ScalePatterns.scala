@@ -835,32 +835,37 @@ object ScalePatterns {
   }
 
   /** Bucketed-table layout: lineitem and orders written ONCE per
-    * (session, sfDir) as catalog tables bucketed (and sorted) on
-    * their join key, 8 buckets each side. A join on the bucket key
-    * then reads co-located buckets and plans with NO shuffle on
-    * either side (BucketedJoinSpec pins SortMergeJoin + zero
-    * Exchange under the join) — the at-rest layout that turns the
-    * biggest fact-fact join at 100 TB from a full-network shuffle
-    * into a local merge. The write cost amortizes over every
-    * subsequent join, exactly like a real warehouse's bucketed fact
-    * tables; Spark's bucket hash is stable across sessions, so the
-    * layout survives as a durable artifact. */
-  private val bucketedTables = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (String, String)]
-  def bucketedTableNames(s: SparkSession, d: String): (String, String) =
-    bucketedTables.getOrElseUpdate((s, d), {
-      val h = java.lang.Integer.toHexString(d.hashCode)
-      val (li, ord) = (s"graft_li_bkt_$h", s"graft_ord_bkt_$h")
+    * (session, sfDir) at a [[graft.Artifacts.sessionHome]] as catalog
+    * tables bucketed (and sorted) on their join key, 8 buckets each
+    * side. A join on the bucket key then reads co-located buckets and
+    * plans with NO shuffle on either side (BucketedJoinSpec pins
+    * SortMergeJoin + zero Exchange under the join) — the at-rest
+    * layout that turns the biggest fact-fact join at 100 TB from a
+    * full-network shuffle into a local merge. The write cost
+    * amortizes over every subsequent join, exactly like a real
+    * warehouse's bucketed fact tables; Spark's bucket hash is stable
+    * across sessions, so the layout survives as a durable artifact. */
+  def bucketedTableNames(s: SparkSession, d: String): (String, String) = {
+    val home = graft.Artifacts.sessionHome(s, "graft_bucketed_", d)
+    val h = graft.Artifacts.digest(home)
+    val (li, ord) = (s"graft_li_bkt_$h", s"graft_ord_bkt_$h")
+    val dir = graft.Artifacts.durable(s, home, "bucketed|8") { p =>
       val t = Tables(s, d)
-      val dir = java.nio.file.Files.createTempDirectory("graft_bucketed_")
-      t.lineitem.select(col("l_orderkey"), col("l_quantity"))
-        .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-        .option("path", s"$dir/li").mode("overwrite").saveAsTable(li)
-      t.orders.select(col("o_orderkey"), col("o_custkey"))
-        .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-        .option("path", s"$dir/ord").mode("overwrite").saveAsTable(ord)
-      (li, ord)
-    })
+      graft.Artifacts.writeBucketed(
+        t.lineitem.select(col("l_orderkey"), col("l_quantity")),
+        li, s"$p/li", "l_orderkey", 8)
+      graft.Artifacts.writeBucketed(
+        t.orders.select(col("o_orderkey"), col("o_custkey")),
+        ord, s"$p/ord", "o_orderkey", 8)
+    }
+    graft.Artifacts.registerBucketedTable(s, li, s"$dir/li",
+      "l_orderkey BIGINT, l_quantity DOUBLE", "l_orderkey", 8,
+      Some("l_orderkey"))
+    graft.Artifacts.registerBucketedTable(s, ord, s"$dir/ord",
+      "o_orderkey BIGINT, o_custkey BIGINT", "o_orderkey", 8,
+      Some("o_orderkey"))
+    (li, ord)
+  }
 
   /** The co-located join itself, un-aggregated (the spec asserts its
     * plan shape); `hint("merge")` pins SortMergeJoin so the sf0.01

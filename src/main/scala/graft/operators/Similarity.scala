@@ -420,71 +420,56 @@ object Similarity {
   /** The AT-REST form of [[ivfTopK]]'s index — what the docstring
     * there promises, materialized: the corpus is written to the lake
     * `partitionBy(cell)` (cell = trained coarse-quantizer assignment)
-    * with the k×Dim centroid model as a sidecar table, so an ANN
-    * query becomes PARTITION PRUNING over the vector table. Written
-    * once per (session, key) like the q162 bucketed tables and the
-    * q194 near-dup base. Returns the vector table name; the sidecar
-    * is `<name>_cents`. */
-  private val ivfIndexTables =
-    new graft.Artifacts.KeyedMemo[(SparkSession, String), String]
+    * with the k×Dim centroid model beside it, so an ANN query becomes
+    * PARTITION PRUNING over the vector table. Built once per (session,
+    * key, cells, iters) at a [[graft.Artifacts.sessionHome]]; returns
+    * the (vectors, centroids) frames. */
   def materializedIvfIndex(s: SparkSession, embeddings: DataFrame,
-      key: String, cells: Int = 16, iters: Int = 3): String =
-    // the build PARAMETERS are part of the identity: a caller reusing
-    // a key with different cells/iters gets its own artifact, never a
-    // silent serve of the first build's layout
-    ivfIndexTables.getOrBuild((s, s"$key|c=$cells|i=$iters")) {
-      val name =
-        s"graft_ivf_${graft.Artifacts.digest(s"$key|c=$cells|i=$iters")}"
-      val dir = graft.Artifacts.tempDir("graft_ivf_")
-      val emb = withNorm(embeddings).persist()
-      try {
-        val cents = kmeansCentroids(emb, cells, iters)
-        cents.write.option("path", s"$dir/cents").mode("overwrite")
-          .saveAsTable(name + "_cents")
-        emb.join(assignCells(emb, cents), "vec_id")
-          .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
-          .write.partitionBy("cell")
-          .option("path", s"$dir/t").mode("overwrite").saveAsTable(name)
-      } finally emb.unpersist(false)
-      name
+      key: String, cells: Int = 16, iters: Int = 3)
+      : (DataFrame, DataFrame) = {
+    val d = graft.Artifacts.durable(s, graft.Artifacts.sessionHome(s,
+        "graft_ivf_", s"$key|c=$cells|i=$iters"), s"ivf|c=$cells|i=$iters") {
+      d =>
+        val emb = withNorm(embeddings).persist()
+        try {
+          val cents = kmeansCentroids(emb, cells, iters)
+          cents.write.mode("overwrite").parquet(s"$d/cents")
+          emb.join(assignCells(emb, cents), "vec_id")
+            .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
+            .write.partitionBy("cell").mode("overwrite").parquet(s"$d/t")
+        } finally emb.unpersist(false)
     }
+    (graft.Artifacts.parquet(s, s"$d/t"),
+      graft.Artifacts.parquet(s, s"$d/cents"))
+  }
 
   /** The AT-REST form of [[ivfPqTopK]]'s index — IVF cells AND the PQ
-    * model written to the lake ONCE per (session, key), so serving
-    * pays only probe + pruned scans (the q205/q299 at-rest
-    * convention, here for the FAISS IVFADC shape): on top of
-    * [[materializedIvfIndex]]'s partitionBy(cell) vector table +
-    * centroid sidecar, this adds `<name>_pq_cb` (the m×ksub codebook
-    * model — broadcast-sized) and `<name>_pq_codes` (one (vec_id,
-    * sub, code) row per subspace, partitionBy(cell) so the ADC scan
-    * partition-prunes exactly like the vector scan). Returns the base
-    * vector-table name. */
-  private val ivfPqIndexTables =
-    new graft.Artifacts.KeyedMemo[(SparkSession, String), (String, String)]
-  def materializedIvfPqIndex(s: SparkSession, embeddings: DataFrame,
-      key: String, cells: Int = 16, iters: Int = 3, m: Int = 8,
-      ksub: Int = 16): (String, String) =
-    // memo key and sidecar names carry EVERY build parameter (the
-    // base's cells/iters via materializedIvfIndex's own digest, the
-    // PQ m/ksub here), so two PQ configs over one base coexist and a
-    // mismatched key reuse cannot serve the wrong codebook
-    ivfPqIndexTables.getOrBuild((s, s"$key|c=$cells|i=$iters|m=$m|k=$ksub")) {
-      val table = materializedIvfIndex(s, embeddings, key, cells, iters)
-      val pq = s"graft_ivfpq_${graft.Artifacts.digest(
-        s"$key|c=$cells|i=$iters|m=$m|k=$ksub")}"
-      val dir = graft.Artifacts.tempDir("graft_ivfpq_")
+    * model written to the lake ONCE per (session, key, every build
+    * parameter), so serving pays only probe + pruned scans (the
+    * q205/q299 at-rest convention, here for the FAISS IVFADC shape):
+    * on top of [[materializedIvfIndex]]'s vectors + centroids, the
+    * m×ksub codebook model (broadcast-sized) and one (vec_id, sub,
+    * code) row per subspace, partitionBy(cell) so the ADC scan
+    * partition-prunes exactly like the vector scan. Returns the
+    * (vectors, centroids, codebook, codes) frames. */
+  private def materializedIvfPqIndex(s: SparkSession,
+      embeddings: DataFrame, key: String, cells: Int, iters: Int, m: Int,
+      ksub: Int): (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val (vectors, cents) =
+      materializedIvfIndex(s, embeddings, key, cells, iters)
+    val params = s"c=$cells|i=$iters|m=$m|k=$ksub"
+    val d = graft.Artifacts.durable(s, graft.Artifacts.sessionHome(s,
+        "graft_ivfpq_", s"$key|$params"), s"ivfpq|$params") { d =>
       val cb = pqCodebooks(embeddings, m, ksub, iters)
-      cb.write.option("path", s"$dir/cb").mode("overwrite")
-        .saveAsTable(pq + "_cb")
-      val cellOf = s.table(table).select(col("vec_id"), col("cell"))
+      cb.write.mode("overwrite").parquet(s"$d/cb")
       pqAssign(pqSubvectors(embeddings, m), cb)
         .withColumnRenamed("cell", "code")
-        .join(cellOf, "vec_id")
-        .write.partitionBy("cell")
-        .option("path", s"$dir/codes").mode("overwrite")
-        .saveAsTable(pq + "_codes")
-      (table, pq)
+        .join(vectors.select(col("vec_id"), col("cell")), "vec_id")
+        .write.partitionBy("cell").mode("overwrite").parquet(s"$d/codes")
     }
+    (vectors, cents, graft.Artifacts.parquet(s, s"$d/cb"),
+      graft.Artifacts.parquet(s, s"$d/codes"))
+  }
 
   /** IVF-PQ top-k served FROM the at-rest index — [[ivfPqTopK]] with
     * the one-time quantizer + codebook training amortized into the
@@ -522,26 +507,21 @@ object Similarity {
       embeddings: DataFrame, key: String, k: Int = 5, nprobe: Int = 3,
       cells: Int = 16, iters: Int = 3, m: Int = 8, ksub: Int = 16,
       rerank: Int = 4): DataFrame = {
-    val (table, pq) = materializedIvfPqIndex(s, embeddings, key, cells,
-      iters, m, ksub)
-    val cents = s.table(table + "_cents")
-      .withColumn("cn", norm(col("centroid")))
+    val (vectors, cents0, cb, codes0) = materializedIvfPqIndex(s,
+      embeddings, key, cells, iters, m, ksub)
+    val cents = cents0.withColumn("cn", norm(col("centroid")))
     val queries = queries0
       .select(col("query_id"), col("qv"), norm(col("qv")).as("qn"))
     val probed = ivfProbedCells(queries, cents, nprobe)
     val touched = probed.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).sorted
-    def pruned(t: DataFrame): DataFrame =
-      if (touched.isEmpty) t.filter(lit(false))
-      else t.filter(col("cell").isin(touched.map(Int.box): _*))
-    val scan = pruned(s.table(table))
+    val scan = prunedToTouched(vectors, touched)
     val cand = scan.select(col("vec_id").as("neighbor_id"), col("cell"))
       .join(broadcast(probed.select(col("query_id"), col("cell"))),
         Seq("cell"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"))
-    val cb = s.table(pq + "_cb")
-    val codes = pruned(s.table(pq + "_codes"))
+    val codes = prunedToTouched(codes0, touched)
       .select(col("vec_id"), col("sub"), col("code"))
     val qtable = pqSubvectors(
         queries0.select(col("query_id").as("vec_id"),
@@ -610,21 +590,17 @@ object Similarity {
   def ivfTopKMaterialized(s: SparkSession, embeddings: DataFrame,
       key: String, nQueries: Int = 10, k: Int = 5, nprobe: Int = 3,
       cells: Int = 16, iters: Int = 3, pruned: Boolean = true): DataFrame = {
-    val table = materializedIvfIndex(s, embeddings, key, cells, iters)
-    val cents = s.table(table + "_cents")
-      .withColumn("cn", norm(col("centroid")))
+    val (vectors, cents0) =
+      materializedIvfIndex(s, embeddings, key, cells, iters)
+    val cents = cents0.withColumn("cn", norm(col("centroid")))
     val queries = withNorm(embeddings).filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("nrm").as("qn"))
     val probed = ivfProbedCells(queries, cents, nprobe)
     val scan =
-      if (!pruned) s.table(table)
-      else {
-        val touched = probed.select(col("cell")).distinct()
-          .collect().map(_.getInt(0)).sorted
-        if (touched.isEmpty) s.table(table).filter(lit(false))
-        else s.table(table).filter(col("cell").isin(touched.map(Int.box): _*))
-      }
+      if (!pruned) vectors
+      else prunedToTouched(vectors, probed.select(col("cell")).distinct()
+        .collect().map(_.getInt(0)).sorted)
     ivfServe(probed,
       scan.select(col("vec_id").as("neighbor_id"), col("cell"),
         col("embedding"), col("nrm")),
@@ -654,19 +630,15 @@ object Similarity {
       nQueries: Int = 10, k: Int = 5, nprobe: Int = 3, cells: Int = 16,
       iters: Int = 3, m: Int = 8, ksub: Int = 16,
       rerank: Int = 4): DataFrame = {
-    val table = materializedIvfIndex(s, embeddings, key, cells, iters)
-    val cents = s.table(table + "_cents")
-      .withColumn("cn", norm(col("centroid")))
+    val (vectors, cents0) =
+      materializedIvfIndex(s, embeddings, key, cells, iters)
+    val cents = cents0.withColumn("cn", norm(col("centroid")))
     val queries = withNorm(embeddings).filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("nrm").as("qn"))
     val probed = ivfProbedCells(queries, cents, nprobe)
-    val touched = probed.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val scan =
-      if (touched.isEmpty) s.table(table).filter(lit(false))
-      else s.table(table)
-        .filter(col("cell").isin(touched.map(Int.box): _*))
+    val scan = prunedToTouched(vectors, probed.select(col("cell"))
+      .distinct().collect().map(_.getInt(0)).sorted)
     val cand = scan.select(col("vec_id").as("neighbor_id"), col("cell"))
       .join(broadcast(probed.select(col("query_id"), col("cell"))),
         Seq("cell"))
@@ -853,58 +825,34 @@ object Similarity {
       .orderBy(col("query_id"), col("rank"))
   }
 
+  /** The session home of the EXACT quantizer's index
+    * ([[ivfExactIndexDurable]] built at a
+    * [[graft.Artifacts.sessionHome]]): one build per (session, key,
+    * cells, iters), so q327 and q328 (same key, same defaults) share
+    * it while another quantizer configuration gets its own. */
+  private[graft] def ivfExactSessionHome(s: SparkSession, key: String,
+      cells: Int = 8, iters: Int = 2): String =
+    graft.Artifacts.sessionHome(s, "graft_ivfx_", s"$key|c=$cells|i=$iters")
+
   /** The AT-REST form of the EXACT quantizer's index — q205's
     * materialization convention applied to [[kmeansCentroidsExact]]:
-    * the corpus written `partitionBy(cell)` under the decimal-exact
-    * cell assignment, the k×Dim exact centroids as a sidecar. Built
-    * once per (session, key); because the quantizer is
-    * oracle-replayable, everything SERVED from this layout stays
-    * hash-exact — the first at-rest ANN artifact with that
-    * property. */
-  private val ivfExactIndexTables =
-    new graft.Artifacts.KeyedMemo[(SparkSession, String), String]
-  def materializedIvfExactIndex(s: SparkSession, embeddings: DataFrame,
-      key: String, cells: Int = 8, iters: Int = 2): String =
-    // cells/iters are folded into the memo key AND the table digest:
-    // the q327/q328 sharing (same key, same defaults) still hits one
-    // build, but a caller reusing a key with different quantizer
-    // parameters gets a fresh artifact instead of the first build's
-    ivfExactIndexTables.getOrBuild((s, s"$key|c=$cells|i=$iters")) {
-      val name =
-        s"graft_ivfx_${graft.Artifacts.digest(s"$key|c=$cells|i=$iters")}"
-      val dir = graft.Artifacts.tempDir("graft_ivfx_")
-      val emb = embeddings.select(col("vec_id"), col("embedding"))
-        .persist()
-      try {
-        val cents = kmeansCentroidsExact(emb, cells, iters)
-        cents.write.option("path", s"$dir/cents").mode("overwrite")
-          .saveAsTable(name + "_cents")
-        assignCellsExact(emb, cents).join(emb, "vec_id")
-          .select(col("vec_id"), col("embedding"), col("cell"))
-          .write.partitionBy("cell")
-          .option("path", s"$dir/t").mode("overwrite").saveAsTable(name)
-      } finally emb.unpersist(false)
-      name
-    }
-
-  /** The DURABLE form of [[materializedIvfExactIndex]] — the r13
-    * verdict's top item closed: the SAME layout (`$dir/t`
-    * partitionBy(cell) vectors, `$dir/cents` exact centroids) written
-    * under a caller-supplied LAKE path with a last-write commit
-    * marker, served as-is on every later call INCLUDING FROM A FRESH
-    * JVM — where the session-scoped catalog variant, whose tables
-    * live in an exit-deleted temp dir, would silently retrain. The
+    * `$dir/t` holds the corpus written `partitionBy(cell)` under the
+    * decimal-exact cell assignment, `$dir/cents` the k×Dim exact
+    * centroids. Because the quantizer is oracle-replayable,
+    * everything SERVED from this layout stays hash-exact. At a
+    * durable home the artifact is served as-is on every later call
+    * INCLUDING FROM A FRESH JVM; at a session home
+    * ([[ivfExactSessionHome]]) it lives until the JVM exits. The
     * quantizer is deterministic, so build-then-serve and
     * reload-then-serve are bit-identical (DurableArtifactsSpec pins a
     * cold-session serve with the build counter flat); a dir reused
     * with different cells/iters fails loudly via the params sidecar.
-    * This is the missing half of the "build once, serve many" 100 TB
-    * economics: the nightly-ingest consumers (q327/q328's shapes) and
-    * the serving consumers (q319's shape) read one artifact across
-    * JOBS, not just across queries of one session. Returns the
-    * (vectors, centroids) frames read straight from the lake;
-    * filtering `cell` on the vectors frame partition-prunes exactly
-    * like the catalog table (spec-pinned). */
+    * This is the "build once, serve many" 100 TB economics: the
+    * nightly-ingest consumers (q327/q328's shapes) and the serving
+    * consumers (q319's shape) read one artifact across JOBS, not just
+    * across queries of one session. Returns the (vectors, centroids)
+    * frames read straight from the lake; filtering `cell` on the
+    * vectors frame partition-prunes (spec-pinned). */
   def ivfExactIndexDurable(s: SparkSession, embeddings: DataFrame,
       dir: String, cells: Int = 8, iters: Int = 2)
       : (DataFrame, DataFrame) = {
@@ -921,7 +869,8 @@ object Similarity {
             .parquet(s"$d/t")
         } finally emb.unpersist(false)
     }
-    (s.read.parquet(s"$d/t"), s.read.parquet(s"$d/cents"))
+    (graft.Artifacts.parquet(s, s"$d/t"),
+      graft.Artifacts.parquet(s, s"$d/cents"))
   }
 
   /** Static partition filter for the touched-cell scan — empty probe
@@ -946,16 +895,15 @@ object Similarity {
   def ivfExactServeQueries(s: SparkSession, queries: DataFrame,
       embeddings: DataFrame, key: String, k: Int = 5, nprobe: Int = 2,
       cells: Int = 8, iters: Int = 2): DataFrame = {
-    val table = materializedIvfExactIndex(s, embeddings, key, cells,
-      iters)
-    ivfExactServeFrames(queries, s.table(table),
-      s.table(table + "_cents"), k, nprobe)
+    val (vectors, cents) = ivfExactIndexDurable(s, embeddings,
+      ivfExactSessionHome(s, key, cells, iters), cells, iters)
+    ivfExactServeFrames(queries, vectors, cents, k, nprobe)
   }
 
   /** The probe + prune + exact-rank core over EXPLICIT index frames —
-    * the catalog-table tier ([[ivfExactServeQueries]]) passes its
-    * session tables; DurableArtifactsSpec passes the durable lake
-    * index ([[ivfExactIndexDurable]]) to pin the two bit-identical. */
+    * the session tier ([[ivfExactServeQueries]]) passes its session
+    * home's index; DurableArtifactsSpec passes a durable lake index
+    * ([[ivfExactIndexDurable]]) to pin the two bit-identical. */
   private[graft] def ivfExactServeFrames(queries: DataFrame,
       vectors: DataFrame, cents: DataFrame, k: Int,
       nprobe: Int): DataFrame = {
@@ -992,7 +940,8 @@ object Similarity {
     * at-rest base WITHOUT retraining the quantizer or rescanning the
     * base. The increment is the deterministic slice vec_id % 10 = 3
     * (the q163/q124 perturbation convention); the base (everything
-    * else) is materialized once via [[materializedIvfExactIndex]].
+    * else) is materialized once per session via
+    * [[ivfExactIndexDurable]] at its [[ivfExactSessionHome]].
     * Each new vector assigns to ONE cell under the index's broadcast
     * centroid sidecar (the q319 probe at nprobe=1), the base scan is
     * PARTITION-PRUNED to the touched cells, and the SemDeDup decision
@@ -1041,12 +990,10 @@ object Similarity {
     * same probe, same decision, so stream == batch by construction. */
   def semDedupAgainstIndex(s: SparkSession, inc: DataFrame,
       base: DataFrame, key: String, threshold: Double = 0.35,
-      cells: Int = 8, iters: Int = 2): DataFrame = {
-    val table =
-      materializedIvfExactIndex(s, base, key + "#incbase", cells, iters)
-    semDedupDecide(inc, s.table(table), s.table(table + "_cents"),
-      threshold)
-  }
+      cells: Int = 8, iters: Int = 2): DataFrame =
+    semDedupAgainstIndexDurable(s, inc, base,
+      ivfExactSessionHome(s, key + "#incbase", cells, iters), threshold,
+      cells, iters)
 
   /** [[semDedupAgainstIndex]] against the DURABLE index: the nightly
     * ingest as it actually runs across JOBS — tonight's JVM builds
@@ -1168,7 +1115,7 @@ object Similarity {
     graft.Artifacts.durableDirFor("ivfx9c", d, "embeddings.parquet")
 
   /** The assign + prune + best-match decision core over EXPLICIT
-    * index frames — shared by the catalog and durable tiers.
+    * index frames — shared by the session and durable tiers.
     * private[graft]: the maintenance spec replays the
     * frozen-quantizer rebuild through it. */
   private[graft] def semDedupDecide(inc: DataFrame, vectors: DataFrame,
@@ -1211,18 +1158,18 @@ object Similarity {
     * three single IEEE divisions and one subtraction — hash-exact in
     * any engine. Base counts read ONLY the index table's partition
     * column; the increment assigns against the broadcast sidecar —
-    * the monitor never touches vectors of the base. Same memo key as
-    * q327, so monitoring and dedup share ONE artifact build. */
+    * the monitor never touches vectors of the base. Same session home
+    * as q327, so monitoring and dedup share ONE artifact build. */
   def indexStaleness(s: SparkSession, embeddings: DataFrame,
       key: String, cells: Int = 8, iters: Int = 2): DataFrame = {
     val base = embeddings.filter(pmod(col("vec_id"), lit(10L)) =!= 3)
     val inc = embeddings.filter(pmod(col("vec_id"), lit(10L)) === 3)
       .select(col("vec_id"), col("embedding"))
-    val table =
-      materializedIvfExactIndex(s, base, key + "#incbase", cells, iters)
-    val baseCounts = s.table(table).groupBy(col("cell"))
+    val (vectors, cents) = ivfExactIndexDurable(s, base,
+      ivfExactSessionHome(s, key + "#incbase", cells, iters), cells, iters)
+    val baseCounts = vectors.groupBy(col("cell"))
       .agg(count(lit(1)).as("n_base"))
-    val incCounts = assignCellsExact(inc, s.table(table + "_cents"))
+    val incCounts = assignCellsExact(inc, cents)
       .groupBy(col("cell")).agg(count(lit(1)).as("n_inc"))
     val joined = baseCounts.join(incCounts, Seq("cell"), "full_outer")
       .select(col("cell"),

@@ -411,67 +411,39 @@ object TextAnalysis {
       .orderBy(col("d1"), col("d2"))
   }
 
-  /** The AT-REST form of q202's posting tier: the df-capped
-    * `(g, doc_id, tf)` relation written ONCE per (session, sfDir) as
-    * a catalog table bucketed AND sorted on `g` (8 buckets — the
-    * q162/q194/q205 durable-artifact convention). Every consumer of
-    * the candidate generator — q202's pair tier and the q217/q221/
-    * q224/q231 compositions that replay it — re-derives tf+df from
-    * raw text on EVERY run; at 100 TB that shingling pass and the
-    * gram-keyed shuffle behind the self-join dwarf the pairs
-    * themselves. Bucketing by `g` makes the self-join read co-located
-    * buckets with NO Exchange on either side (PlanAuditSpec pins
-    * SortMergeJoin + zero shuffle under the join), and the write
-    * amortizes over every downstream near-dup query. Spark's bucket
-    * hash is stable across sessions, so the layout survives as a
-    * durable lake artifact. */
-  private val postingsTables = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-  def materializedPostingsTable(s: SparkSession, d: String,
-      maxDf: Long = 20): String = postingsTables.synchronized {
-    postingsTables.getOrElseUpdate((s, d), {
-      // collision-resistant digest of the path + monitor around the
-      // non-atomic getOrElseUpdate + exit-time dir cleanup — see
-      // graft.Artifacts
-      val name = s"graft_postings_${graft.Artifacts.digest(d)}"
-      val dir = graft.Artifacts.tempDir("graft_postings_")
-      val toks = Tables(s, d).documents
-        .select(col("doc_id"), tokens(col("text")).as("t"))
-        .filter(size(col("t")) >= 3)
-      val grams = toks.select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(t)-2), i -> concat(" +
-          "element_at(t, i), ' ', element_at(t, i+1), ' ', " +
-          "element_at(t, i+2)))")).as("g"))
-      val tf = grams.groupBy(col("doc_id"), col("g"))
-        .agg(count(lit(1)).as("tf"))
-      val dfr = tf.groupBy(col("g")).agg(count(lit(1)).as("df"))
-      tf.join(dfr.filter(col("df") <= maxDf).select(col("g")), Seq("g"))
-        .write.bucketBy(8, "g").sortBy("g")
-        .option("path", s"$dir/p").mode("overwrite").saveAsTable(name)
-      name
-    })
-  }
-
   /** q202 served FROM the at-rest posting table — identical results
     * (the table holds exactly the in-memory `kept` relation, and the
     * downstream is [[cosineFromPostings]] verbatim), shuffle-free
-    * candidate generation (bucketed self-join on `g`). The oracle is
+    * candidate generation (bucketed self-join on `g`). The table is
+    * [[materializedPostingsDurable]]'s, built once per (session,
+    * sfDir, maxDf) at its [[postingsSessionHome]]. The oracle is
     * q202's SQL unchanged: materialization is a layout decision, not
     * a semantic one. */
   def sparseCosinePairsMaterialized(s: SparkSession, d: String,
       threshold: Double = 0.5, maxDf: Long = 20): DataFrame =
-    cosineFromPostings(s.table(materializedPostingsTable(s, d, maxDf)),
-      threshold, mergeHint = true)
+    sparseCosinePairsDurable(s, Tables(s, d).documents,
+      postingsSessionHome(s, d, maxDf), threshold, maxDf)
 
-  /** The DURABLE postings table — the last at-rest family from the
-    * r13 verdict's list moved out of the exit-deleted temp tree: the
-    * df-capped (g, doc_id, tf) relation written bucketBy(g) under a
-    * commit-marked lake dir, with the bucket spec RE-DECLARED over the
-    * committed files in a fresh session
-    * ([[graft.Artifacts.registerBucketedTable]] — the q336 device),
-    * so the shuffle-free posting self-join survives the JVM. The
-    * documents frame is BY-NAME: a committed artifact serves without
-    * re-tokenizing anything. */
+  /** The session home of the postings table for dataset `d`. */
+  private[graft] def postingsSessionHome(s: SparkSession, d: String,
+      maxDf: Long = 20): String =
+    graft.Artifacts.sessionHome(s, "graft_postings_", s"$d|maxDf=$maxDf")
+
+  /** The AT-REST form of q202's posting tier: the df-capped
+    * `(g, doc_id, tf)` relation written ONCE under a commit-marked dir
+    * as a table bucketed AND sorted on `g` (8 buckets), with the
+    * bucket spec RE-DECLARED over the committed files in a fresh
+    * session ([[graft.Artifacts.registerBucketedTable]] — the q336
+    * device), so the shuffle-free posting self-join survives the JVM
+    * at a durable home. Every consumer of the candidate generator —
+    * q202's pair tier and the q217/q221/q224/q231 compositions that
+    * replay it — re-derives tf+df from raw text on EVERY run; at
+    * 100 TB that shingling pass and the gram-keyed shuffle behind the
+    * self-join dwarf the pairs themselves. Bucketing by `g` makes the
+    * self-join read co-located buckets with NO Exchange on either
+    * side (PlanAuditSpec pins SortMergeJoin + zero shuffle under the
+    * join). The documents frame is BY-NAME: a committed artifact
+    * serves without re-tokenizing anything. Returns the table name. */
   def materializedPostingsDurable(s: SparkSession,
       documents: => org.apache.spark.sql.DataFrame, dir: String,
       maxDf: Long = 20): String = {

@@ -1,29 +1,21 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
-
 import scala.util.control.NonFatal
 
-/** Stage composition + retry — the reference's orchestration layer
-  * (O1–O3, `/root/reference/dags/airflow_dag.py:11-62`) collapsed into
-  * one lineage.
+/** Retry — what is left of the reference's orchestration layer
+  * (O1–O3, `dags/airflow_dag.py:11-62`) once it collapses into one
+  * lineage.
   *
   * The reference needs Airflow because each stage is a separate
   * process exchanging serialized rows through a metadata DB (X1). In
   * Spark the extract→transform→load→report chain is a single lazy
-  * plan; "task boundaries" are just function composition, and the only
+  * plan; "task boundaries" are just function composition (O1 needs no
+  * code: a stage is a `DataFrame => DataFrame`), and the only
   * real boundaries left are shuffles. What remains worth keeping from
   * Airflow is the retry policy (O3) and failure notification — a
   * 10-line driver loop.
   */
 object Pipeline {
-
-  /** A named transform stage: DataFrame => DataFrame. */
-  final case class Stage(name: String, f: DataFrame => DataFrame)
-
-  /** O1: linear composition (task_1 >> task_2 >> ...). */
-  def run(input: DataFrame, stages: Seq[Stage]): DataFrame =
-    stages.foldLeft(input)((df, s) => s.f(df))
 
   /** O3: retry wrapper — `retries` attempts with `delayMs` backoff,
     * notifying on each failure, like the reference's

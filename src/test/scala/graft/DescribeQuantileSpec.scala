@@ -87,4 +87,18 @@ class DescribeQuantileSpec extends AnyFunSuite {
       assert(plan.contains("Window"), plan)
     } finally counts.unpersist(false)
   }
+
+  test("exactLarge returns exact's row on an empty frame and on an " +
+      "all-NULL column") {
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+    val full = Seq[(Option[Double], Option[Double])](
+      (Some(1.5), None), (Some(-2.0), None), (Some(4.25), None))
+      .toDF("x", "z")
+    for (df <- Seq(full.limit(0), full)) {
+      val got = rows(Describe.exactLarge(df, Seq("x", "z")))
+      assert(got == rows(Describe.exact(df, Seq("x", "z"))))
+      val z = got.find(_.getString(0) == "z").get
+      assert(z.getLong(1) == 0L && (2 until z.length).forall(z.isNullAt))
+    }
+  }
 }

@@ -148,12 +148,12 @@ class DurableArtifactsSpec extends AnyFunSuite {
     val dir = freshDir()
     val d1 = Dedup.crossCorpusNewFromDurableArtifact(spark, cand, base,
       dir).collect().map(_.toSeq).sortBy(_.toString)
-    val builds = Artifacts.durableBuilds.get()
-    // session tier parity
+    // session tier parity (a session-home build of its own)
     val sess = Dedup.crossCorpusNewFromArtifact(spark, cand, base,
       key = "durable-screen-parity").collect().map(_.toSeq)
       .sortBy(_.toString)
     assert(d1.toSeq == sess.toSeq)
+    val builds = Artifacts.durableBuilds.get()
     // fresh session: no rebuild, the by-name base is never evaluated.
     // newSession SHARES the catalog, so drop the build session's
     // registration first — otherwise the test inherits it and never
@@ -211,10 +211,11 @@ class DurableArtifactsSpec extends AnyFunSuite {
     val dir = freshDir()
     val d1 = TextAnalysis.sparseCosinePairsDurable(spark, docs, dir)
       .collect().map(_.toSeq)
-    val builds = Artifacts.durableBuilds.get()
+    // session tier parity (a session-home build of its own)
     val sess = TextAnalysis.sparseCosinePairsMaterialized(spark,
       "/root/testdata/sf0.001").collect().map(_.toSeq)
     assert(d1.toSeq == sess.toSeq)
+    val builds = Artifacts.durableBuilds.get()
     val s2 = spark.newSession()
     val d2 = TextAnalysis.sparseCosinePairsDurable(s2,
       sys.error("documents evaluated on the committed path"), dir)

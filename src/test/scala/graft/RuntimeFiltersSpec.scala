@@ -93,9 +93,10 @@ class RuntimeFiltersSpec extends AnyFunSuite {
     // and a second probe (even with a DIFFERENT base frame) reads the
     // at-rest state, proving the screen no longer depends on
     // re-deriving the base corpus
-    val a1 = Dedup.materializedScreenBase(spark, base, key)
-    val a2 = Dedup.materializedScreenBase(spark,
-      base.limit(0), key) // would build an EMPTY screen if re-derived
+    val home = Dedup.screenSessionHome(spark, key)
+    val a1 = Dedup.materializedScreenBaseDurable(spark, base, home)
+    val a2 = Dedup.materializedScreenBaseDurable(spark,
+      base.limit(0), home) // would build an EMPTY screen if re-derived
     assert(a1 == a2)
     val again = Dedup.crossCorpusNewFromArtifact(spark, cands,
       base.limit(0), key).orderBy(col("doc_id")).collect().toSeq

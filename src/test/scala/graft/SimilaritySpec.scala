@@ -149,7 +149,7 @@ class SimilaritySpec extends AnyFunSuite {
       case f: FileSourceScanExec => Seq(f)
       case other => other.children.flatMap(scansOf)
     }
-    val table = Similarity.materializedIvfIndex(spark, emb, key)
+    val (vectors, _) = Similarity.materializedIvfIndex(spark, emb, key)
     val scans = scansOf(mat.queryExecution.executedPlan)
       .filter(_.metadata("Location").contains("graft_ivf_"))
       .filterNot(_.metadata("Location").contains("cents"))
@@ -158,7 +158,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(scan.metadata("PartitionFilters").contains("cell"),
       scan.metadata("PartitionFilters"))
     assert(scan.relation.partitionSchema.fieldNames.contains("cell"))
-    val allCells = spark.table(table).select("cell").distinct().count()
+    val allCells = vectors.select("cell").distinct().count()
     assert(allCells > 9, s"quantizer collapsed to $allCells cells — " +
       "pruning not provable on this corpus")
     val partsRead = scan.metrics("numPartitions").value

@@ -1099,8 +1099,8 @@ class TextDedupSpec extends AnyFunSuite {
       scan.metadata("PartitionFilters"))
     // the 2-doc increment touches <= 2 docs x 8 bands = 16 of the
     // table's partition slices; the scan must read only those
-    val table = Dedup.materializedNearDupBase(spark, base, key)
-    val allParts = spark.table(table).select("pp").distinct().count()
+    val allParts = Dedup.materializedNearDupBase(spark, base, key)
+      .select("pp").distinct().count()
     assert(allParts > 16, s"test corpus too small to prove pruning ($allParts)")
     val partsRead = scan.metrics("numPartitions").value
     assert(partsRead > 0 && partsRead <= 16 && partsRead < allParts,
@@ -1169,7 +1169,8 @@ class TextDedupSpec extends AnyFunSuite {
     // the candidate self-join — THE gram-keyed shuffle at 100 TB —
     // reads co-located buckets: SortMergeJoin with no Exchange on
     // either side (the q162 bucketed-join pin, on the postings table)
-    val tbl = spark.table(TextAnalysis.materializedPostingsTable(spark, sf))
+    val tbl = spark.table(TextAnalysis.materializedPostingsDurable(spark,
+      Tables(spark, sf).documents, TextAnalysis.postingsSessionHome(spark, sf)))
     val selfJoin = tbl
       .select(col("g"), col("doc_id").as("d1"), col("tf").as("tf1"))
       .hint("merge")
